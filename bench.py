@@ -221,7 +221,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
     from etl_pipeline_old_spark.registry import QUERIES, _ensure_loaded
-    from etl_pipeline_old_spark.session import get_spark
+    from etl_pipeline_old_spark.session import env_cpus, get_spark
 
     _ensure_loaded()
     spark = get_spark("bench")
@@ -232,9 +232,7 @@ def main() -> None:
     # $SPARK_GRAFT_CPUS is authoritative when set; otherwise stamp the
     # session's ACTUAL parallelism, not os.cpu_count() — a local[8] session
     # on a 32-core host must not stamp 32 (r14 ADVICE).
-    cpus = int(
-        os.environ.get("SPARK_GRAFT_CPUS", 0)
-    ) or spark.sparkContext.defaultParallelism
+    cpus = env_cpus() or spark.sparkContext.defaultParallelism
 
     names = [n for n in HEADLINE if n in QUERIES]
     # warm the JVM/codegen path with a cheap NON-headline query so no

@@ -22,6 +22,7 @@ from pyspark.sql import Window
 
 from ..catalog import load_table
 from ..registry import register
+from ..sources.files import read_blobs
 
 _WDS_DOCS_PER_SHARD = 25
 _WIKI_STREAM_DOCS = 25
@@ -124,12 +125,7 @@ def multimodal_webdataset_compressed(
 ) -> DataFrame:
     path = _stage_suffixed_shards(spark, sf_dir, "wds_compressed",
                                   _build_compressed_wds)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar.*")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "tar.*").select("path", "content")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def op(batches):
@@ -270,9 +266,7 @@ def _wikidump_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a scan."""
     path = _stage_wikidump(spark, sf_dir)
     idx_files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-index.txt.bz2")
-        .load(path)
+        read_blobs(spark, path, glob="*-index.txt.bz2")
         .select("path", "content")
     )
 
@@ -298,9 +292,7 @@ def _wikidump_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="dump_path string, offset long, page_id long, title string",
     )
     sizes = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml.bz2")
-        .load(path)
+        read_blobs(spark, path, "xml.bz2")
         .select(F.col("path").alias("dump_path"), F.col("length").alias("file_len"))
     )
     streams = (
@@ -611,9 +603,7 @@ def multimodal_xz_blocks_ingest(
 ) -> DataFrame:
     path = _stage_xz_blocks(spark, sf_dir)
     files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xz")
-        .load(path)
+        read_blobs(spark, path, "xz")
         .select(
             F.col("path"),
             F.col("length").alias("file_len"),
@@ -802,9 +792,7 @@ def _stage_7z(spark: SparkSession, sf_dir: str) -> str:
 def multimodal_7z_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_7z(spark, sf_dir)
     files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.7z")
-        .load(path)
+        read_blobs(spark, path, "7z")
         .select(
             "content",
             F.regexp_extract(F.col("path"), r"corpus-(\d+)\.7z$", 1)
@@ -894,9 +882,7 @@ def multimodal_7z_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_7z_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_7z(spark, sf_dir)
     files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.7z")
-        .load(path)
+        read_blobs(spark, path, "7z")
         .select(
             F.col("path"),
             F.col("length").alias("file_len"),

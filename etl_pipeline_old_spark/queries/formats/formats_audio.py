@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
+from ...sources.files import read_blobs
 
 from .formats_media import (  # noqa: F401 — shared helpers
     _WAV_N,
@@ -49,12 +50,7 @@ from .formats_media import (  # noqa: F401 — shared helpers
 )
 def multimodal_g711_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_g711_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "wav").select("path", "content")
 
     def op(batches):
         import re
@@ -126,12 +122,7 @@ def _resample_out_sql(m: int) -> str:
 )
 def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_wav_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "wav").select("path", "content")
 
     def op(batches):
         import re
@@ -195,12 +186,7 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_video_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_y4m_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.y4m")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "y4m").select("path", "content")
 
     def op(batches):
         import re
@@ -274,9 +260,7 @@ def _adpcm_head_sql(j: int) -> str:
 def multimodal_adpcm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "adpcm_files", "wav", _render_adpcm)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(path)
+        read_blobs(spark, path, "wav")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.wav$", 1)
             .cast("long")
@@ -409,9 +393,7 @@ def _render_flac(doc_id: int, text: str) -> bytes:
 def multimodal_flac_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "flac_files", "flac", _render_flac)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.flac")
-        .load(path)
+        read_blobs(spark, path, "flac")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.flac$", 1)
             .cast("long")
@@ -558,12 +540,7 @@ def multimodal_webdataset_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "webdataset_audio", _build_webdataset_audio_shard,
         suffix="tar",
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "tar").select("content")
 
     def op(batches):
         import json as _json
@@ -665,9 +642,7 @@ def _render_mp4(doc_id: int, text: str) -> bytes:
 def multimodal_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "mp4_files", "mp4", _render_mp4)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(path)
+        read_blobs(spark, path, "mp4")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.mp4$", 1)
             .cast("long")
@@ -786,9 +761,7 @@ def _render_mp3(doc_id: int, text: str) -> bytes:
 def multimodal_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "mp3_files", "mp3", _render_mp3)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp3")
-        .load(path)
+        read_blobs(spark, path, "mp3")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.mp3$", 1)
             .cast("long")
@@ -863,9 +836,7 @@ def multimodal_mp3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "mp3_tag_files", "mp3", _render_mp3_tagged
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp3")
-        .load(path)
+        read_blobs(spark, path, "mp3")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.mp3$", 1)
             .cast("long")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
+from ...sources.files import read_blobs
 
 from .formats_audio import (  # noqa: F401 — shared helpers
     _render_webp,
@@ -66,9 +67,7 @@ def multimodal_webp_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "webp_files", "webp", _render_webp
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webp")
-        .load(path)
+        read_blobs(spark, path, "webp")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.webp$", 1)
             .cast("long")
@@ -197,9 +196,7 @@ def multimodal_webp_lossless_ingest(
         spark, sf_dir, "webp_lossless_files", "webp", _render_webp_lossless
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webp")
-        .load(path)
+        read_blobs(spark, path, "webp")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.webp$", 1)
             .cast("long")
@@ -304,9 +301,7 @@ def multimodal_webp_animation(
         spark, sf_dir, "webp_anim_files", "webp", _render_webp_animation
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webp")
-        .load(path)
+        read_blobs(spark, path, "webp")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.webp$", 1)
             .cast("long")
@@ -405,9 +400,7 @@ def _render_aac(doc_id: int, text: str) -> bytes:
 def multimodal_aac_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "aac_files", "aac", _render_aac)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.aac")
-        .load(path)
+        read_blobs(spark, path, "aac")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.aac$", 1)
             .cast("long")
@@ -498,9 +491,7 @@ def multimodal_mp4_aac_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "mp4_aac_files", "mp4", _render_mp4_aac
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(path)
+        read_blobs(spark, path, "mp4")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.mp4$", 1)
             .cast("long")
@@ -612,9 +603,7 @@ def multimodal_exif_gps_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "exif_files", "jpg", _render_exif_jpeg
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(path)
+        read_blobs(spark, path, "jpg")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.jpg$", 1)
             .cast("long")
@@ -744,9 +733,7 @@ def _render_ogg(doc_id: int, text: str) -> bytes:
 def multimodal_ogg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "ogg_files", "ogg", _render_ogg)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.ogg")
-        .load(path)
+        read_blobs(spark, path, "ogg")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.ogg$", 1)
             .cast("long")
@@ -828,9 +815,7 @@ def multimodal_ogg_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "ogg_tag_files", "ogg", _render_ogg_tagged
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.ogg")
-        .load(path)
+        read_blobs(spark, path, "ogg")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.ogg$", 1)
             .cast("long")
@@ -912,12 +897,7 @@ def multimodal_zip_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_shard_files(
         spark, sf_dir, "zip_shards", _build_zip_shard, suffix="zip"
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "zip").select("content")
 
     def op(batches):
         import hashlib as _hl
@@ -1008,12 +988,7 @@ def multimodal_zip64_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_shard_files(
         spark, sf_dir, "zip64_shards", _build_zip64_shard, suffix="zip"
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "zip").select("content")
 
     def op(batches):
         import hashlib as _hl

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
+from ...sources.files import read_blobs
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -81,9 +82,7 @@ def multimodal_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "avro_files", "avro", _render_avro
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(path)
+        read_blobs(spark, path, "avro")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.avro$", 1)
             .cast("long")
@@ -235,9 +234,7 @@ def multimodal_avro_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "avro_era_files", "avro", _render_avro_era
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(path)
+        read_blobs(spark, path, "avro")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.avro$", 1)
             .cast("long")
@@ -349,9 +346,7 @@ def multimodal_sqlite_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "sqlite_files", "db", _render_sqlite
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.db")
-        .load(path)
+        read_blobs(spark, path, "db")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.db$", 1)
             .cast("long")
@@ -471,9 +466,7 @@ def multimodal_sqlite_wal_ingest(
 
     def scan(ext: str, col: str):
         return (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", f"*.{ext}")
-            .load(path)
+            read_blobs(spark, path, ext)
             .select(
                 F.regexp_extract(F.col("path"), rf"(\d+)\.{ext}$", 1)
                 .cast("long")
@@ -616,8 +609,7 @@ def pipeline_document_corpus_mixed(
 ) -> DataFrame:
     path = _stage_mixed_docs(spark, sf_dir)
     bf = (
-        spark.read.format("binaryFile")
-        .load(path)
+        read_blobs(spark, path)
         .where(~F.col("path").endswith("_STAGED"))
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.\w+$", 1)
@@ -772,9 +764,7 @@ def pipeline_latex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "latex_files", "tex", _render_latex
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tex")
-        .load(path)
+        read_blobs(spark, path, "tex")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.tex$", 1)
             .cast("long")
@@ -861,9 +851,7 @@ def pipeline_markdown_extract(
         spark, sf_dir, "markdown_files", "md", _render_markdown
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.md")
-        .load(path)
+        read_blobs(spark, path, "md")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.md$", 1)
             .cast("long")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
+from ...sources.files import read_blobs
 
 
 def _tag(sf_dir: str) -> str:
@@ -85,12 +86,7 @@ def _stage_one_file_per_doc(spark: SparkSession, sf_dir: str) -> str:
 )
 def s14_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_one_file_per_doc(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "part-*")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
+    bf = read_blobs(spark, path, glob="part-*", recursive=True)
     return bf.select(
         F.regexp_extract("path", r"doc_id=(\d+)", 1).cast("long").alias("doc_id"),
         F.col("length").alias("n_bytes"),
@@ -208,12 +204,7 @@ def _stage_ppm_files(spark: SparkSession, sf_dir: str) -> str:
 )
 def multimodal_ppm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_ppm_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.ppm")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "ppm").select("path", "content")
 
     def op(batches):
         import re
@@ -288,12 +279,7 @@ def _png_ingest_oracle() -> str:
 )
 def multimodal_png_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_png_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "png").select("path", "content")
     return _decode_png_frame(bf)
 _PNG_DECODE_SCHEMA = "doc_id long, width int, height int, color_type int, sum_gray long"
 def _decode_png_frame(bf: DataFrame) -> DataFrame:
@@ -379,12 +365,7 @@ def _stage_wav_files(spark: SparkSession, sf_dir: str) -> str:
 )
 def multimodal_wav_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_wav_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "wav").select("path", "content")
 
     def op(batches):
         import re
@@ -445,12 +426,7 @@ _FRAME = 16  # samples per analysis frame (64-sample clips -> 4 frames)
 )
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_wav_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "wav").select("path", "content")
 
     def op(batches):
         import re
@@ -533,12 +509,7 @@ def _stage_y4m_files(spark: SparkSession, sf_dir: str) -> str:
 )
 def multimodal_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_y4m_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.y4m")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "y4m").select("path", "content")
 
     def op(batches):
         import re
@@ -602,12 +573,7 @@ def _stage_corrupt_png_files(spark: SparkSession, sf_dir: str) -> str:
 )
 def multimodal_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_corrupt_png_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "png").select("path", "content")
 
     def op(batches):
         import re
@@ -741,9 +707,7 @@ def _render_jpeg(doc_id: int, text: str) -> bytes:
 def multimodal_jpeg_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "jpeg_files", "jpg", _render_jpeg)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(path)
+        read_blobs(spark, path, "jpg")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.jpg$", 1)
             .cast("long")
@@ -855,9 +819,7 @@ def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "jpeg_prog_files", "jpg", _render_jpeg_prog
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(path)
+        read_blobs(spark, path, "jpg")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.jpg$", 1)
             .cast("long")
@@ -969,12 +931,7 @@ def multimodal_png_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(
         spark, sf_dir, "png_adv_files", "png", _render_png_adv
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "png").select("path", "content")
 
     def op(batches):
         import re
@@ -1052,12 +1009,7 @@ def _render_gif_bmp(doc_id: int, text: str) -> bytes:
 )
 def multimodal_gif_bmp_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "gifbmp_files", "img", _render_gif_bmp)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.img")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "img").select("path", "content")
 
     def op(batches):
         import re
@@ -1166,9 +1118,7 @@ def multimodal_gif_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "gif_anim_files", "gif", _render_gif_anim
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .load(path)
+        read_blobs(spark, path, "gif")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.gif$", 1)
             .cast("long")
@@ -1245,12 +1195,7 @@ def _render_tiff(doc_id: int, text: str) -> bytes:
 )
 def multimodal_tiff_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "tiff_files", "tif", _render_tiff)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tif")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "tif").select("path", "content")
 
     def op(batches):
         import re

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
+from ...sources.files import read_blobs
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -66,9 +67,7 @@ def pipeline_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "docx_files", "docx", _render_docx
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.docx")
-        .load(path)
+        read_blobs(spark, path, "docx")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.docx$", 1)
             .cast("long")
@@ -156,9 +155,7 @@ def pipeline_docx_aux_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "docx_aux_files", "docx", _render_docx_full
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.docx")
-        .load(path)
+        read_blobs(spark, path, "docx")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.docx$", 1)
             .cast("long")
@@ -243,9 +240,7 @@ def multimodal_xlsx_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "xlsx_files", "xlsx", _render_xlsx
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xlsx")
-        .load(path)
+        read_blobs(spark, path, "xlsx")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.xlsx$", 1)
             .cast("long")
@@ -319,9 +314,7 @@ def pipeline_pptx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "pptx_files", "pptx", _render_pptx
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pptx")
-        .load(path)
+        read_blobs(spark, path, "pptx")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pptx$", 1)
             .cast("long")
@@ -390,9 +383,7 @@ def _render_rtf(doc_id: int, text: str) -> bytes:
 def pipeline_rtf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "rtf_files", "rtf", _render_rtf)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.rtf")
-        .load(path)
+        read_blobs(spark, path, "rtf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.rtf$", 1)
             .cast("long")
@@ -466,9 +457,7 @@ def multimodal_zip_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "zipenc_files", "zip", _render_zip_encrypted
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .load(path)
+        read_blobs(spark, path, "zip")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.zip$", 1)
             .cast("long")
@@ -543,12 +532,7 @@ def docx_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(
         spark, sf_dir, "docx_corrupt", "docx", _render_corrupt_docx
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.docx")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "docx").select("path", "content")
 
     def op(batches):
         import re as _re
@@ -614,9 +598,7 @@ def pipeline_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "epub_files", "epub", _render_epub
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.epub")
-        .load(path)
+        read_blobs(spark, path, "epub")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.epub$", 1)
             .cast("long")
@@ -702,9 +684,7 @@ def pipeline_mail_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "mbox_files", "mbox", _render_mbox
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mbox")
-        .load(path)
+        read_blobs(spark, path, "mbox")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.mbox$", 1)
             .cast("long")
@@ -857,9 +837,7 @@ def pipeline_code_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "code_files", "src", _render_code
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.src")
-        .load(path)
+        read_blobs(spark, path, "src")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.src$", 1)
             .cast("long")
@@ -980,9 +958,7 @@ def code_near_dedup_winnowing(
         spark, sf_dir, "code_files", "src", _render_code
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.src")
-        .load(path)
+        read_blobs(spark, path, "src")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.src$", 1)
             .cast("long")
@@ -1247,9 +1223,7 @@ def pipeline_notebook_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "ipynb_files", "ipynb", _render_ipynb
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.ipynb")
-        .load(path)
+        read_blobs(spark, path, "ipynb")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.ipynb$", 1)
             .cast("long")
@@ -1364,9 +1338,7 @@ def pipeline_odf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_media_files_multi(spark, sf_dir, "odf_files", _render_odf)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.od[ts]")
-        .load(path)
+        read_blobs(spark, path, "od[ts]")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.od[ts]$", 1)
             .cast("long")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
+from ...sources.files import read_blobs
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -72,9 +73,7 @@ from .formats_media import (  # noqa: F401 — shared helpers
 def pipeline_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -164,9 +163,7 @@ def pipeline_pdf_encrypted_extract(
         spark, sf_dir, "pdf_enc_files", "pdf", _render_pdf_encrypted
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -256,9 +253,7 @@ def pipeline_pdf_aes_extract(
         spark, sf_dir, "pdf_aes_files", "pdf", _render_pdf_aes
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -328,9 +323,7 @@ def pipeline_pdf_xrefstream_incremental(
         _render_pdf_xrefstream,
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -439,9 +432,7 @@ def pipeline_pdf_corpus_mixed(
         spark, sf_dir, "pdf_mixed_files", "pdf", _render_pdf_any_shape
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -633,12 +624,7 @@ def pdf_xrefstream_quarantine(
         spark, sf_dir, "pdf_xrefstream_corrupt", "pdf",
         _render_corrupt_pdf_xrefstream,
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "pdf").select("path", "content")
 
     def op(batches):
         import re as _re
@@ -724,9 +710,7 @@ def pipeline_pdf_encoding_extract(
         spark, sf_dir, "pdf_encoded_files", "pdf", _render_pdf_encoded
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -822,9 +806,7 @@ def pipeline_pdf_images_extract(
         spark, sf_dir, "pdf_image_files", "pdf", _render_pdf_with_images
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -934,9 +916,7 @@ def pipeline_pdf_ccitt_extract(
         spark, sf_dir, "pdf_ccitt_files", "pdf", _render_pdf_ccitt
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -1034,9 +1014,7 @@ def pipeline_pdf_figure_pairs(
         spark, sf_dir, "pdf_figure_files", "pdf", _render_pdf_figures
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -1123,9 +1101,7 @@ def pipeline_pdf_cid_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "pdf_cid_files", "pdf", _render_pdf_cid
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -1230,9 +1206,7 @@ def pipeline_pdf_xrefstream_extract(
         spark, sf_dir, "pdf_xrefstream_files", "pdf", _render_pdf_xrefstream
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -1331,9 +1305,7 @@ def pipeline_document_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_media_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")
@@ -1462,9 +1434,7 @@ def pipeline_pdf_legacy_filters(
         _render_pdf_legacy_filters,
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+        read_blobs(spark, path, "pdf")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.pdf$", 1)
             .cast("long")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
+from ...sources.files import read_blobs
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -87,9 +88,7 @@ from .formats_pdf import (  # noqa: F401 — shared helpers
 def multimodal_webm_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "webm_files", "webm", _render_webm)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webm")
-        .load(path)
+        read_blobs(spark, path, "webm")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.webm$", 1)
             .cast("long")
@@ -193,9 +192,7 @@ def _render_srt(doc_id: int, text: str) -> bytes:
 def multimodal_srt_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "srt_files", "srt", _render_srt)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.srt")
-        .load(path)
+        read_blobs(spark, path, "srt")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.srt$", 1)
             .cast("long")
@@ -260,9 +257,7 @@ def multimodal_srt_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_vtt_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "vtt_files", "vtt", _render_vtt)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.vtt")
-        .load(path)
+        read_blobs(spark, path, "vtt")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.vtt$", 1)
             .cast("long")
@@ -326,12 +321,7 @@ def pdf_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(
         spark, sf_dir, "pdf_corrupt", "pdf", _render_corrupt_pdf
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "pdf").select("path", "content")
 
     def op(batches):
         import re as _re
@@ -469,12 +459,7 @@ def pipeline_document_corpus_incremental(
     from ...operators.text import lang_id
 
     path = _stage_media_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "pdf").select("path", "content")
     doc_no = F.regexp_extract("path", r"(\d+)\.pdf$", 1).cast("long")
     base_bf = bf.filter(doc_no % 10 != 0)
     delta_bf = bf.filter(doc_no % 10 == 0)
@@ -594,16 +579,12 @@ def multimodal_caption_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     vids = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webm")
-        .load(webm_path)
+        read_blobs(spark, webm_path, "webm")
         .select("path", "content")
         .mapInPandas(vid_op, schema="doc_id long, duration_ms long")
     )
     caps = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.vtt")
-        .load(vtt_path)
+        read_blobs(spark, vtt_path, "vtt")
         .select("path", "content")
         .mapInPandas(cap_op, schema="doc_id long, covered_ms long")
     )
@@ -702,9 +683,7 @@ def multimodal_caption_coverage_mixed(
             yield pd.DataFrame(out)
 
     vids = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webm")
-        .load(webm_path)
+        read_blobs(spark, webm_path, "webm")
         .select("path", "content")
         .mapInPandas(vid_op, schema="doc_id long, duration_ms long")
     )
@@ -712,16 +691,12 @@ def multimodal_caption_coverage_mixed(
         "long"
     )
     vtt_side = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.vtt")
-        .load(vtt_path)
+        read_blobs(spark, vtt_path, "vtt")
         .filter(doc_no % 2 == 0)
         .select("path", "content")
     )
     srt_side = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.srt")
-        .load(srt_path)
+        read_blobs(spark, srt_path, "srt")
         .filter(doc_no % 2 == 1)
         .select("path", "content")
     )
@@ -879,12 +854,7 @@ def pipeline_video_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "videotext_shards", _build_videotext_shard,
         suffix="tar",
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "tar").select("content")
     clips = _videotext_clip_frame(bf)
     return clips.groupBy("lang", "video_codec").agg(
         F.countDistinct("doc_id").alias("n_videos"),
@@ -934,12 +904,7 @@ def pipeline_video_text_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "videotext_shards", _build_videotext_shard,
         suffix="tar",
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "tar").select("content")
 
     def gate_op(batches):
         import json as _json
@@ -1023,12 +988,7 @@ def pipeline_video_text_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_shard, "shard int, n int"
     ).collect()  # completion action on (shard, n) frames only
 
-    back = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(out_dir)
-        .select("content")
-    )
+    back = read_blobs(spark, out_dir, "tar").select("content")
 
     def verify_op(batches):
         import json as _json
@@ -1154,12 +1114,7 @@ def video_text_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "videotext_corrupt", _build_videotext_corrupt_shard,
         suffix="tar",
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "tar").select("content")
 
     def op(batches):
         import pandas as pd
@@ -1341,12 +1296,7 @@ def pipeline_video_text_pairs_incremental(
     ] + base[:1]  # at-least-once: one base shard re-delivered
 
     def partial(paths: list) -> DataFrame:
-        bf = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.tar")
-            .load(paths)
-            .select("content")
-        )
+        bf = read_blobs(spark, paths, "tar").select("content")
         clips = _videotext_clip_frame(bf)
         return clips.groupBy("doc_id", "lang", "video_codec").agg(
             F.count("*").alias("n_clips"),
@@ -1521,12 +1471,7 @@ def _vnd_frame_arm_sql(f: int) -> str:
 )
 def video_temporal_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_y4m_neardup(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.y4m")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "y4m").select("path", "content")
 
     def op(batches):
         import hashlib

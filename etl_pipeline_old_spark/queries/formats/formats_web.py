@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
+from ...sources.files import read_blobs
 
 from .formats_media import (  # noqa: F401 — shared helpers
     _tag,
@@ -221,9 +222,7 @@ def web_feed_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "feed_files", "xml", _render_feed
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml")
-        .load(path)
+        read_blobs(spark, path, "xml")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.xml$", 1)
             .cast("long")
@@ -362,9 +361,7 @@ def corpus_nfkc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "nfd_files", "txt", _render_nfkc_doc
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.txt")
-        .load(path)
+        read_blobs(spark, path, "txt")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.txt$", 1)
             .cast("long")
@@ -451,9 +448,7 @@ def web_canonical_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "canonical_files", "html", _render_canonical_page
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.html")
-        .load(path)
+        read_blobs(spark, path, "html")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.html$", 1)
             .cast("long")
@@ -701,9 +696,7 @@ def web_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "robots_files", "txt", _render_robots_txt
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.txt")
-        .load(path)
+        read_blobs(spark, path, "txt")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.txt$", 1)
             .cast("long")
@@ -827,9 +820,7 @@ def pipeline_rep_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "robots_files", "txt", _render_robots_txt
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.txt")
-        .load(path)
+        read_blobs(spark, path, "txt")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.txt$", 1)
             .cast("long")
@@ -1030,9 +1021,7 @@ def web_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "sitemap_files", "xml", _render_sitemap
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml")
-        .load(path)
+        read_blobs(spark, path, "xml")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.xml$", 1)
             .cast("long")
@@ -1148,9 +1137,7 @@ def multimodal_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "bson_files", "bson", _render_bson
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bson")
-        .load(path)
+        read_blobs(spark, path, "bson")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.bson$", 1)
             .cast("long")
@@ -1312,12 +1299,7 @@ def bson_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(
         spark, sf_dir, "bson_corrupt", "bson", _render_corrupt_bson
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bson")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "bson").select("path", "content")
 
     def op(batches):
         import re as _re
@@ -1415,9 +1397,7 @@ def web_sitemap_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "sitemap_tree_files", _render_sitemap_tree
     )
     idx = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.idx.xml")
-        .load(path)
+        read_blobs(spark, path, "idx.xml")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.idx\.xml$", 1)
             .cast("long")
@@ -1437,9 +1417,7 @@ def web_sitemap_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("basename"),
     )
     children = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml.gz")
-        .load(path)
+        read_blobs(spark, path, "xml.gz")
         .select(
             F.regexp_extract(F.col("path"), r"/(\d+\.c\d+\.xml\.gz)$", 1)
             .alias("basename"),
@@ -1521,9 +1499,7 @@ def pipeline_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "sitemap_files", "xml", _render_sitemap
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml")
-        .load(path)
+        read_blobs(spark, path, "xml")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.xml$", 1)
             .cast("long")

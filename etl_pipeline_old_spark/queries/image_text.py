@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..sources.files import read_blobs
 from .web_corpus import _stage_shard_files, _warc_uri
 
 # The shared image pool: pages reference 1 + doc_id % 2 images, image k
@@ -307,12 +308,7 @@ def _pairs_oracle() -> str:
 )
 def pipeline_image_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_pair_warc_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
     return _pair_stats(_pair_pages_frame(bf), _pair_imgs_frame(bf))
 
 
@@ -488,12 +484,7 @@ def _near_oracle() -> str:
 )
 def image_text_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_pair_near_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
     imgs = _pair_imgs_frame(bf)
     caps = _pair_pages_frame(bf).groupBy("img_uri").agg(
         F.count("*").alias("n_caps")
@@ -615,12 +606,7 @@ def _quarantine_oracle() -> str:
 )
 def image_text_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_pair_torn_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
 
     def op(batches):
         import pandas as pd
@@ -700,12 +686,7 @@ def _pair_partials(spark: SparkSession, paths: list) -> tuple[DataFrame, DataFra
     ~3B fetches, so even 'one dump's pool' is only broadcastable if the
     ingest unit happens to be a small slice; the shuffle shape is safe
     regardless of dump sizing."""
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(paths)
-        .select("content")
-    )
+    bf = read_blobs(spark, paths, "warc.gz").select("content")
     bronze = (
         _pair_pages_frame(bf)
         .groupBy("lang", F.col("img_uri").alias("uri"))
@@ -821,12 +802,7 @@ def stream_image_text_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_confs(spark)
     crawl = _stage_pair_warc_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(crawl)
-        .select("content")
-    )
+    bf = read_blobs(spark, crawl, "warc.gz").select("content")
     base = os.path.join(cache_root(), f"pair_ssj_{_tag(sf_dir)}")
     pages_feed, imgs_feed = base + "_pages", base + "_imgs"
     for p in (pages_feed, imgs_feed):
@@ -982,12 +958,7 @@ def pipeline_image_text_pairs_bucketed(
 
     tag = _tag(sf_dir).replace(".", "_")  # dots would split the table name
     path = _stage_pair_warc_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
     # big side: pages reduce to (lang, uri) granularity before ANY join —
     # partial aggregation runs map-side, so the page corpus crosses the
     # wire once, already collapsed
@@ -1108,12 +1079,7 @@ def _stage_webdataset_shards(spark: SparkSession, sf_dir: str) -> str:
 )
 def multimodal_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_webdataset_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "tar").select("content")
 
     def op(batches):
         import json as _json
@@ -1240,12 +1206,7 @@ def multimodal_webdataset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources_formats import _tag
 
     crawl = _stage_pair_warc_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(crawl)
-        .select("content")
-    )
+    bf = read_blobs(spark, crawl, "warc.gz").select("content")
     pages = _pair_pages_frame(bf)
     imgs = _pair_imgs_bytes_frame(bf)
     # shuffle-hash join, never a broadcast: imgs here carries the RAW
@@ -1307,12 +1268,7 @@ def multimodal_webdataset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_shard, "shard int, n int"
     ).collect()
 
-    back = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(out_dir)
-        .select("content")
-    )
+    back = read_blobs(spark, out_dir, "tar").select("content")
 
     def verify(batches):
         import json as _json

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..sources.files import read_blobs
 from .sources_formats import _stage_media_files
 
 _DOC_PIECE_CHARS = 17
@@ -83,9 +84,7 @@ def pipeline_doc_legacy_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_media_files(spark, sf_dir, "doc_files", "doc", _render_doc)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.doc")
-        .load(path)
+        read_blobs(spark, path, "doc")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.doc$", 1)
             .cast("long")
@@ -168,9 +167,7 @@ def _render_xls(doc_id: int, text: str) -> bytes:
 def pipeline_xls_legacy_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_media_files(spark, sf_dir, "xls_files", "xls", _render_xls)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xls")
-        .load(path)
+        read_blobs(spark, path, "xls")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.xls$", 1)
             .cast("long")
@@ -238,9 +235,7 @@ def doc_legacy_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "doc_torn", "doc", _render_doc_maybe_torn
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.doc")
-        .load(path)
+        read_blobs(spark, path, "doc")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.doc$", 1)
             .cast("long")
@@ -318,9 +313,7 @@ def pipeline_ppt_legacy_extract(
         spark, sf_dir, "ppt_files", "ppt", _render_ppt_legacy
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.ppt")
-        .load(path)
+        read_blobs(spark, path, "ppt")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.ppt$", 1)
             .cast("long")
@@ -413,9 +406,7 @@ def pipeline_msg_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_media_files(spark, sf_dir, "msg_files", "msg", _render_msg)
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.msg")
-        .load(path)
+        read_blobs(spark, path, "msg")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.msg$", 1)
             .cast("long")
@@ -644,9 +635,7 @@ def pipeline_xls_sst_continue(
         spark, sf_dir, "xls_sst_cont", "xls", _render_xls_sst_continue
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xls")
-        .load(path)
+        read_blobs(spark, path, "xls")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.xls$", 1)
             .cast("long")

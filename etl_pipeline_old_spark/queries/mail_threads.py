@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..sources.files import read_blobs
 
 _THREAD = 5  # messages per staged thread
 
@@ -109,9 +110,7 @@ def mail_thread_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "mbox_threads", "mbox", _render_thread_mbox
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mbox")
-        .load(path)
+        read_blobs(spark, path, "mbox")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.mbox$", 1)
             .cast("long")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..sources.files import read_blobs
 from .sources_formats import _stage_media_files
 
 _BRANDS = ("avif", "heic", "mif1", "avis")
@@ -64,9 +65,7 @@ def multimodal_avif_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "bmff_image_files", "avif", _render_bmff_image
     )
     bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avif")
-        .load(path)
+        read_blobs(spark, path, "avif")
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.avif$", 1)
             .cast("long")

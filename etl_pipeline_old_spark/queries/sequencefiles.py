@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..sources.files import read_blobs
 from ..workdir import cache_root
 
 _SEQ_CODECS = (
@@ -81,10 +82,7 @@ def multimodal_sequencefile_ingest(
 ) -> DataFrame:
     path = _stage_sequencefiles(spark, sf_dir)
     parts = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "part-*")
-        .option("recursiveFileLookup", "true")
-        .load(path)
+        read_blobs(spark, path, glob="part-*", recursive=True)
         .select("path", "content")
     )
     docs = load_table(spark, sf_dir, "documents").select(

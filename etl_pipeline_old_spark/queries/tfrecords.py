@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..sources.files import read_blobs
 from ..workdir import cache_root
 
 _DOCS_PER_SHARD = 25
@@ -121,12 +122,7 @@ def _stage_tfrecord_shards(spark: SparkSession, sf_dir: str) -> str:
 )
 def multimodal_tfrecord_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_tfrecord_shards(spark, sf_dir)
-    shards = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tfrecord")
-        .load(path)
-        .select("path", "content")
-    )
+    shards = read_blobs(spark, path, "tfrecord").select("path", "content")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("want_text")
     )

@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import register
+from ..sources.files import read_blobs
 from ..workdir import cache_root
 from .sources_formats import _tag
 
@@ -442,12 +443,7 @@ def _stage_revisit_warc(spark: SparkSession, sf_dir: str) -> str:
 )
 def warc_revisit_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_revisit_warc(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
 
     def walk(batches):
         import pandas as pd

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..sources.files import read_blobs
 
 # ---------------------------------------------------------------------------
 # HTML -> text extraction
@@ -419,12 +420,7 @@ def _stage_warc_shards(spark: SparkSession, sf_dir: str) -> str:
 )
 def warc_web_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_warc_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
     return _parse_warc_frame(bf)
 
 
@@ -611,12 +607,7 @@ def _stage_torn_warc_shards(spark: SparkSession, sf_dir: str) -> str:
 )
 def warc_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_torn_warc_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("path", "content")
 
     def op(batches):
         import re
@@ -751,12 +742,7 @@ def _build_ce_shard(pdf, sid: int) -> bytes:
 )
 def web_content_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_shard_files(spark, sf_dir, "warc_ce", _build_ce_shard)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
 
     def op(batches):
         import pandas as pd
@@ -902,12 +888,7 @@ def _lang_stats_parts(frame):
 )
 def pipeline_web_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_warc_shards(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("path", "content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("path", "content")
     # shard-granular split: base = prior crawl, delta = the new drop
     shard_no = F.regexp_extract("path", r"(\d+)\.warc\.gz$", 1).cast("int")
     n_shards = bf.count()
@@ -1018,12 +999,7 @@ def web_charset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_shard_files(
         spark, sf_dir, "charset_shards", _build_charset_shard
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
 
     def op(batches):
         import hashlib as _hl
@@ -1140,12 +1116,7 @@ def web_charset_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_shard_files(
         spark, sf_dir, "charset_torn_shards", _build_mislabeled_charset_shard
     )
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
 
     def op(batches):
         import hashlib as _hl
@@ -1436,12 +1407,7 @@ def _build_te_shard(pdf, sid: int) -> bytes:
 )
 def web_transfer_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_shard_files(spark, sf_dir, "warc_te", _build_te_shard)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("content")
-    )
+    bf = read_blobs(spark, path, "warc.gz").select("content")
 
     def op(batches):
         import pandas as pd

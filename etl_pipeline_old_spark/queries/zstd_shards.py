@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..sources.files import read_blobs
 from ..session import scan_partitions
 from ..workdir import cache_root
 
@@ -205,12 +206,7 @@ def multimodal_zstd_shards_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     path = _stage_tar_zst(spark, sf_dir)
-    shards = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar.zst")
-        .load(path)
-        .select("path", "content")
-    )
+    shards = read_blobs(spark, path, "tar.zst").select("path", "content")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("want_text")
     )
@@ -349,12 +345,7 @@ def multimodal_lz4_shards_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     path = _stage_tar_lz4(spark, sf_dir)
-    shards = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar.lz4")
-        .load(path)
-        .select("path", "content")
-    )
+    shards = read_blobs(spark, path, "tar.lz4").select("path", "content")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("want_text")
     )
@@ -689,12 +680,7 @@ def _stage_warc_zst(spark: SparkSession, sf_dir: str) -> str:
 )
 def warc_zst_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_warc_zst(spark, sf_dir)
-    shards = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.zst")
-        .load(path)
-        .select("path", "content")
-    )
+    shards = read_blobs(spark, path, "warc.zst").select("path", "content")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.col("text").alias("want_text"),

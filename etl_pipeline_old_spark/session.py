@@ -43,8 +43,24 @@ _RUNTIME_CONFS = {
 }
 
 
+def env_cpus(env=os.environ) -> int | None:
+    """``$SPARK_GRAFT_CPUS`` as a core count, or None when it is unset.
+
+    A set value must be a positive integer: an empty, zero, negative or
+    non-numeric value raises instead of building ``local[0]`` or silently
+    falling back to another count.
+    """
+    raw = env.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return None
+    text = raw.strip()
+    if not (text.isascii() and text.isdigit()) or int(text) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(text)
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    return env_cpus() or os.cpu_count() or 8
 
 
 def get_spark(app_name: str = "etl_pipeline_old_spark", cpus: int | None = None) -> SparkSession:
@@ -158,3 +174,20 @@ def scan_partitions(spark: SparkSession, n_units: int | None = None) -> int:
     if n_units is None:
         return cap
     return max(1, min(n_units, cap))
+
+
+def blob_scan_partitions(
+    total_bytes: int, planned: int, parallelism: int, max_partition_bytes: int
+) -> int:
+    """Task count for a scan of whole-file blobs, sized by their bytes.
+
+    Spark packs file splits as if every file cost
+    ``spark.sql.files.openCostInBytes`` (4 MiB), so a corpus of small
+    blobs plans one split per 32 files whatever their size, and each
+    split is a Python-worker task with a fixed set-up cost. This rule is
+    Spark's own sizing without that per-file charge: one task per core
+    for a small corpus, ``bytes / maxPartitionBytes`` tasks for a large
+    one, and never more tasks than the splits Spark planned.
+    """
+    by_bytes = -(-total_bytes // max_partition_bytes)
+    return min(planned, max(parallelism, by_bytes))

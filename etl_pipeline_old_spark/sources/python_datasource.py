@@ -64,6 +64,12 @@ def _read_page(path: str, schema):
     built against the DECLARED schema so inference can never drift from
     the tuple path's types. Falls back to tuple yields if the Arrow
     conversion is unavailable for a schema.
+
+    Spark reads a partition's stream as RecordBatches or as tuples
+    according to its FIRST element, so the first flush latches the mode:
+    once it falls back to tuples every later flush yields tuples too, and
+    a later batch that fails to convert after RecordBatches were emitted
+    raises its conversion error rather than mixing in tuples.
     """
     fields = [f.name for f in schema.fields]
     try:
@@ -73,14 +79,21 @@ def _read_page(path: str, schema):
         arrow_schema = to_arrow_schema(schema)
     except Exception:
         pa = None
+    emitted = False
 
     def flush(cols):
+        nonlocal pa, emitted
         if pa is not None:
             try:
-                yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
-                return
+                batch = pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
             except Exception:
-                pass
+                if emitted:
+                    raise
+                pa = None
+            else:
+                emitted = True
+                yield batch
+                return
         for i in range(len(cols[fields[0]]) if fields else 0):
             yield tuple(cols[k][i] for k in fields)
 

@@ -45,14 +45,34 @@ def _pick_base() -> str:
     checkpoints that must survive the process go through the explicit
     ``checkpoint_dir`` parameters / ``SPARK_GRAFT_SCRATCH_BASE`` env
     override instead.
+
+    tmpfs is memory, and container runtimes often mount a small one (64
+    MiB by default under Docker): below ``_SHM_FLOOR_BYTES`` free the
+    scratch goes to /tmp, so staged fixtures cannot fill RAM or fail on a
+    full tmpfs mid-run.
     """
     env = os.environ.get("SPARK_GRAFT_SCRATCH_BASE")
     if env:
         return env
     shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
+    if (
+        os.path.isdir(shm)
+        and os.access(shm, os.W_OK)
+        and _free_bytes(shm) >= _SHM_FLOOR_BYTES
+    ):
         return os.path.join(shm, "etl_pipeline_old_spark_cache")
     return "/tmp/etl_pipeline_old_spark_cache"
+
+
+_SHM_FLOOR_BYTES = 1 << 30
+
+
+def _free_bytes(path: str) -> int:
+    try:
+        st = os.statvfs(path)
+    except OSError:
+        return 0
+    return st.f_bavail * st.f_frsize
 
 
 _BASE = _pick_base()

@@ -174,3 +174,60 @@ def test_read_page_batches_are_bounded(tmp_path):
     assert first["doc_id"][:3] == [0, 1, 2] and first["text"][0] == "t0"
     last = batches[-1].to_pydict()
     assert last["doc_id"][-1] == n_rows - 1
+
+
+def _page_with_failing_conversion(tmp_path, monkeypatch, fail_call):
+    """A three-batch page whose ``fail_call``-th Arrow conversion raises;
+    returns the page, its schema and its row count."""
+    import json
+
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from etl_pipeline_old_spark.sources.python_datasource import _BATCH_ROWS
+
+    real = pa.RecordBatch
+    calls = []
+
+    class _FlakyRecordBatch:
+        @staticmethod
+        def from_pydict(cols, schema=None):
+            calls.append(1)
+            if len(calls) == fail_call:
+                raise pa.ArrowInvalid("unconvertible batch")
+            return real.from_pydict(cols, schema=schema)
+
+    monkeypatch.setattr(pa, "RecordBatch", _FlakyRecordBatch)
+    n_rows = 2 * _BATCH_ROWS + 7
+    page = tmp_path / "page-0001.json"
+    with page.open("w", encoding="utf-8") as f:
+        for i in range(n_rows):
+            f.write(json.dumps({"doc_id": i}) + "\n")
+    return str(page), StructType([StructField("doc_id", LongType())]), n_rows
+
+
+def test_read_page_tuple_fallback_latches(tmp_path, monkeypatch):
+    """Spark types a partition's stream by its first element: once the
+    first flush falls back to tuples, the later (convertible) batches
+    must be tuples too, never RecordBatches mixed in."""
+    from etl_pipeline_old_spark.sources.python_datasource import _read_page
+
+    page, schema, n_rows = _page_with_failing_conversion(tmp_path, monkeypatch, 1)
+    out = list(_read_page(page, schema))
+    assert all(type(r) is tuple for r in out)
+    assert [r[0] for r in out] == list(range(n_rows))
+
+
+def test_read_page_late_conversion_failure_raises(tmp_path, monkeypatch):
+    """After RecordBatches were emitted, an unconvertible batch raises its
+    own error instead of switching the stream to tuples."""
+    import pyarrow as pa
+    import pytest
+
+    from etl_pipeline_old_spark.sources.python_datasource import _read_page
+
+    page, schema, _ = _page_with_failing_conversion(tmp_path, monkeypatch, 2)
+    out = []
+    with pytest.raises(pa.ArrowInvalid, match="unconvertible"):
+        out.extend(_read_page(page, schema))
+    assert len(out) == 1 and type(out[0]).__name__ == "RecordBatch"

@@ -2,10 +2,12 @@
 hostile_sweep REPEAT_QUERIES all reference registry queries by name and
 FILTER-drop (or merely warn on) unknown names — so a renamed query would
 silently vanish from the bench suite, the plans doc, or the idempotency
-sweep. Pin every list to the live registry."""
+sweep. Pin every list to the live registry. A source scan also pins the
+batch binaryFile read to its one implementation."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import os
 import sys
@@ -48,3 +50,45 @@ def test_repeat_sweep_names_resolve():
     missing = [n for n in hs.REPEAT_QUERIES if n not in QUERIES]
     assert not missing, f"REPEAT_QUERIES names not in registry: {missing}"
     assert len(set(hs.REPEAT_QUERIES)) == len(hs.REPEAT_QUERIES)
+
+
+def _batch_binaryfile_reads(tree: ast.AST):
+    """Line numbers of ``<x>.read[...].format("binaryFile")`` (or
+    ``.load(..., format="binaryFile")``) calls; ``readStream`` is not one."""
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("format", "load")
+        ):
+            continue
+        args = [*node.args, *(k.value for k in node.keywords if k.arg == "format")]
+        if not any(isinstance(a, ast.Constant) and a.value == "binaryFile" for a in args):
+            continue
+        recv = node.func.value
+        while isinstance(recv, (ast.Attribute, ast.Call)):
+            if isinstance(recv, ast.Call):
+                recv = recv.func
+            elif recv.attr in ("read", "readStream"):
+                if recv.attr == "read":
+                    yield node.lineno
+                break
+            else:
+                recv = recv.value
+
+
+def test_batch_binaryfile_reads_go_through_read_blobs():
+    pkg = os.path.join(_ROOT, "etl_pipeline_old_spark")
+    found = {}
+    for dirpath, _dirs, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as fh:
+                    lines = list(_batch_binaryfile_reads(ast.parse(fh.read())))
+                if lines:
+                    found[os.path.relpath(path, pkg)] = lines
+    helper = os.path.join("sources", "files.py")
+    assert helper in found, "the scan no longer finds read_blobs' own read"
+    del found[helper]
+    assert not found, f"batch binaryFile reads outside read_blobs: {found}"

@@ -84,3 +84,42 @@ def test_legacy_layout_dirs_are_reaped_only_when_idle(tmp_path, monkeypatch):
     assert not legacy.exists()
     assert not (tmp_path / "derby_sf0.01").exists()
     assert nested.exists()  # fresh nested write kept the whole tree alive
+
+
+def _statvfs_free(monkeypatch, free_bytes):
+    import types
+
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_BASE", raising=False)
+    monkeypatch.setattr(os.path, "isdir", lambda p: True)
+    monkeypatch.setattr(os, "access", lambda p, mode: True)
+    monkeypatch.setattr(
+        os,
+        "statvfs",
+        lambda p: types.SimpleNamespace(f_bavail=free_bytes // 4096, f_frsize=4096),
+    )
+
+
+def test_scratch_base_prefers_tmpfs_with_room(monkeypatch):
+    _statvfs_free(monkeypatch, W._SHM_FLOOR_BYTES)
+    assert W._pick_base() == "/dev/shm/etl_pipeline_old_spark_cache"
+
+
+def test_scratch_base_falls_back_below_tmpfs_floor(monkeypatch):
+    _statvfs_free(monkeypatch, 64 << 20)  # a container's default /dev/shm
+    assert W._pick_base() == "/tmp/etl_pipeline_old_spark_cache"
+
+
+def test_scratch_base_falls_back_when_statvfs_fails(monkeypatch):
+    _statvfs_free(monkeypatch, 0)
+
+    def broken(path):
+        raise OSError("no statvfs")
+
+    monkeypatch.setattr(os, "statvfs", broken)
+    assert W._pick_base() == "/tmp/etl_pipeline_old_spark_cache"
+
+
+def test_scratch_base_override_wins(monkeypatch):
+    _statvfs_free(monkeypatch, 0)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_BASE", "/data/scratch")
+    assert W._pick_base() == "/data/scratch"
