@@ -19,6 +19,9 @@ Layout
 - ``sinks/``      : overwrite + incremental high-watermark sinks.
 - ``plans/``      : reference pipelines re-expressed end-to-end.
 - ``streaming/``  : Structured Streaming equivalents of the incremental path.
+- ``worker_daemon``: Python-worker daemon of the engine's sessions. It loads
+                    this package before it settles the worker's ``sys.path``,
+                    so this module must import nothing (pyspark above all).
 """
 
 __version__ = "0.1.0"

@@ -79,6 +79,8 @@ def get_spark(app_name: str = "etl_pipeline_old_spark", cpus: int | None = None)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        # Python workers import pyspark from site-packages, not pyspark.zip
+        .config("spark.python.daemon.module", "etl_pipeline_old_spark.worker_daemon")
     )
     for k, v in _RUNTIME_CONFS.items():
         b = b.config(k, v)

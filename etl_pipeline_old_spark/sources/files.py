@@ -86,10 +86,9 @@ def read_blobs(
     matching ``glob``) under ``path``, packed into tasks by their bytes.
 
     Spark plans one split per 32 small files, however small, and every
-    split becomes a Python-worker task downstream: each task pays the
-    worker's fixed set-up (about 0.2 s, mostly re-reading the zip
-    importers on its ``sys.path``) before its first decode. The scan is
-    coalesced to :func:`~.session.blob_scan_partitions` tasks instead.
+    split becomes a Python-worker task downstream with its own fixed
+    set-up and scheduling cost. The scan is coalesced to
+    :func:`~.session.blob_scan_partitions` tasks instead.
     Its byte count is the relation's size statistic, the sum of file
     lengths from the listing the scan already made, so sizing runs no
     Spark job.

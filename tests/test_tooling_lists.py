@@ -2,8 +2,9 @@
 hostile_sweep REPEAT_QUERIES all reference registry queries by name and
 FILTER-drop (or merely warn on) unknown names — so a renamed query would
 silently vanish from the bench suite, the plans doc, or the idempotency
-sweep. Pin every list to the live registry. A source scan also pins the
-batch binaryFile read to its one implementation."""
+sweep. Pin every list to the live registry. Source scans also pin the
+batch binaryFile read to its one implementation and the SparkSession
+builder to the one session factory."""
 
 from __future__ import annotations
 
@@ -77,7 +78,8 @@ def _batch_binaryfile_reads(tree: ast.AST):
                 recv = recv.value
 
 
-def test_batch_binaryfile_reads_go_through_read_blobs():
+def _package_scan(find) -> dict[str, list[int]]:
+    """``{module path: line numbers}`` of ``find`` over every package module."""
     pkg = os.path.join(_ROOT, "etl_pipeline_old_spark")
     found = {}
     for dirpath, _dirs, files in os.walk(pkg):
@@ -85,10 +87,34 @@ def test_batch_binaryfile_reads_go_through_read_blobs():
             if name.endswith(".py"):
                 path = os.path.join(dirpath, name)
                 with open(path, encoding="utf-8") as fh:
-                    lines = list(_batch_binaryfile_reads(ast.parse(fh.read())))
+                    lines = list(find(ast.parse(fh.read())))
                 if lines:
                     found[os.path.relpath(path, pkg)] = lines
+    return found
+
+
+def test_batch_binaryfile_reads_go_through_read_blobs():
+    found = _package_scan(_batch_binaryfile_reads)
     helper = os.path.join("sources", "files.py")
     assert helper in found, "the scan no longer finds read_blobs' own read"
     del found[helper]
     assert not found, f"batch binaryFile reads outside read_blobs: {found}"
+
+
+def _session_builders(tree: ast.AST):
+    """Line numbers of ``SparkSession.builder`` (also ``x.SparkSession.builder``)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "builder":
+            recv = node.value
+            name = recv.attr if isinstance(recv, ast.Attribute) else getattr(recv, "id", None)
+            if name == "SparkSession":
+                yield node.lineno
+
+
+def test_only_the_session_factory_builds_sessions():
+    # every engine session must start its Python workers from the engine's
+    # daemon module, which only session.get_spark configures
+    found = _package_scan(_session_builders)
+    assert "session.py" in found, "the scan no longer finds get_spark's builder"
+    del found["session.py"]
+    assert not found, f"SparkSession.builder outside session.py: {found}"
