@@ -374,19 +374,6 @@ def main() -> None:
         timings[name] = round(time.perf_counter() - t0, 3)
     total = round(time.perf_counter() - t_total, 3)
 
-    # per-dataset attribution for the orchestrator entry (r4 verdict #4):
-    # stderr, so stdout keeps the one-JSON-line contract. Datasets build in
-    # parallel threads, so these overlap — they attribute the ratio to a
-    # sink, they don't sum to the run_full_pipeline wall time.
-    from etl_pipeline_old_spark.plans.orchestrator import LAST_TIMINGS
-
-    if "run_full_pipeline" in timings and LAST_TIMINGS:
-        print(
-            "run_full_pipeline datasets (overlapping thread seconds): "
-            + json.dumps(LAST_TIMINGS, sort_keys=True),
-            file=sys.stderr,
-        )
-
     # Host-load context (r5 verdict #4): this box carries EXTERNAL load
     # (loadavg ~5 observed with nothing of ours running), which uniformly
     # inflates timings ~1.1-1.3x. loadavg_start (captured before the

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import threading
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,13 +29,6 @@ DATASETS = {
     "logs": P1.logs_pipeline,
 }
 
-
-# per-dataset wall seconds of the most recent run_pipeline call (build +
-# sink write + splits, per dataset). Written by _build_one — one key per
-# thread, so concurrent writes never collide — and read by bench.py so the
-# round-over-round run_full_pipeline ratio is attributable per sink
-# instead of argued from commit messages (r4 verdict #4).
-LAST_TIMINGS: dict[str, float] = {}
 
 # the scripts frame persisted by each thread's most recent out_dir=None
 # run: kept so that thread's NEXT run can release it before pinning a
@@ -60,7 +52,6 @@ def _build_one(
     """Build (and optionally load) one dataset; 'scripts' also produces its
     bim/designers split sinks (the notebook's 3-way load,
     create_scripts_dataset.ipynb:233-234,261-319)."""
-    t0 = time.perf_counter()
     df = DATASETS[name](spark, sf_dir)
     if out_dir is not None:
         full_refresh(df, os.path.join(out_dir, name))
@@ -75,10 +66,13 @@ def _build_one(
         # dir there is no written table to read back, so the frame is
         # persisted instead: the join chain executes once and both splits
         # (and the caller's own actions on the main frame) scan the cache.
+        # The read-back is given the written frame's schema: Spark stores
+        # it in the footers it writes, so inferring it would run a Spark
+        # job to find the same schema.
         from pyspark.sql import functions as F
 
         if out_dir is not None:
-            src = spark.read.parquet(os.path.join(out_dir, name))
+            src = spark.read.schema(df.schema).parquet(os.path.join(out_dir, name))
         else:
             tid = threading.get_ident()
             with _SCRIPTS_CACHE_LOCK:
@@ -119,7 +113,6 @@ def _build_one(
         else:
             for half, pred in halves:
                 out[half] = src.filter(pred)
-    LAST_TIMINGS[name] = round(time.perf_counter() - t0, 3)
     return out
 
 

@@ -291,8 +291,7 @@ DELTA_MOD = 5  # doc_id % 5 == 0 plays the "newly arrived shard" (~20%)
 # wall-second components of the most recent incremental_probe_matches_bronze
 # call (shingle cache / one-shot bronze index build / recurring delta
 # probe). Read by bench.py so pipeline_corpus_refresh's headline number is
-# attributable to build-vs-probe instead of argued (r6 verdict #3); same
-# pattern as plans.orchestrator.LAST_TIMINGS.
+# attributable to build-vs-probe instead of argued (r6 verdict #3).
 LAST_TIMINGS: dict[str, float] = {}
 
 
@@ -687,17 +686,9 @@ def sketch_hll_partitioned_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
-    from ..catalog import restore_ts, table_path
-    from ..session import ensure_session_confs
+    from ..catalog import events_stream
 
-    ensure_session_confs(spark)
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    stream = restore_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = events_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..workdir import run_dir
-from ..catalog import load_table, table_path
+from ..catalog import events_stream, load_table
 from ..operators import similarity as SIM
 from ..registry import register
 from ..session import ensure_session_confs
@@ -62,14 +62,8 @@ def _drain_user_totals_state(spark: SparkSession, sf_dir: str, tag: str) -> str:
     behind are what the ``statestore`` reader then inspects. Fresh per
     call (rmtree first) so re-runs are idempotent.
     """
-    ensure_session_confs(spark)
     chk = _run_dir(tag, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = events_stream(spark, sf_dir)
     q = (
         stream.groupBy("user_id")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))

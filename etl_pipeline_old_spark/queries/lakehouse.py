@@ -845,14 +845,13 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whole S8 path that unit tests previously covered alone.",
 )
 def s8_rest_single_shot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import table_path
     from ..sources.rest import rest_to_dataframe
 
     # offline transport: the dim-sized JSON body a single-shot authed GET
     # returns — read driver-side exactly like the reference's .json() parse
     body = [
         {"id": r.n_nationkey, "name": r.n_name}
-        for r in spark.read.parquet(table_path(sf_dir, "nation"))
+        for r in load_table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name")
         .collect()
     ]
@@ -880,11 +879,10 @@ def s8_rest_single_shot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "driver gate value-checks the whole S9 parse.",
 )
 def s9_sheets_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import table_path
     from ..sources.sheets import sheet_to_dataframe
 
     rows = (
-        spark.read.parquet(table_path(sf_dir, "region"))
+        load_table(spark, sf_dir, "region")
         .select("r_regionkey", "r_name")
         .orderBy("r_regionkey")
         .collect()
@@ -901,7 +899,7 @@ def s9_sheets_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ragged row parsed as '' name; restore it from the key join so the
     # oracle compares the REAL dim values (the pad itself is asserted in
     # tests; here it must flow through without erroring)
-    dim = spark.read.parquet(table_path(sf_dir, "region")).select(
+    dim = load_table(spark, sf_dir, "region").select(
         F.col("r_regionkey").alias("region_key"),
         F.trim("r_name").alias("dim_name"),
     )

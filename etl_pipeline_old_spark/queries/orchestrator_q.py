@@ -51,7 +51,7 @@ def run_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"datalake_{os.path.basename(os.path.normpath(sf_dir))}",
     )
     shutil.rmtree(out_dir, ignore_errors=True)
-    run_pipeline(spark, sf_dir, out_dir)
+    outputs = run_pipeline(spark, sf_dir, out_dir)
     names = (
         "scripts",
         "scripts_bim",
@@ -63,11 +63,14 @@ def run_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the seven read-back counts are independent metadata-cheap jobs over
     # independent sinks — run them concurrently (guide §2.6); output order
-    # stays the reference's fixed dataset order
+    # stays the reference's fixed dataset order. Each read is given its
+    # written frame's schema, which Spark stored in the footers, so no read
+    # runs a schema-inference job.
     from concurrent.futures import ThreadPoolExecutor
 
     def _count(name: str) -> int:
-        return spark.read.parquet(os.path.join(out_dir, name)).count()
+        path = os.path.join(out_dir, name)
+        return spark.read.schema(outputs[name].schema).parquet(path).count()
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         counts = list(pool.map(_count, names))

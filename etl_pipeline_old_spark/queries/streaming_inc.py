@@ -100,18 +100,10 @@ SESSION_GAP_US = 30 * 60 * 1_000_000
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
-    from ..catalog import restore_ts, table_path
-    from ..session import ensure_session_confs, no_data_batches_disabled
+    from ..catalog import events_stream
+    from ..session import no_data_batches_disabled
 
-    ensure_session_confs(spark)
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    stream = restore_ts(stream)
+    stream = events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))

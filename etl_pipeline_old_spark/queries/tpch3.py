@@ -7,9 +7,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, restore_ts, table_path
+from ..catalog import events_stream, load_table
 from ..registry import register
-from ..session import ensure_session_confs, no_data_batches_disabled
+from ..session import no_data_batches_disabled
 
 
 @register(
@@ -96,25 +96,14 @@ JOIN_WINDOW_US = 3600 * 1_000_000
     "hash-checked.",
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-
-    def stream():
-        return restore_ts(
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
     purchases = (
-        stream()
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select("event_id", "user_id", F.col("ts").alias("p_ts"))
         .withWatermark("p_ts", "2 hours")
     )
     signups = (
-        stream()
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "signup")
         .select(
             F.col("event_id").alias("signup_event_id"),

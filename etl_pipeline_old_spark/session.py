@@ -21,6 +21,14 @@ Scale notes
   testdata stores it as TIMESTAMP(MICROS,false) (→ TIMESTAMP_NTZ under the
   default NTZ inference); :func:`~.catalog.restore_ts` normalizes either
   shape to a UTC TIMESTAMP, so both generations of testdata stay readable.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark's default
+  wraps every DataFrame and Column call to capture its Python call site,
+  which adds about five py4j round trips to each call (session lookup,
+  JVM class lookup, conf read, origin set and clear). Off, an analysis
+  error keeps its error class and message and loses only the
+  ``file:line`` fragment of its DataFrame query context. PySpark reads the
+  flag once per process, at its first wrapped call, so it is a builder
+  conf rather than one of ``_RUNTIME_CONFS``.
 """
 
 from __future__ import annotations
@@ -81,6 +89,8 @@ def get_spark(app_name: str = "etl_pipeline_old_spark", cpus: int | None = None)
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         # Python workers import pyspark from site-packages, not pyspark.zip
         .config("spark.python.daemon.module", "etl_pipeline_old_spark.worker_daemon")
+        # no per-call Python call-site capture (see the scale notes)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _RUNTIME_CONFS.items():
         b = b.config(k, v)

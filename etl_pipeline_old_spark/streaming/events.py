@@ -19,23 +19,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import restore_ts, table_path
-from ..session import ensure_session_confs, no_data_batches_disabled
-
-
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    # the file-stream source wants a directory: stream the sf_dir with a
-    # glob filter selecting just the events table
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return restore_ts(stream)
+from ..catalog import events_stream
+from ..session import no_data_batches_disabled
 
 
 def tumbling_window_counts(
@@ -49,7 +34,7 @@ def tumbling_window_counts(
     verified, not just smoke-checked.
     """
     agg = (
-        _event_stream(spark, sf_dir)
+        events_stream(spark, sf_dir, max_files_per_trigger=1)
         .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), F.col("event_type"))
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
@@ -88,7 +73,7 @@ def append_mode_with_watermark(
     prefix of the complete-mode answer). Rows-only check (not expressible
     as a pure batch SQL oracle by design)."""
     agg = (
-        _event_stream(spark, sf_dir)
+        events_stream(spark, sf_dir, max_files_per_trigger=1)
         .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
@@ -127,7 +112,7 @@ def sliding_window_counts(
     overlap multiplies the aggregation fan-out (×2), never the raw stream.
     """
     agg = (
-        _event_stream(spark, sf_dir)
+        events_stream(spark, sf_dir, max_files_per_trigger=1)
         .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window, slide), F.col("event_type"))
         .agg(

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..workdir import cache_root
-from ..catalog import restore_ts, table_path
+from ..catalog import events_stream, parquet_schema, restore_ts, table_path
 from ..session import ensure_session_confs
 
 
@@ -38,8 +38,7 @@ def _duplicated_event_feed(spark: SparkSession, sf_dir: str) -> tuple[str, objec
     os.makedirs(feed)
     shutil.copy(src, os.path.join(feed, "batch1.parquet"))
     shutil.copy(src, os.path.join(feed, "batch2.parquet"))
-    schema = spark.read.parquet(src).schema
-    return feed, schema
+    return feed, parquet_schema(spark, src)[0]
 
 
 def stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,16 +89,7 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the escape hatch for stateful logic built-in aggregations can't
     express. Emits one row per (user, batch); the LAST row per user is
     the exact batch answer (asserted in tests)."""
-    ensure_session_confs(spark)
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-    )
-    stream = restore_ts(stream)
+    stream = events_stream(spark, sf_dir, max_files_per_trigger=1)
     updated = (
         stream.groupBy("user_id")
         .applyInPandasWithState(

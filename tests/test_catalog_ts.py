@@ -46,3 +46,15 @@ def test_restore_ts_is_noop_on_plain_timestamp(spark):
     out = restore_ts(df)
     assert dict(out.dtypes)["ts"] == "timestamp"
     assert out.select(F.unix_micros("ts").alias("us")).first()["us"] == US[0]
+
+
+def test_load_table_sees_a_file_replaced_in_place(spark, tmp_path):
+    # a table rewritten at the same path must not keep the old file's
+    # timestamp[ns] columns: an int64 column would be read as a timestamp
+    path = str(tmp_path / "orders.parquet")
+    pq.write_table(pa.table({"x": pa.array([US[0] * 1000], pa.timestamp("ns"))}), path)
+    assert dict(load_table(spark, str(tmp_path), "orders").dtypes)["x"] == "timestamp"
+    pq.write_table(pa.table({"x": pa.array([42], pa.int64())}), path)
+    df = load_table(spark, str(tmp_path), "orders")
+    assert dict(df.dtypes)["x"] == "bigint"
+    assert df.first()["x"] == 42

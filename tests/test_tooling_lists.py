@@ -3,8 +3,9 @@ hostile_sweep REPEAT_QUERIES all reference registry queries by name and
 FILTER-drop (or merely warn on) unknown names — so a renamed query would
 silently vanish from the bench suite, the plans doc, or the idempotency
 sweep. Pin every list to the live registry. Source scans also pin the
-batch binaryFile read to its one implementation and the SparkSession
-builder to the one session factory."""
+batch binaryFile read to its one implementation, the SparkSession
+builder to the one session factory, and testdata table reads to the
+catalog."""
 
 from __future__ import annotations
 
@@ -118,3 +119,30 @@ def test_only_the_session_factory_builds_sessions():
     assert "session.py" in found, "the scan no longer finds get_spark's builder"
     del found["session.py"]
     assert not found, f"SparkSession.builder outside session.py: {found}"
+
+
+def _table_path_parquet_reads(tree: ast.AST):
+    """Line numbers of ``<x>.parquet(table_path(...))`` (also ``x.table_path``)."""
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            continue
+        for arg in node.args:
+            if isinstance(arg, ast.Call):
+                fn = arg.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name == "table_path":
+                    yield node.lineno
+
+
+def test_testdata_tables_are_read_through_the_catalog():
+    # a direct read infers the table's schema with a Spark job on every
+    # call; catalog.load_table and parquet_schema infer it once per file
+    probe = "spark.read.parquet(catalog.table_path(d, 'nation'))"
+    assert list(_table_path_parquet_reads(ast.parse(probe))) == [1]
+    found = _package_scan(_table_path_parquet_reads)
+    found.pop("catalog.py", None)
+    assert not found, f".parquet(table_path(...)) outside catalog.py: {found}"
