@@ -321,7 +321,7 @@ def main() -> None:
     # suite's most expensive entry mostly measured fixture writes
     # (pipeline_pdf_aes_extract 9.9-10.7s first-run vs ~1.9s steady per
     # the scale probe). Staging is marker-idempotent per process
-    # (_stage_media_files), so pre-running each such sentinel ONCE here
+    # (workdir.stage_fixture), so pre-running each such sentinel ONCE here
     # makes the timed loop below measure the RECURRING plan — the number
     # that tracks scale — while the one-time cost stays visible in the
     # full record as components["staging"]. r12 resets these entries'

@@ -26,7 +26,7 @@ cluster.
 JPEG is lossy: ``decode(encode(img))`` equals ``img`` only within a bounded
 error (tight at quality 95, looser with 4:2:0 chroma subsampling).  The
 ingest query therefore oracle-checks an explicit error *bound* per staged
-quality mode, not byte equality — see queries/sources_formats.py.
+quality mode, not byte equality — see queries/formats/formats_media.py.
 
 Reference seam being replaced: the reference loads media through external
 tooling outside its pipelines (no codec in

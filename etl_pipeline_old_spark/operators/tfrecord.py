@@ -109,7 +109,7 @@ def iter_tfrecords(blob: bytes):
 
 
 # ------------------------------------------------------- tf.Example
-def _tag(field: int, wt: int) -> bytes:
+def _field_key(field: int, wt: int) -> bytes:
     return _varint((field << 3) | wt)
 
 
@@ -126,7 +126,7 @@ def _varint(n: int) -> bytes:
 
 
 def _len_field(field: int, payload: bytes) -> bytes:
-    return _tag(field, WT_LEN) + _varint(len(payload)) + payload
+    return _field_key(field, WT_LEN) + _varint(len(payload)) + payload
 
 
 def encode_example(features: dict) -> bytes:

@@ -32,7 +32,14 @@ _MODULES = (
     "tpch2",
     "tpch5",
     "corpus2",
-    "sources_formats",
+    "formats.formats_media",
+    "formats.formats_audio",
+    "formats.formats_containers",
+    "formats.formats_pdf",
+    "formats.formats_video_text",
+    "formats.formats_office",
+    "formats.formats_web",
+    "formats.formats_lake",
     "spark4_surface",
     # round-3 modules load LAST: the driver verifies a capped prefix of the
     # least-verified-first ordering, and new queries must queue BEHIND the

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..workdir import scratch_path
 
 _K_MERGES = 64
 
@@ -903,13 +904,8 @@ def _bpe_artifact_oracle(k: int = _K_MERGES) -> str:
     "corpus beyond the final per-token aggregate.",
 )
 def corpus_bpe_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    from ..workdir import cache_root
-    from .sources_formats import _tag
-
     merges, _vocab = _train_merge_list(_vocab_frame(spark, sf_dir))
-    path = _os.path.join(cache_root(), f"bpe_merges_{_tag(sf_dir)}")
+    path = scratch_path("bpe_merges", sf_dir)
     spark.createDataFrame(
         [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
         "round int, left_tok string, right_tok string",

@@ -22,56 +22,12 @@ from pyspark.sql import Window
 
 from ..catalog import load_table
 from ..registry import register
-from ..sources.files import read_blobs
+from ..sources.files import read_blobs, stage_shard_files
+from ..workdir import stage_fixture, write_atomic
 
-_WDS_DOCS_PER_SHARD = 25
 _WIKI_STREAM_DOCS = 25
 _WIKI_DOCS_PER_FILE = 100
 _WIKI_TORN_MOD = 5  # stream_idx % 5 == 3 -> the stream stages torn
-
-
-def _stage_suffixed_shards(
-    spark: SparkSession, sf_dir: str, kind: str, build
-) -> str:
-    """Like web_corpus._stage_shard_files but ``build(pdf, sid)``
-    returns (suffix, bytes) so the container flavor can vary per shard
-    — the mixed-compression reality of mirrored corpora."""
-    import os
-
-    from ..workdir import cache_root
-    from .sources_formats import _tag
-
-    path = os.path.join(cache_root(), f"{kind}_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        d = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text", "lang", "source")
-            .withColumn(
-                "shard",
-                F.floor(F.col("doc_id") / _WDS_DOCS_PER_SHARD).cast("int"),
-            )
-        )
-
-        def write_shard(pdf):
-            import os as os_
-            import uuid as uuid_
-
-            import pandas as pd
-
-            pdf = pdf.sort_values("doc_id")
-            sid = int(pdf["shard"].iloc[0])
-            suffix, blob = build(pdf, sid)
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.{suffix}"))
-            return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
-
-        d.groupBy("shard").applyInPandas(write_shard, "shard int, n int").collect()
-        open(marker, "w").close()
-    return path
 
 
 def _build_compressed_wds(pdf, sid: int) -> tuple[str, bytes]:
@@ -123,8 +79,7 @@ def _build_compressed_wds(pdf, sid: int) -> tuple[str, bytes]:
 def multimodal_webdataset_compressed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_suffixed_shards(spark, sf_dir, "wds_compressed",
-                                  _build_compressed_wds)
+    path = stage_shard_files(spark, sf_dir, "wds_compressed", _build_compressed_wds)
     bf = read_blobs(spark, path, "tar.*").select("path", "content")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -214,15 +169,7 @@ def _build_wikidump(pdf) -> tuple[bytes, bytes]:
 
 
 def _stage_wikidump(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from ..workdir import cache_root
-    from .sources_formats import _tag
-
-    path = os.path.join(cache_root(), f"wikidump_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -233,9 +180,6 @@ def _stage_wikidump(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_part(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
 
             pdf = pdf.sort_values("doc_id")
@@ -245,17 +189,12 @@ def _stage_wikidump(spark: SparkSession, sf_dir: str) -> str:
                 (f"wiki-{pid:04d}-multistream.xml.bz2", dump),
                 (f"wiki-{pid:04d}-multistream-index.txt.bz2", index),
             ):
-                tmp = os_.path.join(
-                    path, f".{name}.{uuid_.uuid4().hex}.tmp"
-                )
-                with open(tmp, "wb") as fh:
-                    fh.write(blob)
-                os_.replace(tmp, os_.path.join(path, name))
+                write_atomic(path, name, blob)
             return pd.DataFrame({"part": [pid], "n": [len(pdf)]})
 
         d.groupBy("part").applyInPandas(write_part, "part int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("wikidump", sf_dir, build)
 
 
 def _wikidump_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,15 +444,7 @@ _XZ_TORN_MOD = 6  # global block idx % 6 == 5 -> block stages torn
 
 
 def _stage_xz_blocks(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from ..workdir import cache_root
-    from .sources_formats import _tag
-
-    path = os.path.join(cache_root(), f"xz_blocks_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -525,8 +456,6 @@ def _stage_xz_blocks(spark: SparkSession, sf_dir: str) -> str:
 
         def write_part(pdf):
             import json as _json
-            import os as os_
-            import uuid as uuid_
 
             import pandas as pd
 
@@ -555,15 +484,12 @@ def _stage_xz_blocks(spark: SparkSession, sf_dir: str) -> str:
                 check="crc64", size_fields=True,
             )
             name = f"corpus-{pid:04d}.xz"
-            tmp = os_.path.join(path, f".{name}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os_.replace(tmp, os_.path.join(path, name))
+            write_atomic(path, name, blob)
             return pd.DataFrame({"part": [pid], "n": [len(pdf)]})
 
         d.groupBy("part").applyInPandas(write_part, "part int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("xz_blocks", sf_dir, build)
 
 
 @register(
@@ -705,15 +631,7 @@ _7Z_TORN_MOD = 7  # archive (part) idx % 7 == 3 -> header stages torn
 
 
 def _stage_7z(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from ..workdir import cache_root
-    from .sources_formats import _tag
-
-    path = os.path.join(cache_root(), f"sevenzip_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -724,9 +642,6 @@ def _stage_7z(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_part(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
 
             from ..operators.sevenzip import write_7z
@@ -739,15 +654,12 @@ def _stage_7z(spark: SparkSession, sf_dir: str) -> str:
             }
             blob = write_7z(files, torn_header=pid % _7Z_TORN_MOD == 3)
             name = f"corpus-{pid:04d}.7z"
-            tmp = os_.path.join(path, f".{name}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os_.replace(tmp, os_.path.join(path, name))
+            write_atomic(path, name, blob)
             return pd.DataFrame({"part": [pid], "n": [len(pdf)]})
 
         d.groupBy("part").applyInPandas(write_part, "part int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("sevenzip", sf_dir, build)
 
 
 @register(

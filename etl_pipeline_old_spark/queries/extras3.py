@@ -8,16 +8,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
 from ..catalog import load_table
 from ..registry import register
 from ..streaming.events import sliding_window_counts
+from ..workdir import scratch_path
 
 _3H_US = 3 * 3600 * 1_000_000
-
-
-def _tag(sf_dir: str) -> str:
-    return os.path.basename(os.path.normpath(sf_dir))
 
 
 @register(
@@ -104,7 +100,7 @@ def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s16_mergeschema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
-    path = os.path.join(cache_root(), f"evolve_{_tag(sf_dir)}")
+    path = scratch_path("evolve", sf_dir)
     v1 = c.filter(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_name")
     v2 = c.filter(F.col("c_custkey") % 2 == 1).select(
         "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal")

@@ -1,27 +1,21 @@
-"""Audio/video media ingestion (G.711, ADPCM, FLAC, motion) — a contiguous slice of the former
-queries/sources_formats.py monolith (split r13, r12 verdict #6).  The
-sources_formats facade imports the slices IN ORDER, so global registry
-order is byte-identical to the pre-split file; see that module's
-docstring for the family story."""
+"""Audio/video media ingestion (G.711, ADPCM, FLAC, motion) — one family of
+the file-format sources (see the package docstring)."""
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
-from ...sources.files import read_blobs
+from ...sources.files import read_blobs, stage_doc_files, stage_shard_files
 
-from .formats_media import (  # noqa: F401 — shared helpers
+from .formats_media import (
     _WAV_N,
     _g711_oracle,
     _stage_g711_files,
-    _stage_media_files,
     _stage_wav_files,
     _stage_y4m_files,
     _wav_sample_sql,
@@ -258,7 +252,7 @@ def _adpcm_head_sql(j: int) -> str:
     "ADPCM seekable (and parallelizable) at corpus scale.",
 )
 def multimodal_adpcm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "adpcm_files", "wav", _render_adpcm)
+    path = stage_doc_files(spark, sf_dir, "adpcm_files", "wav", _render_adpcm)
     bf = (
         read_blobs(spark, path, "wav")
         .select(
@@ -391,7 +385,7 @@ def _render_flac(doc_id: int, text: str) -> bytes:
     "costs its own record, never the job.",
 )
 def multimodal_flac_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "flac_files", "flac", _render_flac)
+    path = stage_doc_files(spark, sf_dir, "flac_files", "flac", _render_flac)
     bf = (
         read_blobs(spark, path, "flac")
         .select(
@@ -534,9 +528,7 @@ def _build_webdataset_audio_shard(pdf, sid: int) -> bytes:
     "modalities.",
 )
 def multimodal_webdataset_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..web_corpus import _stage_shard_files
-
-    path = _stage_shard_files(
+    path = stage_shard_files(
         spark, sf_dir, "webdataset_audio", _build_webdataset_audio_shard,
         suffix="tar",
     )
@@ -640,7 +632,7 @@ def _render_mp4(doc_id: int, text: str) -> bytes:
     "segment corpora embarrassingly parallel.",
 )
 def multimodal_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "mp4_files", "mp4", _render_mp4)
+    path = stage_doc_files(spark, sf_dir, "mp4_files", "mp4", _render_mp4)
     bf = (
         read_blobs(spark, path, "mp4")
         .select(
@@ -759,7 +751,7 @@ def _render_mp3(doc_id: int, text: str) -> bytes:
     "100 TB.",
 )
 def multimodal_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "mp3_files", "mp3", _render_mp3)
+    path = stage_doc_files(spark, sf_dir, "mp3_files", "mp3", _render_mp3)
     bf = (
         read_blobs(spark, path, "mp3")
         .select(
@@ -832,7 +824,7 @@ def _render_mp3_tagged(doc_id: int, text: str) -> bytes:
     "probe plan.",
 )
 def multimodal_mp3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "mp3_tag_files", "mp3", _render_mp3_tagged
     )
     bf = (

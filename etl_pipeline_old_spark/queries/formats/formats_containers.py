@@ -1,28 +1,18 @@
-"""Container probes and archive shards (WebP, AAC, EXIF, Ogg, ZIP) — a contiguous slice of the former
-queries/sources_formats.py monolith (split r13, r12 verdict #6).  The
-sources_formats facade imports the slices IN ORDER, so global registry
-order is byte-identical to the pre-split file; see that module's
-docstring for the family story."""
+"""Container probes and archive shards (WebP, AAC, EXIF, Ogg, ZIP) — one
+family of the file-format sources (see the package docstring)."""
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...workdir import cache_root
-from ...catalog import load_table
 from ...registry import register
-from ...sources.files import read_blobs
+from ...sources.files import read_blobs, stage_doc_files, stage_shard_files
 
 from .formats_audio import (  # noqa: F401 — shared helpers
     _render_webp,
-)
-
-from .formats_media import (  # noqa: F401 — shared helpers
-    _stage_media_files,
 )
 
 
@@ -63,7 +53,7 @@ from .formats_media import (  # noqa: F401 — shared helpers
     "header-bounded walk per blob, shard-parallel like every probe.",
 )
 def multimodal_webp_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "webp_files", "webp", _render_webp
     )
     bf = (
@@ -192,7 +182,7 @@ def _render_webp_lossless(doc_id: int, text: str) -> bytes:
 def multimodal_webp_lossless_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "webp_lossless_files", "webp", _render_webp_lossless
     )
     bf = (
@@ -297,7 +287,7 @@ def _webp_anim_oracle() -> str:
 def multimodal_webp_animation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "webp_anim_files", "webp", _render_webp_animation
     )
     bf = (
@@ -398,7 +388,7 @@ def _render_aac(doc_id: int, text: str) -> bytes:
     "per-record quarantine.",
 )
 def multimodal_aac_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "aac_files", "aac", _render_aac)
+    path = stage_doc_files(spark, sf_dir, "aac_files", "aac", _render_aac)
     bf = (
         read_blobs(spark, path, "aac")
         .select(
@@ -487,7 +477,7 @@ def _render_mp4_aac(doc_id: int, text: str) -> bytes:
     "walk per blob, same as multimodal_mp4_probe.",
 )
 def multimodal_mp4_aac_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "mp4_aac_files", "mp4", _render_mp4_aac
     )
     bf = (
@@ -599,7 +589,7 @@ def _render_exif_jpeg(doc_id: int, text: str) -> bytes:
     "in the same scan that decodes (or quarantines) the image payload.",
 )
 def multimodal_exif_gps_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "exif_files", "jpg", _render_exif_jpeg
     )
     bf = (
@@ -731,7 +721,7 @@ def _render_ogg(doc_id: int, text: str) -> bytes:
     "the property Ogg was designed around.",
 )
 def multimodal_ogg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "ogg_files", "ogg", _render_ogg)
+    path = stage_doc_files(spark, sf_dir, "ogg_files", "ogg", _render_ogg)
     bf = (
         read_blobs(spark, path, "ogg")
         .select(
@@ -811,7 +801,7 @@ def _render_ogg_tagged(doc_id: int, text: str) -> bytes:
     "metadata, never payload bytes.",
 )
 def multimodal_ogg_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "ogg_tag_files", "ogg", _render_ogg_tagged
     )
     bf = (
@@ -892,9 +882,7 @@ def _build_zip_shard(pdf, sid: int) -> bytes:
     "quarantine pattern applies unchanged.",
 )
 def multimodal_zip_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..web_corpus import _stage_shard_files
-
-    path = _stage_shard_files(
+    path = stage_shard_files(
         spark, sf_dir, "zip_shards", _build_zip_shard, suffix="zip"
     )
     bf = read_blobs(spark, path, "zip").select("content")
@@ -983,9 +971,7 @@ def _build_zip64_shard(pdf, sid: int) -> bytes:
     "embarrassingly parallel across shards.",
 )
 def multimodal_zip64_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..web_corpus import _stage_shard_files
-
-    path = _stage_shard_files(
+    path = stage_shard_files(
         spark, sf_dir, "zip64_shards", _build_zip64_shard, suffix="zip"
     )
     bf = read_blobs(spark, path, "zip").select("content")

@@ -1,8 +1,5 @@
-"""Lake interchange formats (Avro, SQLite) and de-markup — a contiguous slice of the former
-queries/sources_formats.py monolith (split r13, r12 verdict #6).  The
-sources_formats facade imports the slices IN ORDER, so global registry
-order is byte-identical to the pre-split file; see that module's
-docstring for the family story."""
+"""Lake interchange formats (Avro, SQLite) and de-markup — one family of the
+file-format sources (see the package docstring)."""
 
 from __future__ import annotations
 
@@ -12,21 +9,14 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
-from ...sources.files import read_blobs
+from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
+from ...workdir import scratch_path
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
     _render_pdf,
-)
-
-from .formats_media import (  # noqa: F401 — shared helpers
-    _tag,
-    _BINARYFILE_SCHEMA,
-    _stage_media_files,
-    _stage_media_files_multi,
 )
 
 from .formats_office import (  # noqa: F401 — shared helpers
@@ -78,7 +68,7 @@ from .formats_web import (  # noqa: F401 — shared helpers
     "cluster (sync-marker scan), noted as the HDFS-era design intent.",
 )
 def multimodal_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "avro_files", "avro", _render_avro
     )
     bf = (
@@ -230,7 +220,7 @@ def _render_avro_era(doc_id: int, text: str) -> bytes:
     "kernel, resolution adds only per-field dictionary lookups.",
 )
 def multimodal_avro_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "avro_era_files", "avro", _render_avro_era
     )
     bf = (
@@ -342,7 +332,7 @@ def _render_sqlite(doc_id: int, text: str) -> bytes:
     "in the Arrow kernel — the database is the record.",
 )
 def multimodal_sqlite_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "sqlite_files", "db", _render_sqlite
     )
     bf = (
@@ -421,7 +411,7 @@ def _render_sqlite_wal(doc_id: int, text: str) -> list:
         wal = fh.read()
     con.close()
     shutil.rmtree(d)
-    return [("db", db), ("wal", wal)]
+    return [(f"{doc_id}.db", db), (f"{doc_id}.wal", wal)]
 @register(
     "multimodal_sqlite_wal_ingest",
     oracle="""
@@ -460,8 +450,8 @@ def _render_sqlite_wal(doc_id: int, text: str) -> list:
 def multimodal_sqlite_wal_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files_multi(
-        spark, sf_dir, "sqlite_wal_files", _render_sqlite_wal
+    path = stage_doc_files(
+        spark, sf_dir, "sqlite_wal_files", None, _render_sqlite_wal
     )
 
     def scan(ext: str, col: str):
@@ -530,23 +520,12 @@ def _render_mixed_doc(doc_id: int, text: str) -> bytes:
 def _stage_mixed_docs(spark: SparkSession, sf_dir: str) -> str:
     """One file per document, the EXTENSION cycling across five real
     formats — the heterogeneous bucket shape."""
-    path = os.path.join(cache_root(), f"mixed_docs_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-        def write_part(rows):
-            for r in rows:
-                ext = _MIXED_EXTS[r.doc_id % 5]
-                with open(
-                    os.path.join(path, f"{r.doc_id}.{ext}"), "wb"
-                ) as fh:
-                    fh.write(_render_mixed_doc(r.doc_id, r.text))
-
-        d.foreachPartition(write_part)
-        open(marker, "w").close()
-    return path
+    return stage_doc_files(
+        spark, sf_dir, "mixed_docs", None,
+        lambda doc_id, text: [
+            (f"{doc_id}.{_MIXED_EXTS[doc_id % 5]}", _render_mixed_doc(doc_id, text))
+        ],
+    )
 def _extract_any_document(ext: str, payload: bytes) -> str:
     """The extension-dispatched extraction kernel: every format routes
     to its own parser, every parser returns the document's full text."""
@@ -609,8 +588,7 @@ def pipeline_document_corpus_mixed(
 ) -> DataFrame:
     path = _stage_mixed_docs(spark, sf_dir)
     bf = (
-        read_blobs(spark, path)
-        .where(~F.col("path").endswith("_STAGED"))
+        read_blobs(spark, path, glob="*.*")  # not the staging marker
         .select(
             F.regexp_extract(F.col("path"), r"(\d+)\.\w+$", 1)
             .cast("long")
@@ -697,17 +675,17 @@ def stream_mail_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...session import ensure_session_confs
 
     ensure_session_confs(spark)
-    feed = _stage_media_files(
+    feed = stage_doc_files(
         spark, sf_dir, "mbox_files", "mbox", _render_mbox
     )
-    base = os.path.join(cache_root(), f"mbox_stream_{_tag(sf_dir)}")
+    base = scratch_path("mbox_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.mbox")
         .option("maxFilesPerTrigger", 200)
         .load(feed)
@@ -760,7 +738,7 @@ def _render_latex(doc_id: int, text: str) -> bytes:
     "like every document family.",
 )
 def pipeline_latex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "latex_files", "tex", _render_latex
     )
     bf = (
@@ -847,7 +825,7 @@ def _render_markdown(doc_id: int, text: str) -> bytes:
 def pipeline_markdown_extract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "markdown_files", "md", _render_markdown
     )
     bf = (

@@ -1,8 +1,5 @@
-"""Tabular format roundtrips + raster image ingestion — a contiguous slice of the former
-queries/sources_formats.py monolith (split r13, r12 verdict #6).  The
-sources_formats facade imports the slices IN ORDER, so global registry
-order is byte-identical to the pre-split file; see that module's
-docstring for the family story."""
+"""Tabular format roundtrips + raster image ingestion — one family of the
+file-format sources (see the package docstring)."""
 
 from __future__ import annotations
 
@@ -12,15 +9,12 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
-from ...sources.files import read_blobs
+from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
+from ...workdir import scratch_path
 
 
-def _tag(sf_dir: str) -> str:
-    # pid-free: reruns from ANY process overwrite the same path
-    return os.path.basename(os.path.normpath(sf_dir))
 @register(
     "s12_orc_roundtrip",
     oracle="SELECT doc_id, text, lang, source, n_chars FROM documents",
@@ -29,7 +23,7 @@ def _tag(sf_dir: str) -> str:
 )
 def s12_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    path = os.path.join(cache_root(), f"orc_docs_{_tag(sf_dir)}")
+    path = scratch_path("orc_docs", sf_dir)
     d.write.mode("overwrite").orc(path)
     return spark.read.orc(path).select("doc_id", "text", "lang", "source", "n_chars")
 @register(
@@ -42,7 +36,7 @@ def s12_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s13_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars")
-    path = os.path.join(cache_root(), f"xml_docs_{_tag(sf_dir)}")
+    path = scratch_path("xml_docs", sf_dir)
     (
         d.write.mode("overwrite")
         .format("xml")
@@ -66,7 +60,7 @@ def _stage_one_file_per_doc(spark: SparkSession, sf_dir: str) -> str:
     This is the on-disk layout multimodal corpora use (one blob per object),
     staged without any driver materialization.
     """
-    path = os.path.join(cache_root(), f"binfiles_{_tag(sf_dir)}")
+    path = scratch_path("binfiles", sf_dir)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -123,60 +117,12 @@ def _ppm_pixel_sql(j: int) -> str:
     from ...operators.multimodal import md5_pixel_sql
 
     return md5_pixel_sql(j)
-def _stage_media_files(
-    spark: SparkSession, sf_dir: str, kind: str, suffix: str, render
-) -> str:
-    """Stage one REAL media file per document, written from the executors
-    (each task renders and writes its partition's docs — on a cluster
-    this is the object-store upload half of a media corpus; the shared
-    filesystem stands in for the bucket). ``render(doc_id, text)`` returns
-    the file bytes. Idempotent per process via a marker file; the session
-    root is fresh per process (workdir)."""
-    path = os.path.join(cache_root(), f"{kind}_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-        def write_part(rows):
-            for r in rows:
-                with open(
-                    os.path.join(path, f"{r.doc_id}.{suffix}"), "wb"
-                ) as fh:
-                    fh.write(render(r.doc_id, r.text))
-
-        d.foreachPartition(write_part)
-        open(marker, "w").close()
-    return path
-def _stage_media_files_multi(
-    spark: SparkSession, sf_dir: str, kind: str, render
-) -> str:
-    """Like _stage_media_files, but ``render(doc_id, text)`` returns a
-    LIST of (suffix, bytes) — the sidecar-file shape (a .db plus its
-    -wal, a clip plus its captions) that object stores really hold."""
-    path = os.path.join(cache_root(), f"{kind}_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-        def write_part(rows):
-            for r in rows:
-                for suffix, payload in render(r.doc_id, r.text):
-                    with open(
-                        os.path.join(path, f"{r.doc_id}.{suffix}"), "wb"
-                    ) as fh:
-                        fh.write(payload)
-
-        d.foreachPartition(write_part)
-        open(marker, "w").close()
-    return path
 def _render_ppm(doc_id: int, text: str) -> bytes:
     from ...operators.multimodal import encode_ppm_p6, md5_pixels
 
     return encode_ppm_p6(md5_pixels(text, 64), 8, 8)
 def _stage_ppm_files(spark: SparkSession, sf_dir: str) -> str:
-    return _stage_media_files(spark, sf_dir, "ppm_files", "ppm", _render_ppm)
+    return stage_doc_files(spark, sf_dir, "ppm_files", "ppm", _render_ppm)
 @register(
     "multimodal_ppm_ingest",
     oracle=f"""
@@ -242,7 +188,7 @@ def _render_png(doc_id: int, text: str) -> bytes:
         filter_type=doc_id % 5,
     )
 def _stage_png_files(spark: SparkSession, sf_dir: str) -> str:
-    return _stage_media_files(spark, sf_dir, "png_files", "png", _render_png)
+    return stage_doc_files(spark, sf_dir, "png_files", "png", _render_png)
 def _png_ingest_oracle() -> str:
     """Shared oracle for the batch and streaming PNG ingests: the DuckDB
     rendering of the same md5 pixels plus the expected color-type cycle."""
@@ -332,7 +278,7 @@ def _render_wav(doc_id: int, text: str) -> bytes:
         channels=1 + doc_id % 2,
     )
 def _stage_wav_files(spark: SparkSession, sf_dir: str) -> str:
-    return _stage_media_files(spark, sf_dir, "wav_files", "wav", _render_wav)
+    return stage_doc_files(spark, sf_dir, "wav_files", "wav", _render_wav)
 @register(
     "multimodal_wav_ingest",
     oracle=f"""
@@ -475,7 +421,7 @@ def _render_y4m(doc_id: int, text: str) -> bytes:
         frames, 8, 8, colorspace="mono" if doc_id % 2 == 0 else "420"
     )
 def _stage_y4m_files(spark: SparkSession, sf_dir: str) -> str:
-    return _stage_media_files(spark, sf_dir, "y4m_files", "y4m", _render_y4m)
+    return stage_doc_files(spark, sf_dir, "y4m_files", "y4m", _render_y4m)
 @register(
     "multimodal_y4m_frames",
     oracle=f"""
@@ -542,7 +488,7 @@ def _render_corrupt_png(doc_id: int, text: str) -> bytes:
     data = _render_png(doc_id, text)
     return data[: len(data) - 24] if doc_id % _CORRUPT_MOD == 0 else data
 def _stage_corrupt_png_files(spark: SparkSession, sf_dir: str) -> str:
-    return _stage_media_files(
+    return stage_doc_files(
         spark, sf_dir, "png_corrupt", "png", _render_corrupt_png
     )
 @register(
@@ -596,9 +542,6 @@ def multimodal_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     return bf.mapInPandas(op, schema="doc_id long, status string, sum_gray long")
-_BINARYFILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
 @register(
     "stream_png_ingest",
     oracle=_png_ingest_oracle(),
@@ -622,14 +565,14 @@ def stream_png_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_confs(spark)
     feed = _stage_png_files(spark, sf_dir)
-    base = os.path.join(cache_root(), f"png_stream_{_tag(sf_dir)}")
+    base = scratch_path("png_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.png")
         .option("maxFilesPerTrigger", 200)
         .load(feed)
@@ -705,7 +648,7 @@ def _render_jpeg(doc_id: int, text: str) -> bytes:
     "the documented libjpeg-turbo seam.",
 )
 def multimodal_jpeg_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "jpeg_files", "jpg", _render_jpeg)
+    path = stage_doc_files(spark, sf_dir, "jpeg_files", "jpg", _render_jpeg)
     bf = (
         read_blobs(spark, path, "jpg")
         .select(
@@ -815,7 +758,7 @@ def _render_jpeg_prog(doc_id: int, text: str) -> bytes:
     "per-record failure isolation.",
 )
 def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "jpeg_prog_files", "jpg", _render_jpeg_prog
     )
     bf = (
@@ -928,7 +871,7 @@ def _render_png_adv(doc_id: int, text: str) -> bytes:
     "failure routing.",
 )
 def multimodal_png_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "png_adv_files", "png", _render_png_adv
     )
     bf = read_blobs(spark, path, "png").select("path", "content")
@@ -1008,7 +951,7 @@ def _render_gif_bmp(doc_id: int, text: str) -> bytes:
     "failure routing at the decode seam.",
 )
 def multimodal_gif_bmp_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "gifbmp_files", "img", _render_gif_bmp)
+    path = stage_doc_files(spark, sf_dir, "gifbmp_files", "img", _render_gif_bmp)
     bf = read_blobs(spark, path, "img").select("path", "content")
 
     def op(batches):
@@ -1114,7 +1057,7 @@ def _gif_anim_pixel_sql(j: int) -> str:
     "metadata, payload bytes never shuffle.",
 )
 def multimodal_gif_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "gif_anim_files", "gif", _render_gif_anim
     )
     bf = (
@@ -1194,7 +1137,7 @@ def _render_tiff(doc_id: int, text: str) -> bytes:
     "per-record at the documented libtiff seam.",
 )
 def multimodal_tiff_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "tiff_files", "tif", _render_tiff)
+    path = stage_doc_files(spark, sf_dir, "tiff_files", "tif", _render_tiff)
     bf = read_blobs(spark, path, "tif").select("path", "content")
 
     def op(batches):
@@ -1268,7 +1211,7 @@ def _render_g711(doc_id: int, text: str) -> bytes:
     samples = [dec(c) for c in md5_codes(text, _G711_N)]
     return encode_wav_g711(samples, law, sample_rate=8000, channels=1)
 def _stage_g711_files(spark: SparkSession, sf_dir: str) -> str:
-    return _stage_media_files(spark, sf_dir, "g711_files", "wav", _render_g711)
+    return stage_doc_files(spark, sf_dir, "g711_files", "wav", _render_g711)
 def _g711_oracle() -> str:
     from ...operators.g711 import ALAW_EXPAND_SQL, ULAW_EXPAND_SQL
 

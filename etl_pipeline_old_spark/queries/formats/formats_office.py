@@ -1,21 +1,17 @@
-"""Office/ebook/mail/code document extraction — a contiguous slice of the former
-queries/sources_formats.py monolith (split r13, r12 verdict #6).  The
-sources_formats facade imports the slices IN ORDER, so global registry
-order is byte-identical to the pre-split file; see that module's
-docstring for the family story."""
+"""Office/ebook/mail/code document extraction — one family of the file-
+format sources (see the package docstring)."""
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
-from ...sources.files import read_blobs
+from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
+from ...workdir import scratch_path
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -23,12 +19,7 @@ from .formats_containers import (  # noqa: F401 — shared helpers
     _pdf_pages,
 )
 
-from .formats_media import (  # noqa: F401 — shared helpers
-    _tag,
-    _BINARYFILE_SCHEMA,
-    _CORRUPT_MOD,
-    _stage_media_files,
-)
+from .formats_media import _CORRUPT_MOD
 
 from .formats_video_text import (  # noqa: F401 — shared helpers
     _docx_paragraphs,
@@ -63,7 +54,7 @@ from .formats_video_text import (  # noqa: F401 — shared helpers
     "— parse cost is the document's own size, map-side only.",
 )
 def pipeline_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "docx_files", "docx", _render_docx
     )
     bf = (
@@ -151,7 +142,7 @@ def _render_docx_full(doc_id: int, text: str) -> bytes:
     "cost bounded by each package's own bytes.",
 )
 def pipeline_docx_aux_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "docx_aux_files", "docx", _render_docx_full
     )
     bf = (
@@ -236,7 +227,7 @@ def _render_xlsx(doc_id: int, text: str) -> bytes:
     "media family.",
 )
 def multimodal_xlsx_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "xlsx_files", "xlsx", _render_xlsx
     )
     bf = (
@@ -310,7 +301,7 @@ def _render_pptx(doc_id: int, text: str) -> bytes:
     "Arrow kernel over binaryFile like the sibling document formats.",
 )
 def pipeline_pptx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pptx_files", "pptx", _render_pptx
     )
     bf = (
@@ -381,7 +372,7 @@ def _render_rtf(doc_id: int, text: str) -> bytes:
     "raise per record. Scale: map-side Arrow kernel over binaryFile.",
 )
 def pipeline_rtf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "rtf_files", "rtf", _render_rtf)
+    path = stage_doc_files(spark, sf_dir, "rtf_files", "rtf", _render_rtf)
     bf = (
         read_blobs(spark, path, "rtf")
         .select(
@@ -453,7 +444,7 @@ def _render_zip_encrypted(doc_id: int, text: str) -> bytes:
     "like the RC4 PDF path.",
 )
 def multimodal_zip_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "zipenc_files", "zip", _render_zip_encrypted
     )
     bf = (
@@ -529,7 +520,7 @@ def _render_corrupt_docx(doc_id: int, text: str) -> bytes:
     "pdf_ingest_quarantine for the OOXML path.",
 )
 def docx_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "docx_corrupt", "docx", _render_corrupt_docx
     )
     bf = read_blobs(spark, path, "docx").select("path", "content")
@@ -594,7 +585,7 @@ def _render_epub(doc_id: int, text: str) -> bytes:
     "document formats.",
 )
 def pipeline_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "epub_files", "epub", _render_epub
     )
     bf = (
@@ -680,7 +671,7 @@ def _render_mbox(doc_id: int, text: str) -> bytes:
     "one shard per record, like the WARC path.",
 )
 def pipeline_mail_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "mbox_files", "mbox", _render_mbox
     )
     bf = (
@@ -833,7 +824,7 @@ _CODE_CONTENT_SQL = """
     "evaluation prunable by any downstream predicate on keep.",
 )
 def pipeline_code_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "code_files", "src", _render_code
     )
     bf = (
@@ -954,7 +945,7 @@ def code_near_dedup_winnowing(
 ) -> DataFrame:
     from ...operators.dedup import md5_long
 
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "code_files", "src", _render_code
     )
     bf = (
@@ -1116,17 +1107,17 @@ def stream_docx_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...session import ensure_session_confs
 
     ensure_session_confs(spark)
-    feed = _stage_media_files(
+    feed = stage_doc_files(
         spark, sf_dir, "docx_files", "docx", _render_docx
     )
-    base = os.path.join(cache_root(), f"docx_stream_{_tag(sf_dir)}")
+    base = scratch_path("docx_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.docx")
         .option("maxFilesPerTrigger", 200)
         .load(feed)
@@ -1219,7 +1210,7 @@ _IPYNB_SCHEMA = (
     "pipeline_code_corpus.",
 )
 def pipeline_notebook_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "ipynb_files", "ipynb", _render_ipynb
     )
     bf = (
@@ -1298,7 +1289,7 @@ def _render_odf(doc_id: int, text: str) -> list:
         ["id", float(doc_id), doc_id % 2 == 0],
         [word1, None, None, float(len(text))],
     ]
-    return [("odt", write_odt(paras)), ("ods", write_ods(rows))]
+    return [(f"{doc_id}.odt", write_odt(paras)), (f"{doc_id}.ods", write_ods(rows))]
 
 
 @register(
@@ -1334,9 +1325,7 @@ def _render_odf(doc_id: int, text: str) -> list:
     "map-only until the sidecar-pair join on doc_id.",
 )
 def pipeline_odf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .formats_media import _stage_media_files_multi
-
-    path = _stage_media_files_multi(spark, sf_dir, "odf_files", _render_odf)
+    path = stage_doc_files(spark, sf_dir, "odf_files", None, _render_odf)
     bf = (
         read_blobs(spark, path, "od[ts]")
         .select(

@@ -1,21 +1,17 @@
-"""PDF document extraction (text, encryption, xref streams, images) — a contiguous slice of the former
-queries/sources_formats.py monolith (split r13, r12 verdict #6).  The
-sources_formats facade imports the slices IN ORDER, so global registry
-order is byte-identical to the pre-split file; see that module's
-docstring for the family story."""
+"""PDF document extraction (text, encryption, xref streams, images) — one
+family of the file-format sources (see the package docstring)."""
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
-from ...sources.files import read_blobs
+from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
+from ...workdir import scratch_path
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -24,13 +20,7 @@ from .formats_containers import (  # noqa: F401 — shared helpers
     _render_pdf,
 )
 
-from .formats_media import (  # noqa: F401 — shared helpers
-    _tag,
-    _BINARYFILE_SCHEMA,
-    _CORRUPT_MOD,
-    _ppm_pixel_sql,
-    _stage_media_files,
-)
+from .formats_media import _CORRUPT_MOD, _ppm_pixel_sql
 
 
 @register(
@@ -71,7 +61,7 @@ from .formats_media import (  # noqa: F401 — shared helpers
     "truncated stream raises per record inside the quarantine pattern.",
 )
 def pipeline_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
+    path = stage_doc_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
     bf = (
         read_blobs(spark, path, "pdf")
         .select(
@@ -159,7 +149,7 @@ def _render_pdf_encrypted(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_encrypted_extract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_enc_files", "pdf", _render_pdf_encrypted
     )
     bf = (
@@ -249,7 +239,7 @@ def _render_pdf_aes(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_aes_extract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_aes_files", "pdf", _render_pdf_aes
     )
     bf = (
@@ -318,7 +308,7 @@ def pipeline_pdf_aes_extract(
 def pipeline_pdf_xrefstream_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_xrefstream_files", "pdf",
         _render_pdf_xrefstream,
     )
@@ -428,7 +418,7 @@ def _render_pdf_any_shape(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_corpus_mixed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_mixed_files", "pdf", _render_pdf_any_shape
     )
     bf = (
@@ -515,18 +505,18 @@ def stream_pdf_xrefstream_ingest(
     from ...session import ensure_session_confs
 
     ensure_session_confs(spark)
-    feed = _stage_media_files(
+    feed = stage_doc_files(
         spark, sf_dir, "pdf_xrefstream_files", "pdf",
         _render_pdf_xrefstream,
     )
-    base = os.path.join(cache_root(), f"pdf_xrefstream_stream_{_tag(sf_dir)}")
+    base = scratch_path("pdf_xrefstream_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.pdf")
         .option("maxFilesPerTrigger", 200)
         .load(feed)
@@ -620,7 +610,7 @@ def _render_corrupt_pdf_xrefstream(doc_id: int, text: str) -> bytes:
 def pdf_xrefstream_quarantine(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_xrefstream_corrupt", "pdf",
         _render_corrupt_pdf_xrefstream,
     )
@@ -706,7 +696,7 @@ def _render_pdf_encoded(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_encoding_extract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_encoded_files", "pdf", _render_pdf_encoded
     )
     bf = (
@@ -802,7 +792,7 @@ def _render_pdf_with_images(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_images_extract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_image_files", "pdf", _render_pdf_with_images
     )
     bf = (
@@ -912,7 +902,7 @@ def _render_pdf_ccitt(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_ccitt_extract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_ccitt_files", "pdf", _render_pdf_ccitt
     )
     bf = (
@@ -1010,7 +1000,7 @@ def _render_pdf_figures(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_figure_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_figure_files", "pdf", _render_pdf_figures
     )
     bf = (
@@ -1097,7 +1087,7 @@ def _render_pdf_cid(doc_id: int, text: str) -> bytes:
     "per-doc frame.",
 )
 def pipeline_pdf_cid_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_cid_files", "pdf", _render_pdf_cid
     )
     bf = (
@@ -1202,7 +1192,7 @@ def _render_pdf_xrefstream(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_xrefstream_extract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_xrefstream_files", "pdf", _render_pdf_xrefstream
     )
     bf = (
@@ -1303,7 +1293,7 @@ def pipeline_document_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...operators.dedup import normalize_text
     from ...operators.text import lang_id
 
-    path = _stage_media_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
+    path = stage_doc_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
     bf = (
         read_blobs(spark, path, "pdf")
         .select(
@@ -1429,7 +1419,7 @@ def _render_pdf_legacy_filters(doc_id: int, text: str) -> bytes:
 def pipeline_pdf_legacy_filters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_legacy_filter_files", "pdf",
         _render_pdf_legacy_filters,
     )

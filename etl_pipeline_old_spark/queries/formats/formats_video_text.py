@@ -1,8 +1,5 @@
-"""Caption tracks and video-text pair corpora — a contiguous slice of the former
-queries/sources_formats.py monolith (split r13, r12 verdict #6).  The
-sources_formats facade imports the slices IN ORDER, so global registry
-order is byte-identical to the pre-split file; see that module's
-docstring for the family story."""
+"""Caption tracks and video-text pair corpora — one family of the file-
+format sources (see the package docstring)."""
 
 from __future__ import annotations
 
@@ -12,10 +9,9 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...workdir import cache_root
-from ...catalog import load_table
 from ...registry import register
-from ...sources.files import read_blobs
+from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files, stage_shard_files
+from ...workdir import run_dir, scratch_path, write_atomic
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -23,15 +19,12 @@ from .formats_containers import (  # noqa: F401 — shared helpers
     _render_pdf,
 )
 
-from .formats_media import (  # noqa: F401 — shared helpers
-    _tag,
-    _BINARYFILE_SCHEMA,
+from .formats_media import (
     _CORRUPT_MOD,
     _FRAME,
     _WAV_N,
     _Y4M_FRAMES,
     _render_y4m,
-    _stage_media_files,
     _wav_sample_sql,
     _y4m_pixel_sql,
     multimodal_audio_features,
@@ -86,7 +79,7 @@ from .formats_pdf import (  # noqa: F401 — shared helpers
     "per record inside the quarantine pattern.",
 )
 def multimodal_webm_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "webm_files", "webm", _render_webm)
+    path = stage_doc_files(spark, sf_dir, "webm_files", "webm", _render_webm)
     bf = (
         read_blobs(spark, path, "webm")
         .select(
@@ -190,7 +183,7 @@ def _render_srt(doc_id: int, text: str) -> bytes:
     "parse, no payload bytes touched.",
 )
 def multimodal_srt_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "srt_files", "srt", _render_srt)
+    path = stage_doc_files(spark, sf_dir, "srt_files", "srt", _render_srt)
     bf = (
         read_blobs(spark, path, "srt")
         .select(
@@ -255,7 +248,7 @@ def multimodal_srt_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "adds no extra pass over payload bytes.",
 )
 def multimodal_vtt_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "vtt_files", "vtt", _render_vtt)
+    path = stage_doc_files(spark, sf_dir, "vtt_files", "vtt", _render_vtt)
     bf = (
         read_blobs(spark, path, "vtt")
         .select(
@@ -318,7 +311,7 @@ def _render_corrupt_pdf(doc_id: int, text: str) -> bytes:
     "re-fetch.",
 )
 def pdf_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "pdf_corrupt", "pdf", _render_corrupt_pdf
     )
     bf = read_blobs(spark, path, "pdf").select("path", "content")
@@ -406,15 +399,15 @@ def stream_pdf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...session import ensure_session_confs
 
     ensure_session_confs(spark)
-    feed = _stage_media_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
-    base = os.path.join(cache_root(), f"pdf_stream_{_tag(sf_dir)}")
+    feed = stage_doc_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
+    base = scratch_path("pdf_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.pdf")
         .option("maxFilesPerTrigger", 200)
         .load(feed)
@@ -458,7 +451,7 @@ def pipeline_document_corpus_incremental(
     from ...operators.dedup import normalize_text
     from ...operators.text import lang_id
 
-    path = _stage_media_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
+    path = stage_doc_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
     bf = read_blobs(spark, path, "pdf").select("path", "content")
     doc_no = F.regexp_extract("path", r"(\d+)\.pdf$", 1).cast("long")
     base_bf = bf.filter(doc_no % 10 != 0)
@@ -539,10 +532,10 @@ def pipeline_document_corpus_incremental(
     "topology.",
 )
 def multimodal_caption_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    webm_path = _stage_media_files(
+    webm_path = stage_doc_files(
         spark, sf_dir, "webm_files", "webm", _render_webm
     )
-    vtt_path = _stage_media_files(spark, sf_dir, "vtt_files", "vtt", _render_vtt)
+    vtt_path = stage_doc_files(spark, sf_dir, "vtt_files", "vtt", _render_vtt)
 
     def vid_op(batches):
         import re as _re
@@ -637,11 +630,11 @@ def multimodal_caption_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_caption_coverage_mixed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    webm_path = _stage_media_files(
+    webm_path = stage_doc_files(
         spark, sf_dir, "webm_files", "webm", _render_webm
     )
-    vtt_path = _stage_media_files(spark, sf_dir, "vtt_files", "vtt", _render_vtt)
-    srt_path = _stage_media_files(spark, sf_dir, "srt_files", "srt", _render_srt)
+    vtt_path = stage_doc_files(spark, sf_dir, "vtt_files", "vtt", _render_vtt)
+    srt_path = stage_doc_files(spark, sf_dir, "srt_files", "srt", _render_srt)
 
     def vid_op(batches):
         import re as _re
@@ -848,9 +841,7 @@ _VT_GATED_SQL = f"""
     "clip metadata — exactly what a decode fleet consumes.",
 )
 def pipeline_video_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..web_corpus import _stage_shard_files
-
-    path = _stage_shard_files(
+    path = stage_shard_files(
         spark, sf_dir, "videotext_shards", _build_videotext_shard,
         suffix="tar",
     )
@@ -895,12 +886,7 @@ def pipeline_video_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "readback is a parallel scan; nothing is broadcast.",
 )
 def pipeline_video_text_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import uuid
-
-    from ..web_corpus import _stage_shard_files
-
-    path = _stage_shard_files(
+    path = stage_shard_files(
         spark, sf_dir, "videotext_shards", _build_videotext_shard,
         suffix="tar",
     )
@@ -957,13 +943,10 @@ def pipeline_video_text_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("doc_id") / _VT_DOCS_PER_SHARD).cast("int"),
     )
 
-    out_dir = os.path.join(cache_root(), f"videotext_export_{_tag(sf_dir)}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = run_dir("videotext_export", sf_dir)
+    os.makedirs(out_dir)
 
     def write_shard(pdf):
-        import os as os_
-
         import pandas as pd
 
         from ...operators.tar import encode_tar
@@ -976,12 +959,7 @@ def pipeline_video_text_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             members.append((f"{key}.webm", bytes(r.webm)))
             members.append((f"{key}.vtt", bytes(r.vtt)))
             members.append((f"{key}.json", r.meta.encode("utf-8")))
-        # uuid-keyed tmp: a speculative duplicate attempt writes its own
-        # file; whichever os.replace lands last publishes a complete tar
-        tmp = os_.path.join(out_dir, f".{sid:05d}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(encode_tar(members))
-        os_.replace(tmp, os_.path.join(out_dir, f"{sid:05d}.tar"))
+        write_atomic(out_dir, f"{sid:05d}.tar", encode_tar(members))
         return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
     gated.groupBy("shard").applyInPandas(
@@ -1108,9 +1086,7 @@ def _build_videotext_corrupt_shard(pdf, sid: int) -> bytes:
     "sites are shared code.",
 )
 def video_text_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..web_corpus import _stage_shard_files
-
-    path = _stage_shard_files(
+    path = stage_shard_files(
         spark, sf_dir, "videotext_corrupt", _build_videotext_corrupt_shard,
         suffix="tar",
     )
@@ -1198,21 +1174,20 @@ def stream_video_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ...session import ensure_session_confs
-    from ..web_corpus import _stage_shard_files
 
     ensure_session_confs(spark)
-    feed = _stage_shard_files(
+    feed = stage_shard_files(
         spark, sf_dir, "videotext_shards", _build_videotext_shard,
         suffix="tar",
     )
-    base = os.path.join(cache_root(), f"videotext_stream_{_tag(sf_dir)}")
+    base = scratch_path("videotext_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.tar")
         .option("maxFilesPerTrigger", 4)
         .load(feed)
@@ -1277,9 +1252,8 @@ def stream_video_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_video_text_pairs_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..web_corpus import _stage_shard_files
 
-    feed = _stage_shard_files(
+    feed = stage_shard_files(
         spark, sf_dir, "videotext_shards", _build_videotext_shard,
         suffix="tar",
     )
@@ -1400,25 +1374,14 @@ def _render_y4m_twin(doc_id: int, text: str) -> bytes:
 def _stage_y4m_neardup(spark: SparkSession, sf_dir: str) -> str:
     """Every doc ships {doc_id}a.y4m; every _VND_TWIN_MOD-th also ships
     the perturbed twin {doc_id}b.y4m."""
-    path = os.path.join(cache_root(), f"y4m_neardup_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        def write_part(rows):
-            for r in rows:
-                with open(os.path.join(path, f"{r.doc_id}a.y4m"), "wb") as fh:
-                    fh.write(_render_y4m(r.doc_id, r.text))
-                if r.doc_id % _VND_TWIN_MOD == 0:
-                    with open(
-                        os.path.join(path, f"{r.doc_id}b.y4m"), "wb"
-                    ) as fh:
-                        fh.write(_render_y4m_twin(r.doc_id, r.text))
+    def render(doc_id: int, text: str) -> list:
+        files = [(f"{doc_id}a.y4m", _render_y4m(doc_id, text))]
+        if doc_id % _VND_TWIN_MOD == 0:
+            files.append((f"{doc_id}b.y4m", _render_y4m_twin(doc_id, text)))
+        return files
 
-        d.foreachPartition(write_part)
-        open(marker, "w").close()
-    return path
+    return stage_doc_files(spark, sf_dir, "y4m_neardup", None, render)
 def _vnd_frame_arm_sql(f: int) -> str:
     cells = []
     for j in range(64):

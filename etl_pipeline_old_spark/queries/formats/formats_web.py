@@ -1,29 +1,19 @@
-"""Web REP surfaces, corpus hygiene, BSON shards — a contiguous slice of the former
-queries/sources_formats.py monolith (split r13, r12 verdict #6).  The
-sources_formats facade imports the slices IN ORDER, so global registry
-order is byte-identical to the pre-split file; see that module's
-docstring for the family story."""
+"""Web REP surfaces, corpus hygiene, BSON shards — one family of the file-
+format sources (see the package docstring)."""
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...workdir import cache_root
 from ...catalog import load_table
 from ...registry import register
-from ...sources.files import read_blobs
+from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
+from ...workdir import scratch_path
 
-from .formats_media import (  # noqa: F401 — shared helpers
-    _tag,
-    _BINARYFILE_SCHEMA,
-    _CORRUPT_MOD,
-    _stage_media_files,
-    _stage_media_files_multi,
-)
+from .formats_media import _CORRUPT_MOD
 
 from .formats_office import (  # noqa: F401 — shared helpers
     rep_pattern_rx,
@@ -218,7 +208,7 @@ _RSS_SCHEMA = (
     "this parse is its per-record kernel.",
 )
 def web_feed_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "feed_files", "xml", _render_feed
     )
     bf = (
@@ -357,7 +347,7 @@ def _render_nfkc_doc(doc_id: int, text: str) -> bytes:
     "runs immediately before dedup_exact's hash at 100 TB.",
 )
 def corpus_nfkc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "nfd_files", "txt", _render_nfkc_doc
     )
     bf = (
@@ -444,7 +434,7 @@ def _render_canonical_page(doc_id: int, text: str) -> bytes:
     "until the final partial-agg shuffle.",
 )
 def web_canonical_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "canonical_files", "html", _render_canonical_page
     )
     bf = (
@@ -692,7 +682,7 @@ def _render_robots_txt(doc_id: int, text: str) -> bytes:
 def web_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "robots_files", "txt", _render_robots_txt
     )
     bf = (
@@ -816,7 +806,7 @@ def web_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_rep_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "robots_files", "txt", _render_robots_txt
     )
     bf = (
@@ -1017,7 +1007,7 @@ _SITEMAP_INDEX_SCHEMA = (
     "fan-out join happens downstream at crawl scheduling.",
 )
 def web_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "sitemap_files", "xml", _render_sitemap
     )
     bf = (
@@ -1133,7 +1123,7 @@ def _render_bson(doc_id: int, text: str) -> bytes:
     "shape as the Avro and SQLite ingests.",
 )
 def multimodal_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "bson_files", "bson", _render_bson
     )
     bf = (
@@ -1210,17 +1200,17 @@ def stream_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...session import ensure_session_confs
 
     ensure_session_confs(spark)
-    feed = _stage_media_files(
+    feed = stage_doc_files(
         spark, sf_dir, "bson_files", "bson", _render_bson
     )
-    base = os.path.join(cache_root(), f"bson_stream_{_tag(sf_dir)}")
+    base = scratch_path("bson_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.bson")
         .option("maxFilesPerTrigger", 200)
         .load(feed)
@@ -1296,7 +1286,7 @@ def _render_corrupt_bson(doc_id: int, text: str) -> bytes:
     "a dead-letter table for re-fetch.",
 )
 def bson_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "bson_corrupt", "bson", _render_corrupt_bson
     )
     bf = read_blobs(spark, path, "bson").select("path", "content")
@@ -1352,12 +1342,12 @@ def _render_sitemap_tree(doc_id: int, text: str) -> list:
             '<urlset xmlns="http://www.sitemaps.org/schemas/'
             f'sitemap/0.9">{body}</urlset>'
         ).encode("utf-8")
-        files.append((f"c{i}.xml.gz", gzip.compress(child, mtime=0)))
+        files.append((f"{doc_id}.c{i}.xml.gz", gzip.compress(child, mtime=0)))
     index = (
         '<sitemapindex xmlns="http://www.sitemaps.org/schemas/'
         f'sitemap/0.9">{"".join(entries)}</sitemapindex>'
     ).encode("utf-8")
-    files.append(("idx.xml", index))
+    files.append((f"{doc_id}.idx.xml", index))
     return files
 @register(
     "web_sitemap_recursive",
@@ -1393,8 +1383,8 @@ def _render_sitemap_tree(doc_id: int, text: str) -> list:
     "distributes.",
 )
 def web_sitemap_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files_multi(
-        spark, sf_dir, "sitemap_tree_files", _render_sitemap_tree
+    path = stage_doc_files(
+        spark, sf_dir, "sitemap_tree_files", None, _render_sitemap_tree
     )
     idx = (
         read_blobs(spark, path, "idx.xml")
@@ -1495,7 +1485,7 @@ def web_sitemap_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the hash.",
 )
 def pipeline_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "sitemap_files", "xml", _render_sitemap
     )
     bf = (

@@ -38,8 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.files import read_blobs
-from .web_corpus import _stage_shard_files, _warc_uri
+from ..sources.files import BINARYFILE_SCHEMA, read_blobs, stage_shard_files
+from ..workdir import reap_warehouse, run_dir, scratch_path, table_name, write_atomic
+from .web_corpus import _warc_uri
 
 # The shared image pool: pages reference 1 + doc_id % 2 images, image k
 # of page doc_id is pool slot (doc_id + 7k) % _IMG_POOL — many pages
@@ -142,14 +143,14 @@ def _build_pair_shard(pdf, sid: int, render_pool=_render_pool_image) -> bytes:
 
 
 def _stage_pair_warc_shards(spark: SparkSession, sf_dir: str) -> str:
-    return _stage_shard_files(spark, sf_dir, "pair_warc_shards", _build_pair_shard)
+    return stage_shard_files(spark, sf_dir, "pair_warc_shards", _build_pair_shard)
 
 
 def _stage_pair_near_shards(spark: SparkSession, sf_dir: str) -> str:
     def build(pdf, sid: int) -> bytes:
         return _build_pair_shard(pdf, sid, render_pool=_render_pool_image_near)
 
-    return _stage_shard_files(spark, sf_dir, "pair_near_warc_shards", build)
+    return stage_shard_files(spark, sf_dir, "pair_near_warc_shards", build)
 
 
 def _pair_pages_frame(bf: DataFrame) -> DataFrame:
@@ -356,23 +357,20 @@ def _pair_stats(pages: DataFrame, imgs: DataFrame) -> DataFrame:
     "image pool.",
 )
 def stream_image_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     from ..session import ensure_session_confs
-    from ..workdir import cache_root
-    from .sources_formats import _BINARYFILE_SCHEMA, _tag
 
     ensure_session_confs(spark)
     feed = _stage_pair_warc_shards(spark, sf_dir)
-    base = os.path.join(cache_root(), f"pair_stream_{_tag(sf_dir)}")
+    base = scratch_path("pair_stream", sf_dir)
     pages_t, imgs_t, chk = base + "_pages", base + "_imgs", base + "_chk"
     for p in (pages_t, imgs_t, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.warc.gz")
         .option("maxFilesPerTrigger", 5)
         .load(feed)
@@ -562,7 +560,7 @@ def _stage_pair_torn_shards(spark: SparkSession, sf_dir: str) -> str:
 
         return _build_pair_shard(pdf, sid, render_pool=render)
 
-    return _stage_shard_files(spark, sf_dir, "pair_torn_warc_shards", build)
+    return stage_shard_files(spark, sf_dir, "pair_torn_warc_shards", build)
 
 
 def _quarantine_oracle() -> str:
@@ -792,18 +790,15 @@ def pipeline_image_text_pairs_incremental(
 )
 def stream_image_text_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import os
     import shutil
     import uuid
 
     from ..session import ensure_session_confs
-    from ..workdir import cache_root
-    from .sources_formats import _tag
 
     ensure_session_confs(spark)
     crawl = _stage_pair_warc_shards(spark, sf_dir)
     bf = read_blobs(spark, crawl, "warc.gz").select("content")
-    base = os.path.join(cache_root(), f"pair_ssj_{_tag(sf_dir)}")
+    base = scratch_path("pair_ssj", sf_dir)
     pages_feed, imgs_feed = base + "_pages", base + "_imgs"
     for p in (pages_feed, imgs_feed):
         shutil.rmtree(p, ignore_errors=True)
@@ -952,11 +947,12 @@ POOL_BUCKETS = 8
 def pipeline_image_text_pairs_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.dedup import materialize_release
-    from ..workdir import reap_warehouse, table_name
-    from .sources_formats import _tag
+    import os
 
-    tag = _tag(sf_dir).replace(".", "_")  # dots would split the table name
+    from ..operators.dedup import materialize_release
+
+    # dots would split the table name
+    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     path = _stage_pair_warc_shards(spark, sf_dir)
     bf = read_blobs(spark, path, "warc.gz").select("content")
     # big side: pages reduce to (lang, uri) granularity before ANY join —
@@ -1047,7 +1043,7 @@ def _build_webdataset_shard(pdf, sid: int) -> bytes:
 
 
 def _stage_webdataset_shards(spark: SparkSession, sf_dir: str) -> str:
-    return _stage_shard_files(
+    return stage_shard_files(
         spark, sf_dir, "webdataset_shards", _build_webdataset_shard, suffix="tar"
     )
 
@@ -1199,11 +1195,6 @@ _EXPORT_DOCS_PER_SHARD = 50
 )
 def multimodal_webdataset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import uuid
-
-    from ..workdir import cache_root
-    from .sources_formats import _tag
 
     crawl = _stage_pair_warc_shards(spark, sf_dir)
     bf = read_blobs(spark, crawl, "warc.gz").select("content")
@@ -1225,9 +1216,8 @@ def multimodal_webdataset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("shard"),
     )
 
-    out_dir = os.path.join(cache_root(), f"webdataset_export_{_tag(sf_dir)}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = run_dir("webdataset_export", sf_dir)
+    os.makedirs(out_dir)
 
     def write_shard(pdf):
         import json as _json
@@ -1253,15 +1243,7 @@ def multimodal_webdataset_export(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).encode("utf-8"),
                 )
             )
-        # uuid-keyed tmp name: a retried / speculative duplicate attempt
-        # for the same shard group writes its OWN tmp file, and whichever
-        # os.replace lands last publishes a complete archive — two
-        # attempts sharing one fixed tmp path could interleave writes and
-        # publish a corrupt tar.
-        tmp = os.path.join(out_dir, f".{sid:05d}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(encode_tar(members))
-        os.replace(tmp, os.path.join(out_dir, f"{sid:05d}.tar"))
+        write_atomic(out_dir, f"{sid:05d}.tar", encode_tar(members))
         return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
     samples.groupBy("shard").applyInPandas(

@@ -44,8 +44,7 @@ from pyspark.sql import Window
 
 from ..catalog import load_table
 from ..registry import register
-from ..workdir import cache_root
-from .sources_formats import _tag
+from ..workdir import stage_fixture, write_atomic
 
 _TS_BASE = 1_700_000_000_000  # deterministic commit timestamps (ms)
 
@@ -60,188 +59,187 @@ def _stage_delta_table(spark: SparkSession, sf_dir: str) -> str:
     questions: v0 appends era0 (doc_id%2=0) + metaData/protocol,
     v1 appends era1, v2 removes lang='zh' — plus the v2 checkpoint
     parquet and ``_last_checkpoint``."""
-    root = os.path.join(cache_root(), f"delta_{_tag(sf_dir)}")
-    marker = os.path.join(root, "_STAGED")
-    if os.path.exists(marker):
-        return root
-    log_dir = os.path.join(root, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang", "n_chars")
-        .withColumn("era", (F.col("doc_id") % 2).cast("int"))
-    )
-    schema_string = d.drop("era").schema.json()
 
-    def write_data_file(pdf):
-        import os as os_
-        import uuid as uuid_
+    def build(root: str) -> None:
+        log_dir = os.path.join(root, "_delta_log")
+        os.makedirs(log_dir, exist_ok=True)
+        d = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text", "lang", "n_chars")
+            .withColumn("era", (F.col("doc_id") % 2).cast("int"))
+        )
+        schema_string = d.drop("era").schema.json()
 
-        import pandas as pd
+        def write_data_file(pdf):
+            import os as os_
+
+            import pandas as pd
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            pdf = pdf.sort_values("doc_id")
+            era = int(pdf["era"].iloc[0])
+            lang = str(pdf["lang"].iloc[0])
+            rel = os_.path.join("data", f"era{era}", f"lang={lang}", "part-00000.parquet")
+            final = os_.path.join(root, rel)
+            os_.makedirs(os_.path.dirname(final), exist_ok=True)
+            buf = pa.BufferOutputStream()
+            pq.write_table(
+                pa.Table.from_pandas(pdf.drop(columns=["era"]), preserve_index=False),
+                buf,
+                compression="snappy",
+            )
+            write_atomic(
+                os_.path.dirname(final), os_.path.basename(final), buf.getvalue().to_pybytes()
+            )
+            return pd.DataFrame(
+                {
+                    "era": [era],
+                    "lang": [lang],
+                    "rel_path": [rel],
+                    "n": [len(pdf)],
+                    "size": [os_.path.getsize(final)],
+                }
+            )
+
+        # the ONLY collect of the staging: per-file METADATA rows (what a
+        # Delta writer carries into its add actions)
+        files = (
+            d.groupBy("era", "lang")
+            .applyInPandas(
+                write_data_file,
+                "era int, lang string, rel_path string, n long, size long",
+            )
+            .collect()
+        )
+
+        def add_action(row, ts: int) -> dict:
+            return {
+                "add": {
+                    "path": row.rel_path,
+                    "partitionValues": {"lang": row.lang},
+                    "size": row.size,
+                    "modificationTime": ts,
+                    "dataChange": True,
+                    "stats": json.dumps({"numRecords": row.n}),
+                }
+            }
+
+        def remove_action(row, ts: int) -> dict:
+            return {
+                "remove": {
+                    "path": row.rel_path,
+                    "deletionTimestamp": ts,
+                    "dataChange": True,
+                }
+            }
+
+        def write_commit(version: int, actions: list[dict]) -> None:
+            path = os.path.join(log_dir, _commit_name(version))
+            with open(path, "w", encoding="utf-8") as fh:
+                for a in actions:
+                    fh.write(json.dumps(a, sort_keys=True) + "\n")
+
+        era0 = sorted((r for r in files if r.era == 0), key=lambda r: r.lang)
+        era1 = sorted((r for r in files if r.era == 1), key=lambda r: r.lang)
+
+        write_commit(
+            0,
+            [
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+                {
+                    "metaData": {
+                        "id": "00000000-0000-0000-0000-00000000d014",
+                        "format": {"provider": "parquet", "options": {}},
+                        "schemaString": schema_string,
+                        "partitionColumns": ["lang"],
+                        "configuration": {},
+                        "createdTime": _TS_BASE,
+                    }
+                },
+                *[add_action(r, _TS_BASE + 1) for r in era0],
+                {
+                    "commitInfo": {
+                        "timestamp": _TS_BASE + 1,
+                        "operation": "WRITE",
+                    }
+                },
+            ],
+        )
+        write_commit(1, [add_action(r, _TS_BASE + 2) for r in era1])
+        write_commit(
+            2,
+            [
+                remove_action(r, _TS_BASE + 3)
+                for r in era0 + era1
+                if r.lang == "zh"
+            ],
+        )
+
+        # v2 checkpoint: the protocol's flattened action rows as parquet —
+        # one row per action, struct columns add/remove/metaData/protocol
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pdf = pdf.sort_values("doc_id")
-        era = int(pdf["era"].iloc[0])
-        lang = str(pdf["lang"].iloc[0])
-        rel = os_.path.join("data", f"era{era}", f"lang={lang}", "part-00000.parquet")
-        final = os_.path.join(root, rel)
-        os_.makedirs(os_.path.dirname(final), exist_ok=True)
-        tmp = f"{final}.{uuid_.uuid4().hex}.tmp"
+        live = [r for r in era0 + era1 if r.lang != "zh"]
+        removed = [r for r in era0 + era1 if r.lang == "zh"]
+        cp_rows = (
+            [
+                {
+                    "protocol": {"minReaderVersion": 1, "minWriterVersion": 2},
+                    "metaData": None,
+                    "add": None,
+                    "remove": None,
+                },
+                {
+                    "protocol": None,
+                    "metaData": {
+                        "id": "00000000-0000-0000-0000-00000000d014",
+                        "schemaString": schema_string,
+                        "partitionColumns": ["lang"],
+                    },
+                    "add": None,
+                    "remove": None,
+                },
+            ]
+            + [
+                {
+                    "protocol": None,
+                    "metaData": None,
+                    "add": {
+                        "path": r.rel_path,
+                        "partitionValues": {"lang": r.lang},
+                        "size": r.size,
+                        "modificationTime": _TS_BASE + 1,
+                        "dataChange": False,
+                        "stats": json.dumps({"numRecords": r.n}),
+                    },
+                    "remove": None,
+                }
+                for r in live
+            ]
+            + [
+                {
+                    "protocol": None,
+                    "metaData": None,
+                    "add": None,
+                    "remove": {
+                        "path": r.rel_path,
+                        "deletionTimestamp": _TS_BASE + 3,
+                        "dataChange": False,
+                    },
+                }
+                for r in removed
+            ]
+        )
+        cp_path = os.path.join(log_dir, f"{2:020d}.checkpoint.parquet")
         pq.write_table(
-            pa.Table.from_pandas(pdf.drop(columns=["era"]), preserve_index=False),
-            tmp,
-            compression="snappy",
+            pa.Table.from_pylist(cp_rows), cp_path, compression="snappy"
         )
-        os_.replace(tmp, final)
-        return pd.DataFrame(
-            {
-                "era": [era],
-                "lang": [lang],
-                "rel_path": [rel],
-                "n": [len(pdf)],
-                "size": [os_.path.getsize(final)],
-            }
-        )
+        with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
+            json.dump({"version": 2, "size": len(cp_rows)}, fh)
 
-    # the ONLY collect of the staging: per-file METADATA rows (what a
-    # Delta writer carries into its add actions)
-    files = (
-        d.groupBy("era", "lang")
-        .applyInPandas(
-            write_data_file,
-            "era int, lang string, rel_path string, n long, size long",
-        )
-        .collect()
-    )
-
-    def add_action(row, ts: int) -> dict:
-        return {
-            "add": {
-                "path": row.rel_path,
-                "partitionValues": {"lang": row.lang},
-                "size": row.size,
-                "modificationTime": ts,
-                "dataChange": True,
-                "stats": json.dumps({"numRecords": row.n}),
-            }
-        }
-
-    def remove_action(row, ts: int) -> dict:
-        return {
-            "remove": {
-                "path": row.rel_path,
-                "deletionTimestamp": ts,
-                "dataChange": True,
-            }
-        }
-
-    def write_commit(version: int, actions: list[dict]) -> None:
-        path = os.path.join(log_dir, _commit_name(version))
-        with open(path, "w", encoding="utf-8") as fh:
-            for a in actions:
-                fh.write(json.dumps(a, sort_keys=True) + "\n")
-
-    era0 = sorted((r for r in files if r.era == 0), key=lambda r: r.lang)
-    era1 = sorted((r for r in files if r.era == 1), key=lambda r: r.lang)
-
-    write_commit(
-        0,
-        [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            {
-                "metaData": {
-                    "id": "00000000-0000-0000-0000-00000000d014",
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": schema_string,
-                    "partitionColumns": ["lang"],
-                    "configuration": {},
-                    "createdTime": _TS_BASE,
-                }
-            },
-            *[add_action(r, _TS_BASE + 1) for r in era0],
-            {
-                "commitInfo": {
-                    "timestamp": _TS_BASE + 1,
-                    "operation": "WRITE",
-                }
-            },
-        ],
-    )
-    write_commit(1, [add_action(r, _TS_BASE + 2) for r in era1])
-    write_commit(
-        2,
-        [
-            remove_action(r, _TS_BASE + 3)
-            for r in era0 + era1
-            if r.lang == "zh"
-        ],
-    )
-
-    # v2 checkpoint: the protocol's flattened action rows as parquet —
-    # one row per action, struct columns add/remove/metaData/protocol
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    live = [r for r in era0 + era1 if r.lang != "zh"]
-    removed = [r for r in era0 + era1 if r.lang == "zh"]
-    cp_rows = (
-        [
-            {
-                "protocol": {"minReaderVersion": 1, "minWriterVersion": 2},
-                "metaData": None,
-                "add": None,
-                "remove": None,
-            },
-            {
-                "protocol": None,
-                "metaData": {
-                    "id": "00000000-0000-0000-0000-00000000d014",
-                    "schemaString": schema_string,
-                    "partitionColumns": ["lang"],
-                },
-                "add": None,
-                "remove": None,
-            },
-        ]
-        + [
-            {
-                "protocol": None,
-                "metaData": None,
-                "add": {
-                    "path": r.rel_path,
-                    "partitionValues": {"lang": r.lang},
-                    "size": r.size,
-                    "modificationTime": _TS_BASE + 1,
-                    "dataChange": False,
-                    "stats": json.dumps({"numRecords": r.n}),
-                },
-                "remove": None,
-            }
-            for r in live
-        ]
-        + [
-            {
-                "protocol": None,
-                "metaData": None,
-                "add": None,
-                "remove": {
-                    "path": r.rel_path,
-                    "deletionTimestamp": _TS_BASE + 3,
-                    "dataChange": False,
-                },
-            }
-            for r in removed
-        ]
-    )
-    cp_path = os.path.join(log_dir, f"{2:020d}.checkpoint.parquet")
-    pq.write_table(
-        pa.Table.from_pylist(cp_rows), cp_path, compression="snappy"
-    )
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        json.dump({"version": 2, "size": len(cp_rows)}, fh)
-    open(marker, "w").close()
-    return root
+    return stage_fixture("delta", sf_dir, build)
 
 
 def _log_actions(spark: SparkSession, root: str) -> DataFrame:
@@ -439,9 +437,8 @@ def lake_delta_checkpoint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_delta_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _stage_delta_table(spark, sf_dir)
-    root = os.path.join(cache_root(), f"delta_torn_{_tag(sf_dir)}")
-    marker = os.path.join(root, "_STAGED")
-    if not os.path.exists(marker):
+
+    def build(root: str) -> None:
         import shutil
 
         log_src = os.path.join(src, "_delta_log")
@@ -457,8 +454,8 @@ def lake_delta_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         blob[len(blob) // 2 : len(blob) // 2 + 9] = b"\x00GARBAGE\x00"
         with open(torn, "wb") as fh:
             fh.write(blob)
-        open(marker, "w").close()
 
+    root = stage_fixture("delta_torn", sf_dir, build)
     log_glob = os.path.join(root, "_delta_log", "*.json")
     # explicit-schema from_json over text lines: a torn line parses to
     # NULL (Spark disallows corrupt-record-only scans of read.json, and

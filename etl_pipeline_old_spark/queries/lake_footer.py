@@ -33,8 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, table_path
 from ..registry import register
-from ..workdir import cache_root
-from .sources_formats import _tag
+from ..workdir import stage_fixture, write_atomic
 
 # Controlled physical layout for the staged documents lake: files of
 # _DOCS_PER_FILE docs, row groups of _DOCS_PER_RG — so every row-group
@@ -218,10 +217,7 @@ def _stage_docs_lake(
     _DOCS_PER_RG — written from the executors with pyarrow (a THIRD
     parquet producer, independent of both this codec and DuckDB)."""
     kind = "pqlake" if compression == "snappy" else f"pqlake_{compression}"
-    path = os.path.join(cache_root(), f"{kind}_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text", "lang", "source", "n_chars")
@@ -231,9 +227,6 @@ def _stage_docs_lake(
         )
 
         def write_file(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
             import pyarrow as pa
             import pyarrow.parquet as pq
@@ -243,18 +236,18 @@ def _stage_docs_lake(
             tbl = pa.Table.from_pandas(
                 pdf.drop(columns=["file_id"]), preserve_index=False
             )
-            tmp = os_.path.join(path, f".{fid:05d}.{uuid_.uuid4().hex}.tmp")
+            buf = pa.BufferOutputStream()
             pq.write_table(
-                tbl, tmp, row_group_size=_DOCS_PER_RG, compression=compression
+                tbl, buf, row_group_size=_DOCS_PER_RG, compression=compression
             )
-            os_.replace(tmp, os_.path.join(path, f"{fid:05d}.parquet"))
+            write_atomic(path, f"{fid:05d}.parquet", buf.getvalue().to_pybytes())
             return pd.DataFrame({"file_id": [fid], "n": [len(pdf)]})
 
         d.groupBy("file_id").applyInPandas(
             write_file, "file_id long, n long"
         ).collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture(kind, sf_dir, build)
 
 
 def _lake_files(path: str) -> list[str]:
@@ -604,10 +597,8 @@ def _stage_codec_matrix_lake(spark: SparkSession, sf_dir: str) -> str:
     """The documents lake with the page codec CYCLED per file — the
     mixed-producer reality of a long-lived lake (writers upgrade their
     default codec over the years; the table keeps every era's files)."""
-    path = os.path.join(cache_root(), f"pqlake_matrix_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text", "n_chars")
@@ -617,9 +608,6 @@ def _stage_codec_matrix_lake(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_file(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
             import pyarrow as pa
             import pyarrow.parquet as pq
@@ -630,23 +618,23 @@ def _stage_codec_matrix_lake(spark: SparkSession, sf_dir: str) -> str:
             tbl = pa.Table.from_pandas(
                 pdf.drop(columns=["file_id"]), preserve_index=False
             )
-            tmp = os_.path.join(path, f".{fid:05d}.{uuid_.uuid4().hex}.tmp")
+            buf = pa.BufferOutputStream()
             pq.write_table(
                 tbl,
-                tmp,
+                buf,
                 row_group_size=_DOCS_PER_RG,
                 compression=comp,
                 # alternate page versions too — the v1/v2 mixed-era lake
                 data_page_version="2.0" if fid % 2 else "1.0",
             )
-            os_.replace(tmp, os_.path.join(path, f"{fid:05d}.parquet"))
+            write_atomic(path, f"{fid:05d}.parquet", buf.getvalue().to_pybytes())
             return pd.DataFrame({"file_id": [fid], "n": [len(pdf)]})
 
         d.groupBy("file_id").applyInPandas(
             write_file, "file_id long, n long"
         ).collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("pqlake_matrix", sf_dir, build)
 
 
 @register(
@@ -717,16 +705,12 @@ def _stage_torn_lake(spark: SparkSession, sf_dir: str) -> str:
     0 intact, 1 magic clipped, 2 footer length past start-of-file,
     3 footer Thrift scribbled with 0xFF."""
     src = _stage_docs_lake(spark, sf_dir)
-    path = os.path.join(cache_root(), f"pqlake_torn_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         files = _lake_files(src)
         paths = _paths_df(spark, [(p,) for p in files], "path string")
 
         def corrupt_part(rows):
             import struct as struct_
-            import uuid as uuid_
 
             for r in rows:
                 with open(r.path, "rb") as fh:
@@ -741,14 +725,11 @@ def _stage_torn_lake(spark: SparkSession, sf_dir: str) -> str:
                     flen = struct_.unpack("<I", bytes(blob[-8:-4]))[0]
                     start = len(blob) - 8 - flen
                     blob[start : start + min(64, flen)] = b"\xff" * min(64, flen)
-                tmp = os.path.join(path, f".{fid:05d}.{uuid_.uuid4().hex}.tmp")
-                with open(tmp, "wb") as fh:
-                    fh.write(bytes(blob))
-                os.replace(tmp, os.path.join(path, f"{fid:05d}.parquet"))
+                write_atomic(path, f"{fid:05d}.parquet", bytes(blob))
 
         paths.foreachPartition(corrupt_part)
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("pqlake_torn", sf_dir, build)
 
 
 @register(

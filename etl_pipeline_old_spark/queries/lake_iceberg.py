@@ -44,8 +44,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ..session import scan_partitions
-from ..workdir import cache_root
-from .sources_formats import _tag
+from ..workdir import stage_fixture, write_atomic
 
 _SNAP_BASE = 3_000_000_000_001  # deterministic snapshot ids (spec: int64)
 _TS_BASE = 1_700_000_000_000  # deterministic commit timestamps (ms)
@@ -119,163 +118,160 @@ _ST_DELETED = 2
 def _stage_iceberg_table(spark: SparkSession, sf_dir: str) -> str:
     """Three-snapshot Iceberg-shaped table over lang-partitioned parquet:
     s1 appends era0 (doc_id%2=0), s2 appends era1, s3 deletes lang='zh'."""
-    root = os.path.join(cache_root(), f"iceberg_{_tag(sf_dir)}")
-    marker = os.path.join(root, "_STAGED")
-    if os.path.exists(marker):
-        return root
-    from ..operators.avro import write_avro
 
-    meta_dir = os.path.join(root, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang", "n_chars")
-        .withColumn("era", (F.col("doc_id") % 2).cast("int"))
-    )
+    def build(root: str) -> None:
+        from ..operators.avro import write_avro
 
-    def write_data_file(pdf):
-        import os as os_
-        import uuid as uuid_
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pdf = pdf.sort_values("doc_id")
-        era = int(pdf["era"].iloc[0])
-        lang = str(pdf["lang"].iloc[0])
-        part_dir = os_.path.join(root, "data", f"era{era}", f"lang={lang}")
-        os_.makedirs(part_dir, exist_ok=True)
-        final = os_.path.join(part_dir, "part-00000.parquet")
-        tmp = f"{final}.{uuid_.uuid4().hex}.tmp"
-        pq.write_table(
-            pa.Table.from_pandas(pdf.drop(columns=["era"]), preserve_index=False),
-            tmp,
-            compression="snappy",
+        meta_dir = os.path.join(root, "metadata")
+        os.makedirs(meta_dir, exist_ok=True)
+        d = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text", "lang", "n_chars")
+            .withColumn("era", (F.col("doc_id") % 2).cast("int"))
         )
-        os_.replace(tmp, final)
-        return pd.DataFrame(
-            {
-                "era": [era],
-                "lang": [lang],
-                "path": [final],
-                "n": [len(pdf)],
-                "size": [os_.path.getsize(final)],
+
+        def write_data_file(pdf):
+            import os as os_
+
+            import pandas as pd
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            pdf = pdf.sort_values("doc_id")
+            era = int(pdf["era"].iloc[0])
+            lang = str(pdf["lang"].iloc[0])
+            part_dir = os_.path.join(root, "data", f"era{era}", f"lang={lang}")
+            os_.makedirs(part_dir, exist_ok=True)
+            final = os_.path.join(part_dir, "part-00000.parquet")
+            buf = pa.BufferOutputStream()
+            pq.write_table(
+                pa.Table.from_pandas(pdf.drop(columns=["era"]), preserve_index=False),
+                buf,
+                compression="snappy",
+            )
+            write_atomic(part_dir, "part-00000.parquet", buf.getvalue().to_pybytes())
+            return pd.DataFrame(
+                {
+                    "era": [era],
+                    "lang": [lang],
+                    "path": [final],
+                    "n": [len(pdf)],
+                    "size": [os_.path.getsize(final)],
+                }
+            )
+
+        # the ONLY collect of the staging: per-file METADATA rows (the
+        # commit information an Iceberg writer carries to its manifest)
+        files = (
+            d.groupBy("era", "lang")
+            .applyInPandas(write_data_file, "era int, lang string, path string, n long, size long")
+            .collect()
+        )
+
+        def entry(row, status: int, snap: int) -> dict:
+            return {
+                "status": status,
+                "snapshot_id": snap,
+                "data_file": {
+                    "file_path": row.path,
+                    "file_format": "PARQUET",
+                    "partition": {"lang": row.lang},
+                    "record_count": row.n,
+                    "file_size_in_bytes": row.size,
+                },
             }
+
+        def write_manifest(name: str, entries: list[dict]) -> tuple[str, int]:
+            blob = write_avro(entries, _MANIFEST_SCHEMA, codec="deflate")
+            path = os.path.join(meta_dir, name)
+            with open(path, "wb") as fh:
+                fh.write(blob)
+            return path, len(blob)
+
+        def summary(entries: list[dict]) -> list[dict]:
+            langs = sorted(e["data_file"]["partition"]["lang"] for e in entries)
+            return [
+                {
+                    "contains_null": False,
+                    "lower_bound": langs[0].encode(),
+                    "upper_bound": langs[-1].encode(),
+                }
+            ]
+
+        era0 = sorted((r for r in files if r.era == 0), key=lambda r: r.lang)
+        era1 = sorted((r for r in files if r.era == 1), key=lambda r: r.lang)
+        s1, s2, s3 = _SNAP_BASE, _SNAP_BASE + 1, _SNAP_BASE + 2
+
+        m0_entries = [entry(r, _ST_ADDED, s1) for r in era0]
+        m0_path, m0_len = write_manifest("m-era0.avro", m0_entries)
+        m1_entries = [entry(r, _ST_ADDED, s2) for r in era1]
+        m1_path, m1_len = write_manifest("m-era1.avro", m1_entries)
+        # s3: one rewritten manifest — zh entries flagged DELETED, rest EXISTING
+        m3_entries = [
+            entry(r, _ST_DELETED if r.lang == "zh" else _ST_EXISTING, s3)
+            for r in era0 + era1
+        ]
+        m3_path, m3_len = write_manifest("m-postdelete.avro", m3_entries)
+
+        def write_list(name: str, manifests: list[tuple[str, int, list, int]]) -> str:
+            recs = [
+                {
+                    "manifest_path": p,
+                    "manifest_length": ln,
+                    "partition_spec_id": 0,
+                    "added_snapshot_id": snap,
+                    "partitions": summ,
+                }
+                for p, ln, summ, snap in manifests
+            ]
+            blob = write_avro(recs, _MANIFEST_LIST_SCHEMA, codec="deflate")
+            path = os.path.join(meta_dir, name)
+            with open(path, "wb") as fh:
+                fh.write(blob)
+            return path
+
+        l1 = write_list("snap-1.avro", [(m0_path, m0_len, summary(m0_entries), s1)])
+        l2 = write_list(
+            "snap-2.avro",
+            [
+                (m0_path, m0_len, summary(m0_entries), s1),
+                (m1_path, m1_len, summary(m1_entries), s2),
+            ],
         )
+        l3 = write_list("snap-3.avro", [(m3_path, m3_len, summary(m3_entries), s3)])
 
-    # the ONLY collect of the staging: per-file METADATA rows (the
-    # commit information an Iceberg writer carries to its manifest)
-    files = (
-        d.groupBy("era", "lang")
-        .applyInPandas(write_data_file, "era int, lang string, path string, n long, size long")
-        .collect()
-    )
-
-    def entry(row, status: int, snap: int) -> dict:
-        return {
-            "status": status,
-            "snapshot_id": snap,
-            "data_file": {
-                "file_path": row.path,
-                "file_format": "PARQUET",
-                "partition": {"lang": row.lang},
-                "record_count": row.n,
-                "file_size_in_bytes": row.size,
-            },
+        meta = {
+            "format-version": 2,
+            "table-uuid": "00000000-0000-0000-0000-000000000014",
+            "location": root,
+            "current-snapshot-id": s3,
+            "snapshots": [
+                {
+                    "snapshot-id": s1,
+                    "timestamp-ms": _TS_BASE + 1,
+                    "manifest-list": l1,
+                    "summary": {"operation": "append"},
+                },
+                {
+                    "snapshot-id": s2,
+                    "timestamp-ms": _TS_BASE + 2,
+                    "manifest-list": l2,
+                    "summary": {"operation": "append"},
+                },
+                {
+                    "snapshot-id": s3,
+                    "timestamp-ms": _TS_BASE + 3,
+                    "manifest-list": l3,
+                    "summary": {"operation": "delete"},
+                },
+            ],
         }
+        with open(os.path.join(meta_dir, "v3.metadata.json"), "w") as fh:
+            json.dump(meta, fh, sort_keys=True)
+        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
+            fh.write("3")
 
-    def write_manifest(name: str, entries: list[dict]) -> tuple[str, int]:
-        blob = write_avro(entries, _MANIFEST_SCHEMA, codec="deflate")
-        path = os.path.join(meta_dir, name)
-        with open(path, "wb") as fh:
-            fh.write(blob)
-        return path, len(blob)
-
-    def summary(entries: list[dict]) -> list[dict]:
-        langs = sorted(e["data_file"]["partition"]["lang"] for e in entries)
-        return [
-            {
-                "contains_null": False,
-                "lower_bound": langs[0].encode(),
-                "upper_bound": langs[-1].encode(),
-            }
-        ]
-
-    era0 = sorted((r for r in files if r.era == 0), key=lambda r: r.lang)
-    era1 = sorted((r for r in files if r.era == 1), key=lambda r: r.lang)
-    s1, s2, s3 = _SNAP_BASE, _SNAP_BASE + 1, _SNAP_BASE + 2
-
-    m0_entries = [entry(r, _ST_ADDED, s1) for r in era0]
-    m0_path, m0_len = write_manifest("m-era0.avro", m0_entries)
-    m1_entries = [entry(r, _ST_ADDED, s2) for r in era1]
-    m1_path, m1_len = write_manifest("m-era1.avro", m1_entries)
-    # s3: one rewritten manifest — zh entries flagged DELETED, rest EXISTING
-    m3_entries = [
-        entry(r, _ST_DELETED if r.lang == "zh" else _ST_EXISTING, s3)
-        for r in era0 + era1
-    ]
-    m3_path, m3_len = write_manifest("m-postdelete.avro", m3_entries)
-
-    def write_list(name: str, manifests: list[tuple[str, int, list, int]]) -> str:
-        recs = [
-            {
-                "manifest_path": p,
-                "manifest_length": ln,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snap,
-                "partitions": summ,
-            }
-            for p, ln, summ, snap in manifests
-        ]
-        blob = write_avro(recs, _MANIFEST_LIST_SCHEMA, codec="deflate")
-        path = os.path.join(meta_dir, name)
-        with open(path, "wb") as fh:
-            fh.write(blob)
-        return path
-
-    l1 = write_list("snap-1.avro", [(m0_path, m0_len, summary(m0_entries), s1)])
-    l2 = write_list(
-        "snap-2.avro",
-        [
-            (m0_path, m0_len, summary(m0_entries), s1),
-            (m1_path, m1_len, summary(m1_entries), s2),
-        ],
-    )
-    l3 = write_list("snap-3.avro", [(m3_path, m3_len, summary(m3_entries), s3)])
-
-    meta = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-000000000014",
-        "location": root,
-        "current-snapshot-id": s3,
-        "snapshots": [
-            {
-                "snapshot-id": s1,
-                "timestamp-ms": _TS_BASE + 1,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": s2,
-                "timestamp-ms": _TS_BASE + 2,
-                "manifest-list": l2,
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": s3,
-                "timestamp-ms": _TS_BASE + 3,
-                "manifest-list": l3,
-                "summary": {"operation": "delete"},
-            },
-        ],
-    }
-    with open(os.path.join(meta_dir, "v3.metadata.json"), "w") as fh:
-        json.dump(meta, fh, sort_keys=True)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("3")
-    open(marker, "w").close()
-    return root
+    return stage_fixture("iceberg", sf_dir, build)
 
 
 def _load_metadata(root: str) -> dict:
@@ -444,47 +440,44 @@ def _stage_torn_iceberg(spark: SparkSession, sf_dir: str) -> str:
     """Copy of the table's metadata tree with s2's era1 manifest torn
     mid-block (sync-marker damage) — s1 and s3 must stay readable."""
     src = _stage_iceberg_table(spark, sf_dir)
-    root = os.path.join(cache_root(), f"iceberg_torn_{_tag(sf_dir)}")
-    marker = os.path.join(root, "_STAGED")
-    if os.path.exists(marker):
-        return root
-    import shutil
+    def build(root: str) -> None:
+        import shutil
 
-    from ..operators.avro import read_avro, write_avro
+        from ..operators.avro import read_avro, write_avro
 
-    meta_src = os.path.join(src, "metadata")
-    meta_dst = os.path.join(root, "metadata")
-    shutil.rmtree(meta_dst, ignore_errors=True)
-    shutil.copytree(meta_src, meta_dst)
-    # repoint the copied metadata at the copy — manifest lists are
-    # deflate-compressed Avro, so they are REWRITTEN through the codec
-    # (a byte-level path patch cannot reach inside compressed blocks);
-    # data_file paths stay shared and untouched
-    for name in os.listdir(meta_dst):
-        p = os.path.join(meta_dst, name)
-        if name.startswith("snap-") and name.endswith(".avro"):
-            with open(p, "rb") as fh:
-                schema, codec, recs = read_avro(fh.read())
-            for m in recs:
-                m["manifest_path"] = m["manifest_path"].replace(
-                    meta_src, meta_dst
-                )
-            with open(p, "wb") as fh:
-                fh.write(write_avro(recs, schema, codec=codec))
-        elif name.endswith(".metadata.json"):
-            with open(p) as fh:
-                txt = fh.read()
-            with open(p, "w") as fh:
-                fh.write(txt.replace(meta_src, meta_dst))
-    torn = os.path.join(meta_dst, "m-era1.avro")
-    with open(torn, "rb") as fh:
-        blob = bytearray(fh.read())
-    mid = len(blob) // 2
-    blob[mid : mid + 16] = b"\xff" * 16
-    with open(torn, "wb") as fh:
-        fh.write(bytes(blob))
-    open(marker, "w").close()
-    return root
+        meta_src = os.path.join(src, "metadata")
+        meta_dst = os.path.join(root, "metadata")
+        shutil.rmtree(meta_dst, ignore_errors=True)
+        shutil.copytree(meta_src, meta_dst)
+        # repoint the copied metadata at the copy — manifest lists are
+        # deflate-compressed Avro, so they are REWRITTEN through the codec
+        # (a byte-level path patch cannot reach inside compressed blocks);
+        # data_file paths stay shared and untouched
+        for name in os.listdir(meta_dst):
+            p = os.path.join(meta_dst, name)
+            if name.startswith("snap-") and name.endswith(".avro"):
+                with open(p, "rb") as fh:
+                    schema, codec, recs = read_avro(fh.read())
+                for m in recs:
+                    m["manifest_path"] = m["manifest_path"].replace(
+                        meta_src, meta_dst
+                    )
+                with open(p, "wb") as fh:
+                    fh.write(write_avro(recs, schema, codec=codec))
+            elif name.endswith(".metadata.json"):
+                with open(p) as fh:
+                    txt = fh.read()
+                with open(p, "w") as fh:
+                    fh.write(txt.replace(meta_src, meta_dst))
+        torn = os.path.join(meta_dst, "m-era1.avro")
+        with open(torn, "rb") as fh:
+            blob = bytearray(fh.read())
+        mid = len(blob) // 2
+        blob[mid : mid + 16] = b"\xff" * 16
+        with open(torn, "wb") as fh:
+            fh.write(bytes(blob))
+
+    return stage_fixture("iceberg_torn", sf_dir, build)
 
 
 @register(
@@ -591,211 +584,208 @@ def _stage_iceberg_v2_table(spark: SparkSession, sf_dir: str) -> str:
     file_path + pos, ordered) tombstone every doc_id % _DELETE_MOD == 3
     row — no data file rewritten.  Delete manifests carry content=1 so
     readers route them to the anti-join side."""
-    root = os.path.join(cache_root(), f"iceberg_v2_{_tag(sf_dir)}")
-    marker = os.path.join(root, "_STAGED")
-    if os.path.exists(marker):
-        return root
-    from ..operators.avro import write_avro
 
-    meta_dir = os.path.join(root, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang", "n_chars")
-    )
+    def build(root: str) -> None:
+        from ..operators.avro import write_avro
 
-    def write_data_file(pdf):
-        import os as os_
-        import uuid as uuid_
+        meta_dir = os.path.join(root, "metadata")
+        os.makedirs(meta_dir, exist_ok=True)
+        d = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text", "lang", "n_chars")
+        )
 
-        import pandas as pd
+        def write_data_file(pdf):
+            import os as os_
+
+            import pandas as pd
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            pdf = pdf.sort_values("doc_id")
+            lang = str(pdf["lang"].iloc[0])
+            part_dir = os_.path.join(root, "data", f"lang={lang}")
+            os_.makedirs(part_dir, exist_ok=True)
+            final = os_.path.join(part_dir, "part-00000.parquet")
+            buf = pa.BufferOutputStream()
+            pq.write_table(
+                pa.Table.from_pandas(pdf, preserve_index=False),
+                buf,
+                compression="snappy",
+            )
+            write_atomic(part_dir, "part-00000.parquet", buf.getvalue().to_pybytes())
+            # positional deletes computed HERE, where file order is known:
+            # row position = rank within the doc_id-sorted file
+            positions = [
+                i
+                for i, did in enumerate(pdf["doc_id"])
+                if int(did) % _DELETE_MOD == 3
+            ]
+            return pd.DataFrame(
+                {
+                    "lang": [lang],
+                    "path": [final],
+                    "n": [len(pdf)],
+                    "size": [os_.path.getsize(final)],
+                    "del_positions": [positions],
+                }
+            )
+
+        files = (
+            d.groupBy("lang")
+            .applyInPandas(
+                write_data_file,
+                "lang string, path string, n long, size long, "
+                "del_positions array<int>",
+            )
+            .collect()
+        )
+
+        # the delete file: ONE parquet of (file_path, pos), ordered per spec
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pdf = pdf.sort_values("doc_id")
-        lang = str(pdf["lang"].iloc[0])
-        part_dir = os_.path.join(root, "data", f"lang={lang}")
-        os_.makedirs(part_dir, exist_ok=True)
-        final = os_.path.join(part_dir, "part-00000.parquet")
-        tmp = f"{final}.{uuid_.uuid4().hex}.tmp"
+        del_rows = sorted(
+            (r.path, int(p))
+            for r in files
+            for p in r.del_positions
+        )
+        del_path = os.path.join(root, "data", "deletes-00000.parquet")
         pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            tmp,
+            pa.table(
+                {
+                    "file_path": pa.array([p for p, _ in del_rows]),
+                    "pos": pa.array([p for _, p in del_rows], pa.int64()),
+                }
+            ),
+            del_path,
             compression="snappy",
         )
-        os_.replace(tmp, final)
-        # positional deletes computed HERE, where file order is known:
-        # row position = rank within the doc_id-sorted file
-        positions = [
-            i
-            for i, did in enumerate(pdf["doc_id"])
-            if int(did) % _DELETE_MOD == 3
+
+        s1, s2, s3 = _SNAP_BASE + 10, _SNAP_BASE + 11, _SNAP_BASE + 12
+        data_entries = [
+            {
+                "status": _ST_ADDED,
+                "snapshot_id": s1,
+                "data_file": {
+                    "file_path": r.path,
+                    "file_format": "PARQUET",
+                    "partition": {"lang": r.lang},
+                    "record_count": r.n,
+                    "file_size_in_bytes": r.size,
+                },
+            }
+            for r in sorted(files, key=lambda r: r.lang)
         ]
-        return pd.DataFrame(
+        m_data = write_avro(data_entries, _MANIFEST_SCHEMA, codec="deflate")
+        m_data_path = os.path.join(meta_dir, "m-data.avro")
+        open(m_data_path, "wb").write(m_data)
+        del_entries = [
             {
-                "lang": [lang],
-                "path": [final],
-                "n": [len(pdf)],
-                "size": [os_.path.getsize(final)],
-                "del_positions": [positions],
+                "status": _ST_ADDED,
+                "snapshot_id": s2,
+                "data_file": {
+                    "content": 1,  # POSITION_DELETES per the v2 spec
+                    "file_path": del_path,
+                    "file_format": "PARQUET",
+                    "record_count": len(del_rows),
+                    "file_size_in_bytes": os.path.getsize(del_path),
+                    "equality_ids": None,
+                },
             }
-        )
-
-    files = (
-        d.groupBy("lang")
-        .applyInPandas(
-            write_data_file,
-            "lang string, path string, n long, size long, "
-            "del_positions array<int>",
-        )
-        .collect()
-    )
-
-    # the delete file: ONE parquet of (file_path, pos), ordered per spec
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    del_rows = sorted(
-        (r.path, int(p))
-        for r in files
-        for p in r.del_positions
-    )
-    del_path = os.path.join(root, "data", "deletes-00000.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "file_path": pa.array([p for p, _ in del_rows]),
-                "pos": pa.array([p for _, p in del_rows], pa.int64()),
-            }
-        ),
-        del_path,
-        compression="snappy",
-    )
-
-    s1, s2, s3 = _SNAP_BASE + 10, _SNAP_BASE + 11, _SNAP_BASE + 12
-    data_entries = [
-        {
-            "status": _ST_ADDED,
-            "snapshot_id": s1,
-            "data_file": {
-                "file_path": r.path,
-                "file_format": "PARQUET",
-                "partition": {"lang": r.lang},
-                "record_count": r.n,
-                "file_size_in_bytes": r.size,
-            },
-        }
-        for r in sorted(files, key=lambda r: r.lang)
-    ]
-    m_data = write_avro(data_entries, _MANIFEST_SCHEMA, codec="deflate")
-    m_data_path = os.path.join(meta_dir, "m-data.avro")
-    open(m_data_path, "wb").write(m_data)
-    del_entries = [
-        {
-            "status": _ST_ADDED,
-            "snapshot_id": s2,
-            "data_file": {
-                "content": 1,  # POSITION_DELETES per the v2 spec
-                "file_path": del_path,
-                "file_format": "PARQUET",
-                "record_count": len(del_rows),
-                "file_size_in_bytes": os.path.getsize(del_path),
-                "equality_ids": None,
-            },
-        }
-    ]
-    m_del = write_avro(del_entries, _DELETE_MANIFEST_SCHEMA, codec="deflate")
-    m_del_path = os.path.join(meta_dir, "m-deletes.avro")
-    open(m_del_path, "wb").write(m_del)
-
-    def mlist(name: str, manifests: list[tuple[str, bytes, int, int]]) -> str:
-        recs = [
-            {
-                "manifest_path": p,
-                "manifest_length": ln,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snap,
-                "partitions": [],
-                "content": content,
-            }
-            for p, ln, snap, content in manifests
         ]
-        schema = json.loads(_MANIFEST_LIST_SCHEMA)
-        schema["fields"].append({"name": "content", "type": "int"})
-        blob = write_avro(recs, json.dumps(schema), codec="deflate")
-        path = os.path.join(meta_dir, name)
-        open(path, "wb").write(blob)
-        return path
+        m_del = write_avro(del_entries, _DELETE_MANIFEST_SCHEMA, codec="deflate")
+        m_del_path = os.path.join(meta_dir, "m-deletes.avro")
+        open(m_del_path, "wb").write(m_del)
 
-    # s3: an EQUALITY delete file (content=2, equality_ids=[lang's
-    # field id 3]) removing every lang='zh' row still visible
-    eq_path = os.path.join(root, "data", "eq-deletes-00000.parquet")
-    pq.write_table(
-        pa.table({"lang": pa.array(["zh"])}), eq_path, compression="snappy"
-    )
-    eq_entries = [
-        {
-            "status": _ST_ADDED,
-            "snapshot_id": s3,
-            "data_file": {
-                "content": 2,  # EQUALITY_DELETES per the v2 spec
-                "file_path": eq_path,
-                "file_format": "PARQUET",
-                "record_count": 1,
-                "file_size_in_bytes": os.path.getsize(eq_path),
-                "equality_ids": [3],
-            },
+        def mlist(name: str, manifests: list[tuple[str, bytes, int, int]]) -> str:
+            recs = [
+                {
+                    "manifest_path": p,
+                    "manifest_length": ln,
+                    "partition_spec_id": 0,
+                    "added_snapshot_id": snap,
+                    "partitions": [],
+                    "content": content,
+                }
+                for p, ln, snap, content in manifests
+            ]
+            schema = json.loads(_MANIFEST_LIST_SCHEMA)
+            schema["fields"].append({"name": "content", "type": "int"})
+            blob = write_avro(recs, json.dumps(schema), codec="deflate")
+            path = os.path.join(meta_dir, name)
+            open(path, "wb").write(blob)
+            return path
+
+        # s3: an EQUALITY delete file (content=2, equality_ids=[lang's
+        # field id 3]) removing every lang='zh' row still visible
+        eq_path = os.path.join(root, "data", "eq-deletes-00000.parquet")
+        pq.write_table(
+            pa.table({"lang": pa.array(["zh"])}), eq_path, compression="snappy"
+        )
+        eq_entries = [
+            {
+                "status": _ST_ADDED,
+                "snapshot_id": s3,
+                "data_file": {
+                    "content": 2,  # EQUALITY_DELETES per the v2 spec
+                    "file_path": eq_path,
+                    "file_format": "PARQUET",
+                    "record_count": 1,
+                    "file_size_in_bytes": os.path.getsize(eq_path),
+                    "equality_ids": [3],
+                },
+            }
+        ]
+        m_eq = write_avro(eq_entries, _DELETE_MANIFEST_SCHEMA, codec="deflate")
+        m_eq_path = os.path.join(meta_dir, "m-eq-deletes.avro")
+        open(m_eq_path, "wb").write(m_eq)
+
+        l1 = mlist("snap-v2-1.avro", [(m_data_path, len(m_data), s1, 0)])
+        l2 = mlist(
+            "snap-v2-2.avro",
+            [(m_data_path, len(m_data), s1, 0), (m_del_path, len(m_del), s2, 1)],
+        )
+        l3 = mlist(
+            "snap-v2-3.avro",
+            [
+                (m_data_path, len(m_data), s1, 0),
+                (m_del_path, len(m_del), s2, 1),
+                (m_eq_path, len(m_eq), s3, 1),
+            ],
+        )
+        meta = {
+            "format-version": 2,
+            "table-uuid": "00000000-0000-0000-0000-0000000000v2",
+            "location": root,
+            "current-snapshot-id": s2,
+            "snapshots": [
+                {
+                    "snapshot-id": s1,
+                    "timestamp-ms": _TS_BASE + 11,
+                    "manifest-list": l1,
+                    "summary": {"operation": "append"},
+                },
+                {
+                    "snapshot-id": s2,
+                    "timestamp-ms": _TS_BASE + 12,
+                    "manifest-list": l2,
+                    "summary": {"operation": "delete"},
+                },
+                {
+                    "snapshot-id": s3,
+                    "timestamp-ms": _TS_BASE + 13,
+                    "manifest-list": l3,
+                    "summary": {"operation": "delete"},
+                },
+            ],
         }
-    ]
-    m_eq = write_avro(eq_entries, _DELETE_MANIFEST_SCHEMA, codec="deflate")
-    m_eq_path = os.path.join(meta_dir, "m-eq-deletes.avro")
-    open(m_eq_path, "wb").write(m_eq)
+        with open(os.path.join(meta_dir, "v2.metadata.json"), "w") as fh:
+            json.dump(meta, fh, sort_keys=True)
+        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
+            fh.write("2")
 
-    l1 = mlist("snap-v2-1.avro", [(m_data_path, len(m_data), s1, 0)])
-    l2 = mlist(
-        "snap-v2-2.avro",
-        [(m_data_path, len(m_data), s1, 0), (m_del_path, len(m_del), s2, 1)],
-    )
-    l3 = mlist(
-        "snap-v2-3.avro",
-        [
-            (m_data_path, len(m_data), s1, 0),
-            (m_del_path, len(m_del), s2, 1),
-            (m_eq_path, len(m_eq), s3, 1),
-        ],
-    )
-    meta = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-0000000000v2",
-        "location": root,
-        "current-snapshot-id": s2,
-        "snapshots": [
-            {
-                "snapshot-id": s1,
-                "timestamp-ms": _TS_BASE + 11,
-                "manifest-list": l1,
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": s2,
-                "timestamp-ms": _TS_BASE + 12,
-                "manifest-list": l2,
-                "summary": {"operation": "delete"},
-            },
-            {
-                "snapshot-id": s3,
-                "timestamp-ms": _TS_BASE + 13,
-                "manifest-list": l3,
-                "summary": {"operation": "delete"},
-            },
-        ],
-    }
-    with open(os.path.join(meta_dir, "v2.metadata.json"), "w") as fh:
-        json.dump(meta, fh, sort_keys=True)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("2")
-    open(marker, "w").close()
-    return root
+    return stage_fixture("iceberg_v2", sf_dir, build)
 
 
 @register(

@@ -33,8 +33,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ..session import scan_partitions
-from ..workdir import cache_root
-from .sources_formats import _tag
+from ..workdir import stage_fixture, write_atomic
 
 _ORC_DOCS_PER_SHARD = 100
 
@@ -44,10 +43,8 @@ def _stage_orc_shards(spark: SparkSession, sf_dir: str) -> str:
     executors by pyarrow.orc (the INDEPENDENT C++ writer — what a real
     Hive handover gives you); compression cycles ZLIB/NONE/SNAPPY by
     shard — the snappy leg decodes through the own snappy.py codec."""
-    path = os.path.join(cache_root(), f"orclake_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text", "lang", "n_chars")
@@ -58,9 +55,6 @@ def _stage_orc_shards(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_shard(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
             import pyarrow as pa
             import pyarrow.orc as paorc
@@ -71,14 +65,14 @@ def _stage_orc_shards(spark: SparkSession, sf_dir: str) -> str:
                 pdf.drop(columns=["shard"]), preserve_index=False
             )
             comp = ("zlib", "uncompressed", "snappy")[sid % 3]
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            paorc.write_table(tbl, tmp, compression=comp)
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.orc"))
+            buf = pa.BufferOutputStream()
+            paorc.write_table(tbl, buf, compression=comp)
+            write_atomic(path, f"{sid:05d}.orc", buf.getvalue().to_pybytes())
             return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
         d.groupBy("shard").applyInPandas(write_shard, "shard long, n long").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("orclake", sf_dir, build)
 
 
 def _shard_paths(spark: SparkSession, path: str) -> DataFrame:
@@ -238,10 +232,8 @@ def _stage_orc_striped(spark: SparkSession, sf_dir: str) -> str:
     deterministic filler column inflates row bytes so the C++ writer
     flushes many stripes even at small SF — the shape whose unit of
     parallelism is the stripe, not the file."""
-    path = os.path.join(cache_root(), f"orcstriped_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -249,9 +241,6 @@ def _stage_orc_striped(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_file(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
             import pyarrow as pa
             import pyarrow.orc as paorc
@@ -261,16 +250,14 @@ def _stage_orc_striped(spark: SparkSession, sf_dir: str) -> str:
                 (str(i) * 600)[:2048] for i in pdf["doc_id"]
             ]
             tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-            tmp = os_.path.join(path, f".corpus.{uuid_.uuid4().hex}.tmp")
-            paorc.write_table(
-                tbl, tmp, compression="uncompressed", stripe_size=64 * 1024
-            )
-            os_.replace(tmp, os_.path.join(path, "corpus.orc"))
+            buf = pa.BufferOutputStream()
+            paorc.write_table(tbl, buf, compression="uncompressed", stripe_size=64 * 1024)
+            write_atomic(path, "corpus.orc", buf.getvalue().to_pybytes())
             return pd.DataFrame({"n": [len(pdf)]})
 
         d.groupBy("one").applyInPandas(write_file, "n long").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("orcstriped", sf_dir, build)
 
 
 @register(
@@ -355,27 +342,23 @@ def _stage_torn_orc(spark: SparkSession, sf_dir: str) -> str:
     gone), 3 rewritten with ZSTD compression (since r14b a REAL shard
     the own RFC 8878 codec DECODES — the seam-closed class)."""
     src = _stage_orc_shards(spark, sf_dir)
-    path = os.path.join(cache_root(), f"orclake_torn_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         files = sorted(
             os.path.join(src, f) for f in os.listdir(src) if f.endswith(".orc")
         )
         paths = spark.createDataFrame([(p,) for p in files], "path string")
 
         def corrupt_part(rows):
-            import uuid as uuid_
-
+            import pyarrow as pa
             import pyarrow.orc as paorc
 
             for r in rows:
                 sid = int(os.path.basename(r.path).split(".")[0])
                 mode = sid % 4
-                tmp = os.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
                 if mode == 3:
-                    tbl = paorc.read_table(r.path)
-                    paorc.write_table(tbl, tmp, compression="zstd")
+                    buf = pa.BufferOutputStream()
+                    paorc.write_table(paorc.read_table(r.path), buf, compression="zstd")
+                    blob = buf.getvalue().to_pybytes()
                 else:
                     with open(r.path, "rb") as fh:
                         blob = bytearray(fh.read())
@@ -383,13 +366,11 @@ def _stage_torn_orc(spark: SparkSession, sf_dir: str) -> str:
                         blob[-4:-1] = b"XXX"
                     elif mode == 2:
                         blob = blob[: len(blob) * 3 // 5]
-                    with open(tmp, "wb") as fh:
-                        fh.write(bytes(blob))
-                os.replace(tmp, os.path.join(path, f"{sid:05d}.orc"))
+                write_atomic(path, f"{sid:05d}.orc", bytes(blob))
 
         paths.foreachPartition(corrupt_part)
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("orclake_torn", sf_dir, build)
 
 
 @register(
@@ -459,10 +440,8 @@ def _stage_orc_events(spark: SparkSession, sf_dir: str) -> str:
     """Events shards as ORC with TIMESTAMP and DECIMAL columns — the
     Hive-estate schema reality (fact tables are full of timestamps and
     money columns); zstd/zlib cycled so the r14b codec legs run here."""
-    path = os.path.join(cache_root(), f"orcevents_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "events")
             .select("event_id", "ts", "event_type", "value")
@@ -474,9 +453,6 @@ def _stage_orc_events(spark: SparkSession, sf_dir: str) -> str:
 
         def write_shard(pdf):
             import decimal as decimal_
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
             import pyarrow as pa
             import pyarrow.orc as paorc
@@ -502,14 +478,14 @@ def _stage_orc_events(spark: SparkSession, sf_dir: str) -> str:
                 }
             )
             comp = ("zstd", "zlib")[sid % 2]
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            paorc.write_table(tbl, tmp, compression=comp)
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.orc"))
+            buf = pa.BufferOutputStream()
+            paorc.write_table(tbl, buf, compression=comp)
+            write_atomic(path, f"{sid:05d}.orc", buf.getvalue().to_pybytes())
             return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
         d.groupBy("shard").applyInPandas(write_shard, "shard long, n long").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("orcevents", sf_dir, build)
 
 
 @register(
@@ -564,10 +540,8 @@ def lake_orc_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_orc_embeddings(spark: SparkSession, sf_dir: str) -> str:
     """The embeddings table as ORC shards — list<float> vectors through
     the LENGTH-stream recursion (zstd/snappy cycled)."""
-    path = os.path.join(cache_root(), f"orcemb_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding", "label")
@@ -575,9 +549,6 @@ def _stage_orc_embeddings(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_shard(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
             import pyarrow as pa
             import pyarrow.orc as paorc
@@ -603,14 +574,14 @@ def _stage_orc_embeddings(spark: SparkSession, sf_dir: str) -> str:
                 }
             )
             comp = ("zstd", "snappy")[sid % 2]
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            paorc.write_table(tbl, tmp, compression=comp)
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.orc"))
+            buf = pa.BufferOutputStream()
+            paorc.write_table(tbl, buf, compression=comp)
+            write_atomic(path, f"{sid:05d}.orc", buf.getvalue().to_pybytes())
             return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
         d.groupBy("shard").applyInPandas(write_shard, "shard long, n long").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("orcemb", sf_dir, build)
 
 
 @register(

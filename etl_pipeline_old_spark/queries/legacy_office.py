@@ -1,7 +1,7 @@
 """Legacy binary Office ingestion (OLE2/CFB: .doc and .xls) — the
 pre-2007 half of the document-format story.  Any enterprise or crawl
 corpus older than ~2010 is full of compound files; the OOXML family
-(sources_formats.py) covers 2007+, this module covers what came before
+(queries/formats/) covers 2007+, this module covers what came before
 through operators/cfb.py ([MS-CFB] container, [MS-DOC] piece table,
 BIFF8 cells — own pure-stdlib codec, spec-pinned in tests/test_cfb.py).
 
@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.files import read_blobs
-from .sources_formats import _stage_media_files
+from ..sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
+from ..workdir import scratch_path
 
 _DOC_PIECE_CHARS = 17
 _DOC_TORN_MOD = 50
@@ -82,7 +82,7 @@ _DOC_LEN_SQL = "(length(text) + 2 + length(doc_id::VARCHAR))"
 def pipeline_doc_legacy_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
 
-    path = _stage_media_files(spark, sf_dir, "doc_files", "doc", _render_doc)
+    path = stage_doc_files(spark, sf_dir, "doc_files", "doc", _render_doc)
     bf = (
         read_blobs(spark, path, "doc")
         .select(
@@ -165,7 +165,7 @@ def _render_xls(doc_id: int, text: str) -> bytes:
     "map-only Arrow-kernel scale shape as every media family.",
 )
 def pipeline_xls_legacy_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(spark, sf_dir, "xls_files", "xls", _render_xls)
+    path = stage_doc_files(spark, sf_dir, "xls_files", "xls", _render_xls)
     bf = (
         read_blobs(spark, path, "xls")
         .select(
@@ -231,7 +231,7 @@ def _render_doc_maybe_torn(doc_id: int, text: str) -> bytes:
     "legacy-office family.",
 )
 def doc_legacy_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "doc_torn", "doc", _render_doc_maybe_torn
     )
     bf = (
@@ -309,7 +309,7 @@ def pipeline_ppt_legacy_extract(
 ) -> DataFrame:
     from ..catalog import load_table
 
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "ppt_files", "ppt", _render_ppt_legacy
     )
     bf = (
@@ -404,7 +404,7 @@ def _render_msg(doc_id: int, text: str) -> bytes:
 def pipeline_msg_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
 
-    path = _stage_media_files(spark, sf_dir, "msg_files", "msg", _render_msg)
+    path = stage_doc_files(spark, sf_dir, "msg_files", "msg", _render_msg)
     bf = (
         read_blobs(spark, path, "msg")
         .select(
@@ -509,23 +509,20 @@ def _decode_doc_frame(frame: DataFrame) -> DataFrame:
     "documents at 100 TB.",
 )
 def stream_doc_legacy_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     from ..session import ensure_session_confs
-    from ..workdir import cache_root
-    from .sources_formats import _BINARYFILE_SCHEMA, _tag
 
     ensure_session_confs(spark)
-    feed = _stage_media_files(spark, sf_dir, "doc_files", "doc", _render_doc)
-    base = os.path.join(cache_root(), f"doc_legacy_stream_{_tag(sf_dir)}")
+    feed = stage_doc_files(spark, sf_dir, "doc_files", "doc", _render_doc)
+    base = scratch_path("doc_legacy_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.doc")
         .option("maxFilesPerTrigger", 200)
         .load(feed)
@@ -631,7 +628,7 @@ def pipeline_xls_sst_continue(
 ) -> DataFrame:
     from ..catalog import load_table
 
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "xls_sst_cont", "xls", _render_xls_sst_continue
     )
     bf = (

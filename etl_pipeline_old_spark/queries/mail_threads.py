@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.files import read_blobs
+from ..sources.files import read_blobs, stage_doc_files
 
 _THREAD = 5  # messages per staged thread
 
@@ -104,9 +104,7 @@ def _render_thread_mbox(doc_id: int, text: str) -> bytes:
     "Cartesian, no row-Python.",
 )
 def mail_thread_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .formats.formats_media import _stage_media_files
-
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "mbox_threads", "mbox", _render_thread_mbox
     )
     bf = (

@@ -16,8 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.files import read_blobs
-from .sources_formats import _stage_media_files
+from ..sources.files import read_blobs, stage_doc_files
 
 _BRANDS = ("avif", "heic", "mif1", "avis")
 
@@ -61,7 +60,7 @@ def _render_bmff_image(doc_id: int, text: str) -> bytes:
     "O(payload)).",
 )
 def multimodal_avif_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_media_files(
+    path = stage_doc_files(
         spark, sf_dir, "bmff_image_files", "avif", _render_bmff_image
     )
     bf = (

@@ -40,15 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..workdir import cache_root
 from ..catalog import load_table
 from ..registry import register
-
-
-
-def _tag(sf_dir: str) -> str:
-    # pid-free: reruns from ANY process overwrite the same path
-    return os.path.basename(os.path.normpath(sf_dir))
+from ..workdir import scratch_path
 
 
 @register(
@@ -69,7 +63,7 @@ def _tag(sf_dir: str) -> str:
 )
 def k7_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    path = os.path.join(cache_root(), f"events_by_day_{_tag(sf_dir)}")
+    path = scratch_path("events_by_day", sf_dir)
     (
         # cluster by the partition column before the write: un-clustered,
         # every one of the 32 input tasks opens a file in (nearly) every
@@ -286,7 +280,7 @@ def layout_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     ev = load_table(spark, sf_dir, "events")
-    path = os.path.join(cache_root(), f"events_retention_{_tag(sf_dir)}")
+    path = scratch_path("events_retention", sf_dir)
     (
         # day-keyed exchange before the write: one file per day directory
         # instead of one per (task, day) — see k7 (guide §6 small-files)
@@ -361,7 +355,7 @@ def layout_erasure_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import md5_long
 
     ev = load_table(spark, sf_dir, "events")
-    path = os.path.join(cache_root(), f"events_erasure_{_tag(sf_dir)}")
+    path = scratch_path("events_erasure", sf_dir)
     staged = ev.withColumn("bucket", (F.col("user_id") % COW_BUCKETS).cast("int"))
     staged.write.mode("overwrite").partitionBy("bucket").parquet(path)
     rows_before = spark.read.parquet(path).count()
@@ -471,7 +465,7 @@ def layout_erasure_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import md5_long
 
     ev = load_table(spark, sf_dir, "events")
-    path = os.path.join(cache_root(), f"events_erasure_dv_{_tag(sf_dir)}")
+    path = scratch_path("events_erasure_dv", sf_dir)
     staged = ev.withColumn("bucket", (F.col("user_id") % COW_BUCKETS).cast("int"))
     # one task per bucket -> exactly one file per bucket directory: the
     # DV's file fan-out equals the touched-bucket count, deterministically
@@ -715,7 +709,7 @@ def layout_snapshot_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
     ev = load_table(spark, sf_dir, "events")
-    root = os.path.join(cache_root(), f"snaplog_{_tag(sf_dir)}")
+    root = scratch_path("snaplog", sf_dir)
     shutil.rmtree(root, ignore_errors=True)  # replay from genesis: idempotent
     log_dir = os.path.join(root, "_log")
     os.makedirs(log_dir, exist_ok=True)
@@ -823,6 +817,6 @@ def layout_snapshot_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     "still-tombstoned files.",
 )
 def layout_dv_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = os.path.join(cache_root(), f"events_dv_compact_{_tag(sf_dir)}")
+    path = scratch_path("events_dv_compact", sf_dir)
     _stage_dv_lake(spark, sf_dir, path)
     return _dv_compact(spark, path)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ..sources.files import read_blobs
-from ..workdir import cache_root
+from ..workdir import stage_fixture
 
 _SEQ_CODECS = (
     (None, "none"),
@@ -32,12 +32,7 @@ def _stage_sequencefiles(spark: SparkSession, sf_dir: str) -> str:
     of an inherited Hadoop cluster."""
     import os
 
-    from .sources_formats import _tag
-
-    path = os.path.join(cache_root(), f"seqfiles_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         for k, (codec, label) in enumerate(_SEQ_CODECS):
             rdd = (
@@ -49,8 +44,8 @@ def _stage_sequencefiles(spark: SparkSession, sf_dir: str) -> str:
                 rdd.saveAsSequenceFile(dst)
             else:
                 rdd.saveAsSequenceFile(dst, compressionCodecClass=codec)
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("seqfiles", sf_dir, build)
 
 
 @register(

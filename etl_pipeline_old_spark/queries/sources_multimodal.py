@@ -6,12 +6,9 @@ oracle-checked end-to-end against the original parquet."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
 from ..catalog import load_table
 from ..operators.multimodal import (
     decode_meta,
@@ -22,12 +19,7 @@ from ..operators.multimodal import (
 )
 from ..registry import register
 from ..sources.files import flatten_structs, read_csv, read_json
-
-
-
-def _tag(sf_dir: str) -> str:
-    # pid-free: reruns from ANY process overwrite the same path
-    return os.path.basename(os.path.normpath(sf_dir))
+from ..workdir import scratch_path
 
 
 @register(
@@ -40,7 +32,7 @@ def _tag(sf_dir: str) -> str:
 )
 def s1_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    path = os.path.join(cache_root(), f"csv_docs_{_tag(sf_dir)}")
+    path = scratch_path("csv_docs", sf_dir)
     (
         d.write.mode("overwrite")
         .option("header", True)
@@ -70,7 +62,7 @@ def s3_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.col("lang"), F.col("source")).alias("meta"),
         F.struct(F.col("n_chars").alias("n")).alias("stats"),
     )
-    path = os.path.join(cache_root(), f"json_docs_{_tag(sf_dir)}")
+    path = scratch_path("json_docs", sf_dir)
     nested.write.mode("overwrite").json(path)
     back = read_json(
         spark,

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ..sources.files import read_blobs
-from ..workdir import cache_root
+from ..workdir import stage_fixture, write_atomic
 
 _DOCS_PER_SHARD = 25
 _BAD_SHARD_MOD = 3  # shard % 3 == 1 stages one data-corrupted record
@@ -28,14 +28,8 @@ def _stage_tfrecord_shards(spark: SparkSession, sf_dir: str) -> str:
     _BAD_RECORD_IDX's payload gets a byte flipped AFTER framing — its
     data crc then lies while the framing stays intact, the skippable
     damage class."""
-    import os
 
-    from .sources_formats import _tag
-
-    path = os.path.join(cache_root(), f"tfrecord_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text", "lang", "n_chars")
@@ -46,9 +40,6 @@ def _stage_tfrecord_shards(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_shard(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
 
             from ..operators.tfrecord import encode_example, write_tfrecords
@@ -76,15 +67,12 @@ def _stage_tfrecord_shards(spark: SparkSession, sf_dir: str) -> str:
                 at = sum(12 + len(r) + 4 for r in records[:_BAD_RECORD_IDX])
                 payload_at = at + 12
                 blob[payload_at + len(records[_BAD_RECORD_IDX]) // 2] ^= 0xFF
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(bytes(blob))
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.tfrecord"))
+            write_atomic(path, f"{sid:05d}.tfrecord", bytes(blob))
             return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
         d.groupBy("shard").applyInPandas(write_shard, "shard int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("tfrecord", sf_dir, build)
 
 
 @register(

@@ -35,8 +35,6 @@ kernel keeps that loss to one record.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,8 +42,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..registry import register
 from ..sources.files import read_blobs
-from ..workdir import cache_root
-from .sources_formats import _tag
+from ..workdir import stage_fixture, write_atomic
 
 _CDX_DOCS_PER_FILE = 100
 _CDX_TORN_MOD = 50
@@ -61,7 +58,7 @@ def _cdx_digest(payload: bytes) -> str:
 
 
 def _stage_cdx_warc(
-    spark: SparkSession, sf_dir: str, body_repeat: int = 1, tag: str = ""
+    spark: SparkSession, sf_dir: str, body_repeat: int = 1, kind: str = "cdx_warc"
 ) -> str:
     """Per part: ``crawl-{pid}.warc.gz`` (one gzip member per response
     record, warcinfo member first — the CC layout) beside
@@ -73,10 +70,8 @@ def _stage_cdx_warc(
     not truncation.  ``body_repeat`` inflates each body (tools/
     cdx_probe.py stages CC-realistic page sizes that way; the query
     itself uses 1)."""
-    path = os.path.join(cache_root(), f"cdx_warc_{tag}{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -88,8 +83,6 @@ def _stage_cdx_warc(
 
         def write_part(pdf):
             import json as _json
-            import os as os_
-            import uuid as uuid_
 
             import pandas as pd
 
@@ -173,15 +166,12 @@ def _stage_cdx_warc(
                 (warc_name, bytes(blob)),
                 (f"crawl-{pid:04d}.cdx.gz", cdx_blob),
             ):
-                tmp = os_.path.join(path, f".{name}.{uuid_.uuid4().hex}.tmp")
-                with open(tmp, "wb") as fh:
-                    fh.write(payload)
-                os_.replace(tmp, os_.path.join(path, name))
+                write_atomic(path, name, payload)
             return pd.DataFrame({"part": [pid], "n": [len(pdf)]})
 
         d.groupBy("part").applyInPandas(write_part, "part int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture(kind, sf_dir, build)
 
 
 _CDXJ_SCHEMA = T.StructType(
@@ -346,10 +336,8 @@ def _stage_revisit_warc(spark: SparkSession, sf_dir: str) -> str:
     revisit records for every 4th doc — a SEPARATE file, so resolving
     a revisit to its payload is forced to be a corpus-level join, the
     way a real crawl's storage dedup actually reads back."""
-    path = os.path.join(cache_root(), f"revisit_warc_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -360,9 +348,6 @@ def _stage_revisit_warc(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_part(pdf):
-            import os as os_
-            import uuid as uuid_
-
             import pandas as pd
 
             from ..operators.warc import (
@@ -401,15 +386,12 @@ def _stage_revisit_warc(spark: SparkSession, sf_dir: str) -> str:
             ):
                 if not blob:
                     continue
-                tmp = os_.path.join(path, f".{name}.{uuid_.uuid4().hex}.tmp")
-                with open(tmp, "wb") as fh:
-                    fh.write(blob)
-                os_.replace(tmp, os_.path.join(path, name))
+                write_atomic(path, name, blob)
             return pd.DataFrame({"part": [pid], "n": [len(pdf)]})
 
         d.groupBy("part").applyInPandas(write_part, "part int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("revisit_warc", sf_dir, build)
 
 
 @register(

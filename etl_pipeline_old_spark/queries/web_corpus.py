@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..sources.files import read_blobs
+from ..sources.files import BINARYFILE_SCHEMA, SHARD_DOCS, read_blobs, stage_shard_files
+from ..workdir import scratch_path
 
 # ---------------------------------------------------------------------------
 # HTML -> text extraction
@@ -301,8 +302,6 @@ def corpus_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # WARC shard ingest (Common Crawl's container format)
 
-_WARC_DOCS_PER_SHARD = 25
-
 
 def _wrap_html_py(doc_id: int, text: str, lang: str) -> bytes:
     """The Python-side page wrapper for WARC staging. Deliberately NOT the
@@ -322,57 +321,6 @@ def _warc_uri(source: str, doc_id: int) -> str:
     return f"https://www.{source}.example.com/articles/{doc_id}"
 
 
-def _stage_shard_files(
-    spark: SparkSession, sf_dir: str, kind: str, build, suffix: str = "warc.gz"
-) -> str:
-    """Shared shard stager: group documents into _WARC_DOCS_PER_SHARD-doc
-    shards and write one file per shard FROM THE EXECUTORS via an
-    applyInPandas kernel (the crawler-fleet upload shape; sf0.01 -> 20
-    shards, sf0.1 -> 200). ``build(pdf_sorted, sid) -> bytes`` renders the
-    shard; writes are tmp+rename atomic and idempotent per process via a
-    marker file. ``suffix`` names the container (.warc.gz crawls, .tar
-    WebDataset shards)."""
-    import os
-
-    from ..workdir import cache_root
-    from .sources_formats import _tag
-
-    path = os.path.join(cache_root(), f"{kind}_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        d = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text", "lang", "source")
-            .withColumn(
-                "shard", F.floor(F.col("doc_id") / _WARC_DOCS_PER_SHARD).cast("int")
-            )
-        )
-
-        def write_shard(pdf):
-            import os as os_
-
-            import pandas as pd
-
-            pdf = pdf.sort_values("doc_id")
-            sid = int(pdf["shard"].iloc[0])
-            blob = build(pdf, sid)
-            import uuid as uuid_
-
-            # uuid-keyed tmp: retried / speculative duplicate attempts
-            # for one shard group each write their OWN tmp file and race
-            # only on the atomic os.replace (see image_text.py's writer)
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.{suffix}"))
-            return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
-
-        d.groupBy("shard").applyInPandas(write_shard, "shard int, n int").collect()
-        open(marker, "w").close()
-    return path
-
-
 def _build_clean_shard(pdf, sid: int) -> bytes:
     from ..operators.warc import encode_warc_shard
 
@@ -388,7 +336,7 @@ def _build_clean_shard(pdf, sid: int) -> bytes:
 def _stage_warc_shards(spark: SparkSession, sf_dir: str) -> str:
     """The clean Common Crawl-layout corpus: warcinfo member first, one
     gzip member per response record, 404s cycled by doc_id % 10 == 7."""
-    return _stage_shard_files(spark, sf_dir, "warc_shards", _build_clean_shard)
+    return stage_shard_files(spark, sf_dir, "warc_shards", _build_clean_shard)
 
 
 @register(
@@ -576,13 +524,13 @@ def _stage_torn_warc_shards(spark: SparkSession, sf_dir: str) -> str:
     XOR-flipped (header intact so the member is still FOUND, deflate/CRC
     broken so it cannot be READ) — the torn-upload shape object stores
     actually serve."""
-    return _stage_shard_files(spark, sf_dir, "warc_torn", _build_torn_shard)
+    return stage_shard_files(spark, sf_dir, "warc_torn", _build_torn_shard)
 
 
 @register(
     "warc_ingest_quarantine",
     oracle=f"""
-    SELECT (doc_id // {_WARC_DOCS_PER_SHARD})::INT AS shard,
+    SELECT (doc_id // {SHARD_DOCS})::INT AS shard,
            count(*) FILTER (WHERE doc_id % {_TORN_MOD} != 3)::BIGINT AS n_ok,
            count(*) FILTER (WHERE doc_id % {_TORN_MOD} = 3)::BIGINT AS n_corrupt,
            coalesce(sum(doc_id) FILTER (WHERE doc_id % {_TORN_MOD} != 3), 0)::BIGINT
@@ -665,7 +613,7 @@ def _build_ce_shard(pdf, sid: int) -> bytes:
     for r in pdf.itertuples():
         doc_id = int(r.doc_id)
         html = _wrap_html_py(doc_id, r.text, r.lang)
-        slot = doc_id % _WARC_DOCS_PER_SHARD
+        slot = doc_id % SHARD_DOCS
         if slot == _CE_BR_SLOT:
             resp = encode_http_response(html, content_encoding="br")
         elif slot == _CE_ZSTD_SLOT:
@@ -701,17 +649,17 @@ def _build_ce_shard(pdf, sid: int) -> bytes:
     "web_content_encoding",
     oracle=f"""
     SELECT doc_id,
-           CASE WHEN doc_id % {_WARC_DOCS_PER_SHARD} = {_CE_BR_SLOT} THEN 'br'
-                WHEN doc_id % {_WARC_DOCS_PER_SHARD} = {_CE_TORN_SLOT}
+           CASE WHEN doc_id % {SHARD_DOCS} = {_CE_BR_SLOT} THEN 'br'
+                WHEN doc_id % {SHARD_DOCS} = {_CE_TORN_SLOT}
                   THEN 'deflate'
-                WHEN doc_id % {_WARC_DOCS_PER_SHARD} = {_CE_ZSTD_SLOT}
+                WHEN doc_id % {SHARD_DOCS} = {_CE_ZSTD_SLOT}
                   THEN 'zstd'
                 WHEN doc_id % 4 = 0 THEN ''
                 WHEN doc_id % 4 = 1 THEN 'gzip'
                 ELSE 'deflate' END AS content_encoding,
-           (doc_id % {_WARC_DOCS_PER_SHARD} IN ({_CE_BR_SLOT}, {_CE_TORN_SLOT}))
+           (doc_id % {SHARD_DOCS} IN ({_CE_BR_SLOT}, {_CE_TORN_SLOT}))
              AS quarantined,
-           CASE WHEN doc_id % {_WARC_DOCS_PER_SHARD}
+           CASE WHEN doc_id % {SHARD_DOCS}
                      IN ({_CE_BR_SLOT}, {_CE_TORN_SLOT}) THEN NULL
                 ELSE trim(regexp_replace(text, '\\s+', ' ', 'g')) END
              AS extracted
@@ -741,7 +689,7 @@ def _build_ce_shard(pdf, sid: int) -> bytes:
     "boundary — the plan is warc_web_ingest's.",
 )
 def web_content_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_shard_files(spark, sf_dir, "warc_ce", _build_ce_shard)
+    path = stage_shard_files(spark, sf_dir, "warc_ce", _build_ce_shard)
     bf = read_blobs(spark, path, "warc.gz").select("content")
 
     def op(batches):
@@ -801,23 +749,20 @@ def web_content_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "path), and the stream keeps going.",
 )
 def stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     from ..session import ensure_session_confs
-    from ..workdir import cache_root
-    from .sources_formats import _BINARYFILE_SCHEMA, _tag
 
     ensure_session_confs(spark)
     feed = _stage_warc_shards(spark, sf_dir)
-    base = os.path.join(cache_root(), f"warc_stream_{_tag(sf_dir)}")
+    base = scratch_path("warc_stream", sf_dir)
     target, chk = base + "_target", base + "_chk"
     for p in (target, chk):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
+        .schema(BINARYFILE_SCHEMA)
         .option("pathGlobFilter", "*.warc.gz")
         .option("maxFilesPerTrigger", 5)
         .load(feed)
@@ -996,7 +941,7 @@ def _build_charset_shard(pdf, sid: int) -> bytes:
     "every WARC ingest.",
 )
 def web_charset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_shard_files(
+    path = stage_shard_files(
         spark, sf_dir, "charset_shards", _build_charset_shard
     )
     bf = read_blobs(spark, path, "warc.gz").select("content")
@@ -1113,7 +1058,7 @@ def _build_mislabeled_charset_shard(pdf, sid: int) -> bytes:
     "both the quarantine set and every survivor are value-checked.",
 )
 def web_charset_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_shard_files(
+    path = stage_shard_files(
         spark, sf_dir, "charset_torn_shards", _build_mislabeled_charset_shard
     )
     bf = read_blobs(spark, path, "warc.gz").select("content")
@@ -1343,7 +1288,7 @@ def _build_te_shard(pdf, sid: int) -> bytes:
     for r in pdf.itertuples():
         doc_id = int(r.doc_id)
         html = _wrap_html_py(doc_id, r.text, r.lang)
-        slot = doc_id % _WARC_DOCS_PER_SHARD
+        slot = doc_id % SHARD_DOCS
         if slot == _TE_TORN_SLOT:
             whole = encode_http_response(html, chunked=True)
             head, _, wire = whole.partition(b"\r\n\r\n")
@@ -1373,18 +1318,18 @@ def _build_te_shard(pdf, sid: int) -> bytes:
     "web_transfer_encoding",
     oracle=f"""
     SELECT doc_id,
-           CASE WHEN doc_id % {_WARC_DOCS_PER_SHARD} = {_TE_TORN_SLOT}
+           CASE WHEN doc_id % {SHARD_DOCS} = {_TE_TORN_SLOT}
                   THEN 'chunked'
                 WHEN doc_id % 4 IN (1, 2) THEN 'chunked'
                 ELSE '' END AS transfer_encoding,
-           CASE WHEN doc_id % {_WARC_DOCS_PER_SHARD} = {_TE_TORN_SLOT}
+           CASE WHEN doc_id % {SHARD_DOCS} = {_TE_TORN_SLOT}
                   THEN ''
                 WHEN doc_id % 4 = 2 THEN 'gzip'
                 WHEN doc_id % 4 = 3 THEN 'deflate'
                 ELSE '' END AS content_encoding,
-           (doc_id % {_WARC_DOCS_PER_SHARD} = {_TE_TORN_SLOT})
+           (doc_id % {SHARD_DOCS} = {_TE_TORN_SLOT})
              AS quarantined,
-           CASE WHEN doc_id % {_WARC_DOCS_PER_SHARD} = {_TE_TORN_SLOT}
+           CASE WHEN doc_id % {SHARD_DOCS} = {_TE_TORN_SLOT}
                 THEN NULL
                 ELSE trim(regexp_replace(text, '\\s+', ' ', 'g')) END
              AS extracted
@@ -1406,7 +1351,7 @@ def _build_te_shard(pdf, sid: int) -> bytes:
     "warc_web_ingest's map-only plan.",
 )
 def web_transfer_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_shard_files(spark, sf_dir, "warc_te", _build_te_shard)
+    path = stage_shard_files(spark, sf_dir, "warc_te", _build_te_shard)
     bf = read_blobs(spark, path, "warc.gz").select("content")
 
     def op(batches):

@@ -29,9 +29,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..sources.files import read_blobs
 from ..session import scan_partitions
-from ..workdir import cache_root
+from ..sources.files import read_blobs
+from ..workdir import stage_fixture, write_atomic
 
 _DOCS_PER_SHARD = 25
 _DOCS_PER_ARCHIVE = 100
@@ -39,23 +39,13 @@ _FRAME_DOCS = 25
 _TORN_MOD = 5  # global frame_idx % 5 == 3 -> the frame stages torn
 
 
-def _tag(sf_dir: str) -> str:
-    from .sources_formats import _tag as t
-
-    return t(sf_dir)
-
-
 # ------------------------------------------------------------ staging
 def _stage_tar_zst(spark: SparkSession, sf_dir: str) -> str:
     """WebDataset ``.tar.zst`` shards: even shards libzstd-compressed
     (pyarrow's codec — reference bytes), odd shards the own raw-block
     writer (spec-legal frames any zstd consumer reads)."""
-    import os
 
-    path = os.path.join(cache_root(), f"zstd_wds_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text", "lang")
@@ -67,8 +57,6 @@ def _stage_tar_zst(spark: SparkSession, sf_dir: str) -> str:
 
         def write_shard(pdf):
             import json as json_
-            import os as os_
-            import uuid as uuid_
 
             import pandas as pd
             import pyarrow as pa_
@@ -93,15 +81,12 @@ def _stage_tar_zst(spark: SparkSession, sf_dir: str) -> str:
                 blob = bytes(pa_.Codec("zstd").compress(tar))
             else:
                 blob = compress_raw_frame(tar)
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.tar.zst"))
+            write_atomic(path, f"{sid:05d}.tar.zst", blob)
             return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
         d.groupBy("shard").applyInPandas(write_shard, "shard int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("zstd_wds", sf_dir, build)
 
 
 def _stage_seekable(spark: SparkSession, sf_dir: str) -> str:
@@ -110,12 +95,8 @@ def _stage_seekable(spark: SparkSession, sf_dir: str) -> str:
     seek table in the tail skippable frame.  Every _TORN_MOD-th global
     frame stages TORN (a byte scribbled mid-frame) — per-frame fault
     isolation is the point of independent frames."""
-    import os
 
-    path = os.path.join(cache_root(), f"zstd_seek_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text", "lang")
@@ -127,8 +108,6 @@ def _stage_seekable(spark: SparkSession, sf_dir: str) -> str:
 
         def write_part(pdf):
             import json as json_
-            import os as os_
-            import uuid as uuid_
 
             import pandas as pd
             import pyarrow as pa_
@@ -169,15 +148,12 @@ def _stage_seekable(spark: SparkSession, sf_dir: str) -> str:
                 return bytes(frame)
 
             blob = write_seekable(chunks, compress=comp)
-            tmp = os_.path.join(path, f".{pid:04d}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os_.replace(tmp, os_.path.join(path, f"corpus-{pid:04d}.zst"))
+            write_atomic(path, f"corpus-{pid:04d}.zst", blob)
             return pd.DataFrame({"part": [pid], "n": [len(pdf)]})
 
         d.groupBy("part").applyInPandas(write_part, "part int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("zstd_seek", sf_dir, build)
 
 
 # ------------------------------------------------------------ queries
@@ -270,12 +246,8 @@ def multimodal_zstd_shards_ingest(
 def _stage_tar_lz4(spark: SparkSession, sf_dir: str) -> str:
     """WebDataset ``.tar.lz4`` shards: even shards libzlz4 frames
     (pyarrow's codec), odd shards the own all-literal frame writer."""
-    import os
 
-    path = os.path.join(cache_root(), f"lz4_wds_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         d = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text", "lang")
@@ -287,8 +259,6 @@ def _stage_tar_lz4(spark: SparkSession, sf_dir: str) -> str:
 
         def write_shard(pdf):
             import json as json_
-            import os as os_
-            import uuid as uuid_
 
             import pandas as pd
             import pyarrow as pa_
@@ -313,15 +283,12 @@ def _stage_tar_lz4(spark: SparkSession, sf_dir: str) -> str:
                 blob = bytes(pa_.Codec("lz4").compress(tar))
             else:
                 blob = compress_frame_literal(tar)
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.tar.lz4"))
+            write_atomic(path, f"{sid:05d}.tar.lz4", blob)
             return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
         d.groupBy("shard").applyInPandas(write_shard, "shard int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("lz4_wds", sf_dir, build)
 
 
 @register(
@@ -553,10 +520,7 @@ def _stage_warc_zst(spark: SparkSession, sf_dir: str) -> str:
     import struct
     import subprocess
 
-    path = os.path.join(cache_root(), f"warczst_{_tag(sf_dir)}")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         cli = shutil.which("zstd") or "/root/miniconda/bin/zstd"
         d = (
             load_table(spark, sf_dir, "documents")
@@ -591,7 +555,6 @@ def _stage_warc_zst(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         )
         import tempfile
-        import uuid as uuid_
 
         tdir = tempfile.mkdtemp()
         sample_paths = []
@@ -646,15 +609,12 @@ def _stage_warc_zst(spark: SparkSession, sf_dir: str) -> str:
             for p in recs:
                 with open(p + ".zst", "rb") as fh:
                     blob += fh.read()
-            tmp = os_.path.join(path, f".{sid:05d}.{uuid_.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(bytes(blob))
-            os_.replace(tmp, os_.path.join(path, f"{sid:05d}.warc.zst"))
+            write_atomic(path, f"{sid:05d}.warc.zst", bytes(blob))
             return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
 
         d.groupBy("shard").applyInPandas(write_shard, "shard int, n int").collect()
-        open(marker, "w").close()
-    return path
+
+    return stage_fixture("warczst", sf_dir, build)
 
 
 @register(

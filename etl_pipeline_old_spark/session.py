@@ -9,9 +9,9 @@ Scale notes
 -----------
 - ``spark.sql.adaptive.enabled``: AQE re-plans joins/skew at runtime — the
   knob that makes the same code survive a 100 TB input.
-- ``spark.sql.shuffle.partitions`` defaults to the local core count here;
-  on a real cluster this should be ~2-3x total executor cores (or left to
-  AQE coalescing).
+- ``spark.sql.shuffle.partitions`` is 32 here (``_RUNTIME_CONFS``), with
+  AQE coalescing the small stages; on a real cluster this should be ~2-3x
+  total executor cores (or left to AQE coalescing).
 - ``spark.sql.session.timeZone=UTC``: the reference treats naive timestamps
   as UTC (SURVEY.md §1.2); pinning UTC also aligns Spark TIMESTAMP with
   DuckDB's UTC-naive timestamps for the differential oracle.
@@ -29,6 +29,12 @@ Scale notes
   ``file:line`` fragment of its DataFrame query context. PySpark reads the
   flag once per process, at its first wrapped call, so it is a builder
   conf rather than one of ``_RUNTIME_CONFS``.
+- ``spark.executorEnv.PYTHONPATH``: the directory that holds this package,
+  so Python workers (which start from ``worker_daemon``) can import it
+  whatever the caller's working directory and ``PYTHONPATH``.  Spark adds
+  it to the workers' path next to its own entries.  It is a directory,
+  not a zip: the daemon keeps user zips on the path, and every zip there
+  costs each task a zipimporter scan.
 """
 
 from __future__ import annotations
@@ -49,6 +55,9 @@ _RUNTIME_CONFS = {
     # AQE coalescing keeps this safe for large inputs too
     "spark.sql.shuffle.partitions": "32",
 }
+
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def env_cpus(env=os.environ) -> int | None:
@@ -82,13 +91,13 @@ def get_spark(app_name: str = "etl_pipeline_old_spark", cpus: int | None = None)
     b = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         # Python workers import pyspark from site-packages, not pyspark.zip
         .config("spark.python.daemon.module", "etl_pipeline_old_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # no per-call Python call-site capture (see the scale notes)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )

@@ -1,19 +1,17 @@
-"""Per-process scratch roots: isolation without /tmp (or warehouse) growth.
+"""Per-process scratch roots, and the one way fixtures are staged in them.
 
-History of the scheme (ADVICE r3 → r4 → r5):
+Paths are keyed by a session token that embeds the pid.  The first use in
+a process *reaps* every sibling ``sess_<pid>`` dir whose pid is no longer
+alive, and ``atexit`` removes this process's own root.  Two live processes
+therefore never share scratch dirs, while the base holds only the dirs of
+live processes (plus at most those of a ``kill -9`` victim, which the next
+run reaps).  Nothing else under the base is ever touched, so
+``SPARK_GRAFT_SCRATCH_BASE`` may name a directory that holds other data.
 
-- r3 keyed every scratch dir by pid/uuid — isolated, but /tmp accumulated
-  one dir tree per run forever;
-- r4 dropped the pid for stable per-(tag, sf_dir) paths — no accumulation,
-  but two live processes over the same sf_dir (bench.py while pytest runs,
-  or the driver while anything runs) could ``rmtree``/overwrite each
-  other's live feed, checkpoint and Derby database dirs mid-query;
-- r5 (this module) settles both: paths are keyed by a session token that
-  embeds the pid.  The first use in a process *reaps* every sibling token
-  dir whose recorded pid is no longer alive, and ``atexit`` removes this
-  process's own root.  Two live processes therefore never share scratch
-  dirs, while /tmp holds only the dirs of live processes (plus at most
-  those of a ``kill -9`` victim, which the next run reaps).
+Fixtures live at :func:`scratch_path` ``(kind, sf_dir)``.
+:func:`stage_fixture` builds one at most once per process, and
+:func:`write_atomic` is the executor-side file write that concurrent task
+attempts may race on.
 
 The same token suffixes ``saveAsTable`` names (``bq_orders_*``,
 ``stats_orders_*``): the in-memory catalog is already per-JVM, but the
@@ -28,9 +26,8 @@ import atexit
 import os
 import re
 import shutil
-import time
-
-_now = time.time  # seam: tests monkeypatch to simulate idle age
+import threading
+import uuid
 
 
 def _pick_base() -> str:
@@ -76,7 +73,6 @@ def _free_bytes(path: str) -> int:
 
 
 _BASE = _pick_base()
-_LEGACY_REAP_AGE_S = 3600.0
 _SESS_RE = re.compile(r"^sess_(\d+)$")
 _TABLE_RE = re.compile(r"_p(\d+)$")
 
@@ -93,28 +89,6 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def _newest_mtime(path: str) -> float:
-    """Newest mtime anywhere under ``path`` (the entry itself, nested dirs,
-    and files). A live writer rarely touches the TOP-LEVEL dir's mtime —
-    a streaming checkpoint appends under offsets/ and commits/, and a
-    Derby db rewrites seg0/*.dat in place (no directory mtime change at
-    all) — so an idle gate must look at the deepest activity, not the
-    root stat. Legacy residue trees are small (a few hundred MB of
-    parquet/checkpoint files), so the one walk per process start is
-    cheap."""
-    try:
-        newest = os.path.getmtime(path)
-    except OSError:
-        return 0.0
-    for dirpath, _dirnames, filenames in os.walk(path):
-        for entry in (dirpath, *(os.path.join(dirpath, f) for f in filenames)):
-            try:
-                newest = max(newest, os.path.getmtime(entry))
-            except OSError:
-                continue  # vanished mid-walk
-    return newest
-
-
 def _reap_dead_sessions() -> None:
     try:
         entries = os.listdir(_BASE)
@@ -122,27 +96,8 @@ def _reap_dead_sessions() -> None:
         return
     for name in entries:
         m = _SESS_RE.match(name)
-        if m:
-            if int(m.group(1)) != os.getpid() and not _pid_alive(int(m.group(1))):
-                shutil.rmtree(os.path.join(_BASE, name), ignore_errors=True)
-        else:
-            # legacy layouts (r3 pid-suffixed dirs, r4 stable per-(tag, sf)
-            # dirs) live directly under _BASE; current code only ever
-            # writes inside sess_* roots, so anything else is residue from
-            # an older scheme — ~300 MB of it observed pre-cleanup.
-            # Only reap entries with NO write anywhere in the tree for
-            # >1h: a pre-session-token process running concurrently
-            # (mixed-version upgrade window) keeps touching its live
-            # feed/checkpoint FILES — often without ever updating the
-            # top-level dir — so the gate stats the whole tree
-            # (_newest_mtime) while still draining dead residue
-            # (ADVICE r5 + r6 review).
-            path = os.path.join(_BASE, name)
-            newest = _newest_mtime(path)
-            if newest == 0.0:
-                continue  # vanished between listdir and stat
-            if _now() - newest > _LEGACY_REAP_AGE_S:
-                shutil.rmtree(path, ignore_errors=True)
+        if m and int(m.group(1)) != os.getpid() and not _pid_alive(int(m.group(1))):
+            shutil.rmtree(os.path.join(_BASE, name), ignore_errors=True)
 
 
 def cache_root() -> str:
@@ -162,6 +117,15 @@ def cache_root() -> str:
     return root
 
 
+def scratch_path(kind: str, sf_dir: str) -> str:
+    """``<cache_root>/<kind>_<basename of sf_dir>``: stable per (kind,
+    sf_dir) within this process, so reruns find what an earlier call
+    staged."""
+    return os.path.join(
+        cache_root(), f"{kind}_{os.path.basename(os.path.normpath(sf_dir))}"
+    )
+
+
 def run_dir(tag: str, sf_dir: str) -> str:
     """Fresh working dir, stable per (tag, sf_dir) WITHIN this process.
 
@@ -169,11 +133,47 @@ def run_dir(tag: str, sf_dir: str) -> str:
     DataFrames read lazily from these files, so cleanup is deferred to the
     next rerun or to process exit (atexit above) — never a finally block.
     """
-    d = os.path.join(
-        cache_root(), f"{tag}_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
+    d = scratch_path(tag, sf_dir)
     shutil.rmtree(d, ignore_errors=True)
     return d
+
+
+_MARKER = "_STAGED"
+_stage_locks: dict[str, threading.Lock] = {}
+_stage_locks_guard = threading.Lock()
+
+
+def stage_fixture(kind: str, sf_dir: str, build) -> str:
+    """The fixture dir :func:`scratch_path` ``(kind, sf_dir)``, built once.
+
+    ``build(path)`` runs in the created dir only while its ``_STAGED``
+    marker is absent, and the marker is written once it returns, so a
+    build that raises is redone by the next call.  Threads staging the
+    same fixture wait on one per-path lock instead of building it twice.
+    """
+    path = scratch_path(kind, sf_dir)
+    with _stage_locks_guard:
+        lock = _stage_locks.setdefault(path, threading.Lock())
+    with lock:
+        marker = os.path.join(path, _MARKER)
+        if not os.path.exists(marker):
+            os.makedirs(path, exist_ok=True)
+            build(path)
+            open(marker, "w").close()
+    return path
+
+
+def write_atomic(dir: str, name: str, blob: bytes) -> None:
+    """Write ``dir/name`` so that readers only ever see a whole file.
+
+    Each writer (a retried or speculative task attempt, or another process
+    staging the same shard) fills its own uuid-named hidden tmp file and
+    they race only on the atomic ``os.replace``.
+    """
+    tmp = os.path.join(dir, f".{name}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "wb") as fh:
+        fh.write(blob)
+    os.replace(tmp, os.path.join(dir, name))
 
 
 def table_name(base: str) -> str:

@@ -375,8 +375,7 @@ def test_artifact_roundtrip_equals_trained_state(spark, sf_dir):
     from etl_pipeline_old_spark.queries.bpe import (
         corpus_bpe_artifact_roundtrip,
     )
-    from etl_pipeline_old_spark.queries.sources_formats import _tag
-    from etl_pipeline_old_spark.workdir import cache_root
+    from etl_pipeline_old_spark.workdir import scratch_path
 
     got = {
         r["token"]: r["n_total"]
@@ -391,7 +390,7 @@ def test_artifact_roundtrip_equals_trained_state(spark, sf_dir):
             expect[t] += wc[w]
     assert got == dict(expect)
     # the artifact is a real ordered parquet table with K rows
-    path = os.path.join(cache_root(), f"bpe_merges_{_tag(sf_dir)}")
+    path = scratch_path("bpe_merges", sf_dir)
     art = spark.read.parquet(path).collect()
     assert len(art) == K
     assert sorted(r["round"] for r in art) == list(range(1, K + 1))

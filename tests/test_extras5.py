@@ -204,9 +204,11 @@ def test_audio_segments_islands(spark, sf_dir):
     """Segments are maximal runs of threshold-clearing frames: within a
     doc they are disjoint, ordered, and separated by at least one
     inactive frame; bounds and counts agree."""
-    from etl_pipeline_old_spark.queries.sources_formats import (
-        _VAD_ENERGY_TH,
+    from etl_pipeline_old_spark.queries.formats.formats_media import (
         multimodal_audio_features,
+    )
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
+        _VAD_ENERGY_TH,
         multimodal_audio_segments,
     )
 

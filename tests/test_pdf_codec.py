@@ -135,7 +135,7 @@ def test_flate_stream_actually_compressed():
 def test_document_corpus_capstone_plan_locks(spark):
     # Python only at the parse; downstream is codegen into the standard
     # two-phase distinct aggregate — exactly 2 Exchanges, no joins
-    from etl_pipeline_old_spark.queries.sources_formats import (
+    from etl_pipeline_old_spark.queries.formats.formats_pdf import (
         pipeline_document_corpus,
     )
 

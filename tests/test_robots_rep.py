@@ -1,5 +1,5 @@
-"""RFC 9309 REP wildcard matching — queries/sources_formats.py
-web_robots_gate + rep_pattern_rx.
+"""RFC 9309 REP wildcard matching — queries/formats/formats_web.py
+web_robots_gate + formats_office.rep_pattern_rx.
 
 The gate's full longest-match/tie-to-Allow semantics are oracle-checked
 differentially (tests/test_oracle_parity.py); these tests pin the
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from etl_pipeline_old_spark.queries.sources_formats import rep_pattern_rx
+from etl_pipeline_old_spark.queries.formats.formats_office import rep_pattern_rx
 
 
 def _matches(pat: str, path: str) -> bool:

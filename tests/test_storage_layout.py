@@ -435,18 +435,15 @@ def test_erasure_cow_drops_fully_erased_bucket(spark, sf_dir):
     staged lake holds no bucket=14 directory afterwards."""
     import os
 
-    from etl_pipeline_old_spark.queries.scale_ops import (
-        _tag,
-        layout_erasure_cow,
-    )
-    from etl_pipeline_old_spark.workdir import cache_root
+    from etl_pipeline_old_spark.queries.scale_ops import layout_erasure_cow
+    from etl_pipeline_old_spark.workdir import scratch_path
 
     row = layout_erasure_cow(spark, sf_dir).collect()[0]
     assert row.n_parts_touched == 1
     assert row.rows_deleted > 0
     assert row.rows_after == row.rows_before - row.rows_deleted
 
-    path = os.path.join(cache_root(), f"events_erasure_{_tag(sf_dir)}")
+    path = scratch_path("events_erasure", sf_dir)
     dirs = {d for d in os.listdir(path) if d.startswith("bucket=")}
     assert "bucket=14" not in dirs, "fully-erased partition must be dropped"
     assert len(dirs) == row.n_parts_total - row.n_parts_touched
@@ -469,13 +466,12 @@ def test_erasure_dv_leaves_every_file_untouched(spark, oracle_sf_dir):
     from etl_pipeline_old_spark.operators.dedup import md5_long
     from etl_pipeline_old_spark.queries.scale_ops import (
         COW_ERASE_MOD,
-        _tag,
         layout_erasure_dv,
     )
-    from etl_pipeline_old_spark.workdir import cache_root
+    from etl_pipeline_old_spark.workdir import scratch_path
 
     row = layout_erasure_dv(spark, oracle_sf_dir).collect()[0]
-    path = os.path.join(cache_root(), f"events_erasure_dv_{_tag(oracle_sf_dir)}")
+    path = scratch_path("events_erasure_dv", oracle_sf_dir)
 
     def snapshot():
         out = {}
@@ -618,11 +614,8 @@ def test_snapshot_log_isolation_is_physical(spark, sf_dir):
     import json
     import os
 
-    from etl_pipeline_old_spark.queries.scale_ops import (
-        _tag,
-        layout_snapshot_log,
-    )
-    from etl_pipeline_old_spark.workdir import cache_root
+    from etl_pipeline_old_spark.queries.scale_ops import layout_snapshot_log
+    from etl_pipeline_old_spark.workdir import scratch_path
 
     rows = {r.version: r for r in layout_snapshot_log(spark, sf_dir).collect()}
     assert rows[1].n_rows == rows[2].n_rows, "compaction must not change rows"
@@ -634,7 +627,7 @@ def test_snapshot_log_isolation_is_physical(spark, sf_dir):
         2,
     )
 
-    root = os.path.join(cache_root(), f"snaplog_{_tag(sf_dir)}")
+    root = scratch_path("snaplog", sf_dir)
     # every file ever added — including ones later commits removed — is
     # still on disk (vacuum is a separate, explicit operation)
     added = set()
@@ -683,18 +676,15 @@ def test_dv_compaction_drops_fully_tombstoned_file(spark, sf_dir):
     explicitly, and the audit must still balance."""
     import os
 
-    from etl_pipeline_old_spark.queries.scale_ops import (
-        _tag,
-        layout_dv_compaction,
-    )
-    from etl_pipeline_old_spark.workdir import cache_root
+    from etl_pipeline_old_spark.queries.scale_ops import layout_dv_compaction
+    from etl_pipeline_old_spark.workdir import scratch_path
 
     row = layout_dv_compaction(spark, sf_dir).collect()[0]
     assert row.rows_visible_before == row.rows_visible_after
     assert row.tombstones_materialized > 0
     assert row.tombstones_remaining == 0
 
-    path = os.path.join(cache_root(), f"events_dv_compact_{_tag(sf_dir)}")
+    path = scratch_path("events_dv_compact", sf_dir)
     dirs = {d for d in os.listdir(path) if d.startswith("bucket=")}
     assert "bucket=14" not in dirs, "fully-tombstoned file must be dropped"
     back = spark.read.parquet(path)

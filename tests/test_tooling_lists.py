@@ -4,8 +4,8 @@ FILTER-drop (or merely warn on) unknown names — so a renamed query would
 silently vanish from the bench suite, the plans doc, or the idempotency
 sweep. Pin every list to the live registry. Source scans also pin the
 batch binaryFile read to its one implementation, the SparkSession
-builder to the one session factory, and testdata table reads to the
-catalog."""
+builder to the one session factory, testdata table reads to the
+catalog, and fixture staging to workdir."""
 
 from __future__ import annotations
 
@@ -146,3 +146,37 @@ def test_testdata_tables_are_read_through_the_catalog():
     found = _package_scan(_table_path_parquet_reads)
     found.pop("catalog.py", None)
     assert not found, f".parquet(table_path(...)) outside catalog.py: {found}"
+
+
+def _staging_spellings(tree: ast.AST):
+    """Line numbers of a ``"_STAGED"`` literal, a ``def _tag``, or an import
+    of the deleted ``sources_formats`` facade."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and node.value == "_STAGED":
+            yield node.lineno
+        elif isinstance(node, ast.FunctionDef) and node.name == "_tag":
+            yield node.lineno
+        elif isinstance(node, ast.ImportFrom):
+            mods = [node.module or "", *(a.name for a in node.names)]
+            if any(m.split(".")[-1] == "sources_formats" for m in mods):
+                yield node.lineno
+        elif isinstance(node, ast.Import):
+            if any(a.name.split(".")[-1] == "sources_formats" for a in node.names):
+                yield node.lineno
+
+
+def test_fixture_staging_lives_in_workdir():
+    # workdir.stage_fixture owns the marker and scratch_path the
+    # <kind>_<sf> naming; a second copy of either drifts from the first
+    probe = (
+        'm = os.path.join(p, "_STAGED")\n'
+        "def _tag(d): pass\n"
+        "from .sources_formats import x\n"
+        "from . import sources_formats\n"
+        "import etl_pipeline_old_spark.queries.sources_formats\n"
+    )
+    assert sorted(_staging_spellings(ast.parse(probe))) == [1, 2, 3, 4, 5]
+    found = _package_scan(_staging_spellings)
+    assert "workdir.py" in found, "the scan no longer finds workdir's marker"
+    del found["workdir.py"]
+    assert not found, f"staging spelled outside workdir.py: {found}"

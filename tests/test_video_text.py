@@ -1,4 +1,4 @@
-"""Video-text pair capstone tests — queries/sources_formats.py (r9
+"""Video-text pair capstone tests — queries/formats/formats_video_text.py (r9
 verdict #4): plan shape (map-only until the final groupBy, nothing
 broadcast, no join anywhere) and gate semantics."""
 
@@ -10,7 +10,7 @@ def _plan_of(df):
 
 
 def test_pairs_plan_is_map_only_until_final_groupby(spark, sf_dir):
-    from etl_pipeline_old_spark.queries.sources_formats import (
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
         pipeline_video_text_pairs,
     )
 
@@ -31,7 +31,7 @@ def test_gate_semantics(spark, sf_dir):
     """Audio-only uploads and sparsely-captioned videos never emit; every
     surviving row meets the permille gate; V_AV1 (2500 ms duration, >=
     3000 ms covered) always saturates at 1000 permille."""
-    from etl_pipeline_old_spark.queries.sources_formats import (
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
         pipeline_video_text_export,
     )
 
@@ -52,7 +52,7 @@ def test_gate_semantics(spark, sf_dir):
 def test_quarantine_verdicts(spark, sf_dir):
     """Torn videos and mangled captions quarantine per-record; healthy
     samples still gate. The corruption schedule is the staging formula."""
-    from etl_pipeline_old_spark.queries.sources_formats import (
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
         video_text_ingest_quarantine,
     )
 
@@ -77,7 +77,7 @@ def test_quarantine_verdicts(spark, sf_dir):
 def test_stream_equals_batch_capstone(spark, sf_dir):
     """The streaming path must reproduce the batch capstone's stats
     exactly — one clip of drift fails."""
-    from etl_pipeline_old_spark.queries.sources_formats import (
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
         pipeline_video_text_pairs,
         stream_video_text_pairs,
     )
@@ -96,7 +96,7 @@ def test_stream_equals_batch_capstone(spark, sf_dir):
 def test_incremental_merge_equals_recompute(spark, sf_dir):
     """Base+delta (with one base shard deliberately re-delivered) must
     reproduce the capstone exactly — the at-least-once listing shape."""
-    from etl_pipeline_old_spark.queries.sources_formats import (
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
         pipeline_video_text_pairs,
         pipeline_video_text_pairs_incremental,
     )
@@ -117,7 +117,7 @@ def test_temporal_near_dedup_finds_every_twin(spark, sf_dir):
     3-of-4-frame pair; no pair below the threshold leaks through."""
     from pyspark.sql import functions as F
 
-    from etl_pipeline_old_spark.queries.sources_formats import (
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
         _VND_TWIN_MOD,
         video_temporal_near_dedup,
     )

@@ -96,7 +96,7 @@ def test_caption_coverage_plan_locks(spark):
     # both sides are sidecar-sized metadata keyed 1:1 on the asset id —
     # the join must be an equi join (no cartesian), Python only in the
     # two parse kernels
-    from etl_pipeline_old_spark.queries.sources_formats import (
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
         multimodal_caption_coverage,
     )
 

@@ -5,6 +5,11 @@ from __future__ import annotations
 
 import os
 import subprocess
+import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
 
 import etl_pipeline_old_spark.workdir as W
 
@@ -50,40 +55,61 @@ def test_table_name_embeds_pid():
     assert W.table_name("bq_orders_sf0_01") == f"bq_orders_sf0_01_p{os.getpid()}"
 
 
-def test_legacy_layout_dirs_are_reaped_only_when_idle(tmp_path, monkeypatch):
-    """r3 pid-suffixed and r4 stable per-(tag, sf_dir) dirs live directly
-    under the base; current code only writes inside sess_* roots, so any
-    non-sess entry is residue from an older scheme — but it is swept only
-    once untouched for >1h (ADVICE r5: a concurrently-live pre-session
-    process keeps touching its dirs, so recent mtime means hands off)."""
+def test_unrelated_dirs_under_the_base_survive(tmp_path, monkeypatch):
+    """Only dead ``sess_<pid>`` roots are reaped: the base may be a shared
+    directory (``SPARK_GRAFT_SCRATCH_BASE``), so anything else under it,
+    however long idle, is left alone."""
     _fresh(monkeypatch, tmp_path)
-    legacy = tmp_path / "ann_probe_sf0.01_12345_chk"
-    legacy.mkdir()
-    (tmp_path / "derby_sf0.01").mkdir()
+    data = tmp_path / "my_project" / "data.csv"
+    data.parent.mkdir()
+    data.write_text("id\n1\n")
+    idle = time.time() - 3 * 3600
+    for p in (data, data.parent):
+        os.utime(p, (idle, idle))
     W.cache_root()
-    # just-created: mtime is NOW, both survive the sweep
-    assert legacy.exists()
-    assert (tmp_path / "derby_sf0.01").exists()
-    # a live writer touches nested FILES without updating the top dir's
-    # mtime (streaming offsets/, Derby seg0/*.dat) — the gate must stat
-    # the whole tree, so a stale-rooted dir with one fresh nested file
-    # survives while fully-idle trees are reaped (r6 review)
-    live = tmp_path / "feed_sf0.01_99999"
-    (live / "offsets").mkdir(parents=True)
-    nested = live / "offsets" / "0"
-    nested.write_text("batch")
-    sweep_now = os.path.getmtime(legacy) + 3601
-    os.utime(nested, (sweep_now - 10, sweep_now - 10))
-    old = (sweep_now - 7200, sweep_now - 7200)
-    os.utime(live, old)
-    os.utime(live / "offsets", old)
-    # simulate >1h idle by advancing the sweep's clock
+    assert data.read_text() == "id\n1\n"
+
+
+def test_stage_fixture_builds_once_and_retries_a_failed_build(tmp_path, monkeypatch):
     _fresh(monkeypatch, tmp_path)
-    monkeypatch.setattr(W, "_now", lambda: sweep_now)
-    W.cache_root()
-    assert not legacy.exists()
-    assert not (tmp_path / "derby_sf0.01").exists()
-    assert nested.exists()  # fresh nested write kept the whole tree alive
+    calls = []
+
+    def broken(path):
+        calls.append(path)
+        raise OSError("disk full")
+
+    with pytest.raises(OSError):
+        W.stage_fixture("feed", "/data/sf0.01", broken)
+
+    def build(path):
+        calls.append(path)
+        W.write_atomic(path, "00000.bin", b"payload")
+
+    path = W.stage_fixture("feed", "/data/sf0.01", build)
+    assert W.stage_fixture("feed", "/data/sf0.01/", build) == path
+    assert path == W.scratch_path("feed", "/data/sf0.01")
+    assert path.endswith("feed_sf0.01")
+    assert calls == [path, path]  # the failed build is redone, then never again
+    assert sorted(os.listdir(path)) == ["00000.bin", "_STAGED"]  # no tmp left
+
+
+def test_stage_fixture_threads_build_once(tmp_path, monkeypatch):
+    _fresh(monkeypatch, tmp_path)
+    calls = []
+
+    def build(path):
+        calls.append(path)
+        time.sleep(0.05)  # hold the build open while the others arrive
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            futures = [pool.submit(W.stage_fixture, "race", "/d/sf1", build) for _ in range(16)]
+            paths = {f.result(timeout=30) for f in futures}
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(paths) == 1 and len(calls) == 1
 
 
 def _statvfs_free(monkeypatch, free_bytes):

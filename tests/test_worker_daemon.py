@@ -170,3 +170,35 @@ def test_session_workers_import_pyspark_from_real_files(spark):
         assert r.file == pyspark.__file__ and os.path.isfile(r.file), r
         assert "zipimporter" not in r.kinds.split(","), r
         assert r.invalidate_s < 1e-3, r
+
+
+def test_workers_import_the_package_from_a_foreign_cwd(tmp_path):
+    # a caller that puts the repo on sys.path in code, from another working
+    # directory and with no PYTHONPATH: the workers must still find the
+    # daemon module (get_spark hands them the package's parent directory)
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {_ROOT!r})\n"
+        "from etl_pipeline_old_spark.session import get_spark\n"
+        "spark = get_spark('foreign_cwd', cpus=1)\n"
+        "def double(batches):\n"
+        "    for pdf in batches:\n"
+        "        yield pdf.assign(y=pdf.x * 2)\n"
+        "df = spark.range(3).withColumnRenamed('id', 'x')\n"
+        "rows = df.mapInPandas(double, 'x long, y long').collect()\n"
+        "print(sorted((r.x, r.y) for r in rows))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    env["SPARK_GRAFT_SCRATCH_BASE"] = str(tmp_path)
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd="/tmp",
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "[(0, 0), (1, 2), (2, 4)]"

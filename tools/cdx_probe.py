@@ -63,7 +63,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # CC-realistic capture sizes: bodies inflated 256x (~60-120 KB/page)
-    path = _stage_cdx_warc(spark, SF_DIR, body_repeat=256, tag="probe_")
+    path = _stage_cdx_warc(spark, SF_DIR, body_repeat=256, kind="cdx_warc_probe")
     # one target per shard: capture 17 of each 100-doc part
     target_pred = (F.col("doc_id") % 100) == 17
 

@@ -72,17 +72,23 @@ def pipelines():
     from etl_pipeline_old_spark.queries.image_text import (
         pipeline_image_text_pairs_bucketed,
     )
-    from etl_pipeline_old_spark.queries.sources_formats import (
-        pipeline_code_corpus,
+    from etl_pipeline_old_spark.queries.formats.formats_pdf import (
         pipeline_document_corpus,
-        pipeline_document_corpus_mixed,
+        pipeline_pdf_aes_extract,
+        pipeline_pdf_xrefstream_extract,
+    )
+    from etl_pipeline_old_spark.queries.formats.formats_video_text import (
+        pipeline_video_text_pairs,
+    )
+    from etl_pipeline_old_spark.queries.formats.formats_office import (
+        pipeline_code_corpus,
         pipeline_docx_aux_extract,
         pipeline_docx_extract,
         pipeline_epub_extract,
         pipeline_mail_extract,
-        pipeline_pdf_aes_extract,
-        pipeline_pdf_xrefstream_extract,
-        pipeline_video_text_pairs,
+    )
+    from etl_pipeline_old_spark.queries.formats.formats_lake import (
+        pipeline_document_corpus_mixed,
     )
     from etl_pipeline_old_spark.queries.web_corpus import web_charset_ingest
 
