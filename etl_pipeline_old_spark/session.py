@@ -29,12 +29,15 @@ Scale notes
   ``file:line`` fragment of its DataFrame query context. PySpark reads the
   flag once per process, at its first wrapped call, so it is a builder
   conf rather than one of ``_RUNTIME_CONFS``.
-- ``spark.executorEnv.PYTHONPATH``: the directory that holds this package,
-  so Python workers (which start from ``worker_daemon``) can import it
-  whatever the caller's working directory and ``PYTHONPATH``.  Spark adds
-  it to the workers' path next to its own entries.  It is a directory,
-  not a zip: the daemon keeps user zips on the path, and every zip there
-  costs each task a zipimporter scan.
+- ``spark.executorEnv.PYTHONPATH``: local Python workers start in this
+  process's working directory (on their path, as ``python -m`` runs them)
+  with its ``PYTHONPATH``.  When neither leads to this package, e.g. a
+  caller that put the package on ``sys.path`` in code, the directory that
+  holds it is added, so workers can import ``worker_daemon``.  It is set
+  only then, because PySpark sends every ``spark.executorEnv`` entry with
+  each Python UDF, one py4j call apiece.  It is a directory, not a zip:
+  the daemon keeps user zips on the path, and every zip there costs each
+  task a zipimporter scan.
 """
 
 from __future__ import annotations
@@ -57,7 +60,14 @@ _RUNTIME_CONFS = {
 }
 
 
-_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+
+
+def _workers_find_package() -> bool:
+    """Whether local workers reach this package from the working directory
+    or ``PYTHONPATH`` they inherit (see the scale notes)."""
+    entries = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(p and os.path.realpath(p) == _PACKAGE_PARENT for p in entries)
 
 
 def env_cpus(env=os.environ) -> int | None:
@@ -97,10 +107,11 @@ def get_spark(app_name: str = "etl_pipeline_old_spark", cpus: int | None = None)
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         # Python workers import pyspark from site-packages, not pyspark.zip
         .config("spark.python.daemon.module", "etl_pipeline_old_spark.worker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # no per-call Python call-site capture (see the scale notes)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    if not _workers_find_package():
+        b = b.config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     for k, v in _RUNTIME_CONFS.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

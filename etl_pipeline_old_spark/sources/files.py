@@ -163,6 +163,7 @@ def stage_shard_files(
     :func:`~.workdir.write_atomic`, so retried or speculative attempts of
     one shard race only on the final rename.
     """
+
     def stage(path: str) -> None:
         def write_shard(pdf):
             import pandas as pd
