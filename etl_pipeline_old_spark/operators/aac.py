@@ -35,6 +35,8 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import MsbReader
+
 # 14496-3 Table 1.18 — samplingFrequencyIndex
 SAMPLE_RATES = (
     96000, 88200, 64000, 48000, 44100, 32000,
@@ -155,26 +157,11 @@ def probe_adts(blob: bytes) -> dict:
 # ------------------------------------------- AudioSpecificConfig + esds
 
 
-class _Bits:
-    def __init__(self, data: bytes):
-        self.data, self.pos = data, 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("aac: AudioSpecificConfig truncated")
-            v = (v << 1) | ((self.data[byte] >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-
 def parse_asc(asc: bytes) -> dict:
     """Parse an AudioSpecificConfig: ``aot``, ``sample_rate``,
     ``channels``, ``frame_length`` (1024/960 per GASpecificConfig's
     frameLengthFlag for the GA object types)."""
-    b = _Bits(asc)
+    b = MsbReader(asc)
     aot = b.read(5)
     if aot == 31:
         aot = 32 + b.read(6)

@@ -41,43 +41,23 @@ import json
 import struct
 import zlib
 
+from .bitio import read_uvarint, write_uvarint, zigzag_decode, zigzag_encode
+
 MAGIC = b"Obj\x01"
 
 
 # --------------------------------------------------------------- varints
-def _zigzag(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
-
-
-def _unzigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
 def write_long(out: bytearray, n: int) -> None:
-    z = _zigzag(n) & 0xFFFFFFFFFFFFFFFF
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
+    if not -(1 << 63) <= n < 1 << 63:
+        raise ValueError(f"avro: {n} does not fit a long")
+    out += write_uvarint(zigzag_encode(n))
 
 
 def read_long(buf: io.BytesIO) -> int:
-    shift, acc = 0, 0
-    while True:
-        raw = buf.read(1)
-        if not raw:
-            raise ValueError("avro: truncated varint")
-        b = raw[0]
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return _unzigzag(acc)
-        shift += 7
-        if shift > 70:
-            raise ValueError("avro: varint too long")
+    # getvalue() hands back the BytesIO's own bytes object, no copy
+    z, pos = read_uvarint(buf.getvalue(), buf.tell())
+    buf.seek(pos)
+    return zigzag_decode(z)
 
 
 # ------------------------------------------------------------- datum I/O

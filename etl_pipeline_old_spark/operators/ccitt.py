@@ -31,6 +31,8 @@ coded data exhausted mid-picture, a vertical move outside the row.
 
 from __future__ import annotations
 
+from .bitio import MsbReader, MsbWriter
+
 # ---------------------------------------------------- T.4 MH tables
 # (run length, code bits as a string) — transcribed from ITU-T T.4.
 
@@ -136,29 +138,24 @@ def _check_tables() -> None:
 _check_tables()
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.bits: list[str] = []
-
-    def put(self, code: str) -> None:
-        self.bits.append(code)
-
-    def getvalue(self) -> bytes:
-        s = "".join(self.bits)
-        s += "0" * (-len(s) % 8)
-        return bytes(int(s[i : i + 8], 2) for i in range(0, len(s), 8))
+def _put(bw: MsbWriter, code: str) -> None:
+    bw.write(int(code, 2), len(code))
 
 
-def _put_run(bw: _BitWriter, run: int, white: bool) -> None:
+def _take(br: MsbReader) -> str:
+    return "1" if br.read(1) else "0"
+
+
+def _put_run(bw: MsbWriter, run: int, white: bool) -> None:
     table = _WHITE_ALL if white else _BLACK_ALL
     while run > 2560 + 63:
-        bw.put(table[2560])
+        _put(bw, table[2560])
         run -= 2560
     if run >= 64:
         mk = (run // 64) * 64
-        bw.put(table[mk])
+        _put(bw, table[mk])
         run -= mk
-    bw.put(table[run])
+    _put(bw, table[run])
 
 
 def _changes(line: list[int], w: int) -> list[int]:
@@ -174,7 +171,7 @@ def _changes(line: list[int], w: int) -> list[int]:
     return out
 
 
-def _encode_2d_line(bw: _BitWriter, line: list[int], ref: list[int],
+def _encode_2d_line(bw: MsbWriter, line: list[int], ref: list[int],
                     width: int) -> None:
     """One line's T.4/T.6 two-dimensional coding against ``ref`` —
     shared verbatim by G4 (T.6, every line) and mixed 2D G3 (T.4 §4.2,
@@ -197,18 +194,18 @@ def _encode_2d_line(bw: _BitWriter, line: list[int], ref: list[int],
         b1 = rc[bi] if bi < len(rc) else width
         b2 = rc[bi + 1] if bi + 1 < len(rc) else width
         if b2 < a1:
-            bw.put(_MODE_PASS)
+            _put(bw, _MODE_PASS)
             a0 = b2
         elif abs(a1 - b1) <= 3:
             d = a1 - b1
-            bw.put(_MODE_V0 if d == 0 else
-                   (_MODE_VR[d] if d > 0 else _MODE_VL[-d]))
+            _put(bw, _MODE_V0 if d == 0 else
+                 (_MODE_VR[d] if d > 0 else _MODE_VL[-d]))
             a0 = a1
             color ^= 1
             ci += 1
         else:
             a2 = cc[ci + 1] if ci + 1 < len(cc) else width
-            bw.put(_MODE_H)
+            _put(bw, _MODE_H)
             start = max(a0, 0)
             _put_run(bw, a1 - start, white=color == 0)
             _put_run(bw, a2 - a1, white=color == 1)
@@ -220,30 +217,17 @@ def encode_g4(bits: list[int], width: int, height: int) -> bytes:
     """T.6 2D (MMR) encode of a 1=black raster; EOFB terminated."""
     if len(bits) != width * height:
         raise ValueError("ccitt: raster size disagrees with dimensions")
-    bw = _BitWriter()
+    bw = MsbWriter()
     ref = [0] * width
     for y in range(height):
         line = bits[y * width : (y + 1) * width]
         _encode_2d_line(bw, line, ref, width)
         ref = line
-    bw.put(_EOFB)
+    _put(bw, _EOFB)
     return bw.getvalue()
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0  # bit position
-
-    def take(self) -> str:
-        if self.pos >= len(self.data) * 8:
-            raise ValueError("ccitt: coded data exhausted")
-        b = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return "1" if b else "0"
-
-
-def _read_run(br: _BitReader, white: bool) -> int:
+def _read_run(br: MsbReader, white: bool) -> int:
     table = _WHITE_DEC if white else _BLACK_DEC
     total = 0
     while True:
@@ -254,7 +238,7 @@ def _read_run(br: _BitReader, white: bool) -> int:
                     f"ccitt: unknown {'white' if white else 'black'} "
                     f"run code {code!r}"
                 )
-            code += br.take()
+            code += _take(br)
         run = table[code]
         total += run
         if run < 64:  # terminating code ends the run
@@ -267,7 +251,7 @@ def decode_g4(data: bytes, width: int, height: int | None = None) -> list[int]:
     shape); otherwise decodes until EOFB."""
     if width <= 0:
         raise ValueError("ccitt: width must be positive")
-    br = _BitReader(data)
+    br = MsbReader(data)
     out: list[int] = []
     ref = [0] * width
     y = 0
@@ -276,7 +260,7 @@ def decode_g4(data: bytes, width: int, height: int | None = None) -> list[int]:
         if height is None:
             mark = br.pos
             try:
-                probe = "".join(br.take() for _ in range(24))
+                probe = "".join(_take(br) for _ in range(24))
             except ValueError:
                 probe = ""
             br.pos = mark
@@ -289,7 +273,7 @@ def decode_g4(data: bytes, width: int, height: int | None = None) -> list[int]:
     return out
 
 
-def _decode_2d_line(br: _BitReader, ref: list[int], width: int) -> list[int]:
+def _decode_2d_line(br: MsbReader, ref: list[int], width: int) -> list[int]:
     """Decode one two-dimensionally-coded line against ``ref`` —
     shared by G4 and mixed 2D G3."""
     line = [0] * width
@@ -301,12 +285,12 @@ def _decode_2d_line(br: _BitReader, ref: list[int], width: int) -> list[int]:
             line[i] = col
 
     while a0 < width:
-        code = br.take()
+        code = _take(br)
         if code == "1":  # V0
             mode, d = "V", 0
         else:
-            code += br.take()
-            code += br.take()
+            code += _take(br)
+            code += _take(br)
             if code == "011":
                 mode, d = "V", 1
             elif code == "010":
@@ -314,18 +298,18 @@ def _decode_2d_line(br: _BitReader, ref: list[int], width: int) -> list[int]:
             elif code == "001":
                 mode, d = "H", 0
             else:  # 000...
-                code += br.take()
+                code += _take(br)
                 if code == "0001":
                     mode, d = "P", 0
                 else:
-                    code += br.take()
-                    code += br.take()
+                    code += _take(br)
+                    code += _take(br)
                     if code == "000011":
                         mode, d = "V", 2
                     elif code == "000010":
                         mode, d = "V", -2
                     else:
-                        code += br.take()
+                        code += _take(br)
                         if code == "0000011":
                             mode, d = "V", 3
                         elif code == "0000010":
@@ -398,19 +382,17 @@ def encode_g3_1d(bits: list[int], width: int, height: int,
     convention scanner output commonly carries."""
     if len(bits) != width * height:
         raise ValueError("ccitt: raster size disagrees with dimensions")
-    bw = _BitWriter()
+    bw = MsbWriter()
     for y in range(height):
         line = bits[y * width : (y + 1) * width]
         if byte_align:
-            fill = -sum(len(c) for c in bw.bits) % 8
-            if fill:
-                bw.put("0" * fill)  # zero fill dies inside the EOL probe
-        bw.put(_EOL)
+            bw.write(0, -bw.tell() % 8)  # zero fill dies inside the EOL probe
+        _put(bw, _EOL)
         _encode_1d_row(bw, line)
     return bw.getvalue()
 
 
-def _encode_1d_row(bw: _BitWriter, line: list[int]) -> None:
+def _encode_1d_row(bw: MsbWriter, line: list[int]) -> None:
     """One T.4 MH row: alternating white/black runs, the first white
     run zero-length when the row starts black."""
     runs = []
@@ -426,7 +408,7 @@ def _encode_1d_row(bw: _BitWriter, line: list[int]) -> None:
         _put_run(bw, run, white=i % 2 == 0)
 
 
-def _decode_1d_row(br: _BitReader, width: int) -> list[int]:
+def _decode_1d_row(br: MsbReader, width: int) -> list[int]:
     row = [0] * width
     pos, white = 0, True
     while pos < width:
@@ -448,7 +430,7 @@ def decode_g3_1d(data: bytes, width: int, height: int,
     with ``byte_align`` (PDF /EncodedByteAlign) each row additionally
     starts on a byte boundary.  Rows must sum exactly to ``width`` or
     the stream is torn."""
-    br = _BitReader(data)
+    br = MsbReader(data)
     out: list[int] = []
 
     def at_eol() -> bool:
@@ -457,7 +439,7 @@ def decode_g3_1d(data: bytes, width: int, height: int,
         mark = br.pos
         zeros = 0
         try:
-            while (b := br.take()) == "0":
+            while (b := _take(br)) == "0":
                 zeros += 1
         except ValueError:
             br.pos = mark
@@ -494,17 +476,15 @@ def encode_g3_2d(bits: list[int], width: int, height: int, k: int,
         raise ValueError("ccitt: raster size disagrees with dimensions")
     if k < 1:
         raise ValueError("ccitt: K must be >= 1 for 2D G3")
-    bw = _BitWriter()
+    bw = MsbWriter()
     ref = [0] * width
     for y in range(height):
         line = bits[y * width : (y + 1) * width]
         if byte_align:
-            fill = -sum(len(c) for c in bw.bits) % 8
-            if fill:
-                bw.put("0" * fill)
-        bw.put(_EOL)
+            bw.write(0, -bw.tell() % 8)
+        _put(bw, _EOL)
         one_d = y % k == 0
-        bw.put("1" if one_d else "0")
+        _put(bw, "1" if one_d else "0")
         if one_d:
             _encode_1d_row(bw, line)
         else:
@@ -519,13 +499,13 @@ def decode_g3_2d(data: bytes, width: int, height: int,
     followed by the tag bit that says HOW the row is coded; the
     decoder follows the tags (K itself never rides in the stream — it
     is an encoder-side bound on 2D run length)."""
-    br = _BitReader(data)
+    br = MsbReader(data)
     out: list[int] = []
     ref = [0] * width
 
     def consume_eol() -> None:
         zeros = 0
-        while (b := br.take()) == "0":
+        while (b := _take(br)) == "0":
             zeros += 1
         if zeros < 11:
             raise ValueError("ccitt: expected EOL before a 2D-G3 row")
@@ -534,7 +514,7 @@ def decode_g3_2d(data: bytes, width: int, height: int,
         if byte_align:
             br.pos += -br.pos % 8
         consume_eol()
-        tag = br.take()
+        tag = _take(br)
         if tag == "1":
             row = _decode_1d_row(br, width)
         else:

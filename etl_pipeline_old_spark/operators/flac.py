@@ -40,6 +40,8 @@ from __future__ import annotations
 import hashlib
 import struct
 
+from .bitio import MsbReader, MsbWriter, zigzag_decode, zigzag_encode
+
 # ------------------------------------------------------------- CRCs
 
 
@@ -70,66 +72,26 @@ def _crc16(data: bytes) -> int:
 # ---------------------------------------------------------- bit I/O
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        value &= (1 << n) - 1
-        self.acc = (self.acc << n) | value
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append((self.acc >> (self.nbits - 8)) & 0xFF)
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a 1
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
+def write_unary(bw: MsbWriter, q: int) -> None:
+    """q zeros then a 1."""
+    while q >= 32:
+        bw.write(0, 32)
+        q -= 32
+    bw.write(1, q + 1)
 
 
-class _BitReader:
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos  # BIT position
-    def bits(self, n: int) -> int:
-        p, d = self.pos, self.data
-        end = p + n
-        if end > len(d) * 8:
-            raise ValueError("FLAC bitstream truncated")
-        v = 0
-        while n:
-            byte = d[p >> 3]
-            avail = 8 - (p & 7)
-            take = avail if avail < n else n
-            v = (v << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
-            p += take
-            n -= take
-        self.pos = p
-        return v
+def signed(br: MsbReader, n: int) -> int:
+    v = br.read(n)
+    return v - (1 << n) if v >= (1 << (n - 1)) else v
 
-    def signed(self, n: int) -> int:
-        v = self.bits(n)
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
 
-    def unary(self) -> int:
-        q = 0
-        while self.bits(1) == 0:
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("runaway unary code in FLAC stream")
-        return q
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
+def unary(br: MsbReader) -> int:
+    q = 0
+    while br.read(1) == 0:
+        q += 1
+        if q > 1 << 20:
+            raise ValueError("runaway unary code in FLAC stream")
+    return q
 
 
 # --------------------------------------------- coded numbers & rice
@@ -152,8 +114,8 @@ def _utf8_encode(n: int) -> bytes:
     return bytes(out)
 
 
-def _utf8_decode(br: _BitReader) -> int:
-    b0 = br.bits(8)
+def _utf8_decode(br: MsbReader) -> int:
+    b0 = br.read(8)
     if b0 < 0x80:
         return b0
     nb = 0
@@ -165,23 +127,15 @@ def _utf8_decode(br: _BitReader) -> int:
         raise ValueError("invalid coded number in FLAC frame header")
     v = b0 & (0x7F >> nb)
     for _ in range(nb - 1):
-        c = br.bits(8)
+        c = br.read(8)
         if c & 0xC0 != 0x80:
             raise ValueError("invalid coded-number continuation byte")
         v = (v << 6) | (c & 0x3F)
     return v
 
 
-def _zigzag(v: int) -> int:
-    return (v << 1) if v >= 0 else (-(v << 1) - 1)
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def _rice_cost(res: list[int], k: int) -> int:
-    return sum((_zigzag(r) >> k) + 1 + k for r in res)
+    return sum((zigzag_encode(r) >> k) + 1 + k for r in res)
 
 
 def _best_rice_k(res: list[int]) -> int:
@@ -220,7 +174,7 @@ def _fixed_restore(warm: list[int], res: list[int], order: int) -> list[int]:
 
 
 def _write_residual(
-    bw: _BitWriter,
+    bw: MsbWriter,
     res: list[int],
     blocksize: int,
     order: int,
@@ -249,24 +203,24 @@ def _write_residual(
         k = _best_rice_k(part)
         bw.write(k, 4)
         for v in part:
-            u = _zigzag(v)
-            bw.write_unary(u >> k)
+            u = zigzag_encode(v)
+            write_unary(bw, u >> k)
             if k:
                 bw.write(u & ((1 << k) - 1), k)
 
 
-def _subframe_header(bw: _BitWriter, ftype: int, wasted: int) -> None:
+def _subframe_header(bw: MsbWriter, ftype: int, wasted: int) -> None:
     bw.write(0, 1)  # mandatory zero pad
     bw.write(ftype, 6)
     if wasted:
         bw.write(1, 1)
-        bw.write_unary(wasted - 1)
+        write_unary(bw, wasted - 1)
     else:
         bw.write(0, 1)
 
 
 def _encode_subframe(
-    bw: _BitWriter,
+    bw: MsbWriter,
     s: list[int],
     bps: int,
     force: str | None,
@@ -385,7 +339,7 @@ def encode_flac(
         md5.update(int(v).to_bytes(width, "little", signed=True))
 
     out = bytearray(b"fLaC")
-    si = _BitWriter()
+    si = MsbWriter()
     si.write(block_size, 16)
     si.write(block_size, 16)
     si.write(0, 24)
@@ -394,7 +348,7 @@ def encode_flac(
     si.write(n_channels - 1, 3)
     si.write(bps - 1, 5)
     si.write(n_frames_total, 36)
-    streaminfo = bytes(si.out) + md5.digest()
+    streaminfo = si.getvalue() + md5.digest()
     out += bytes([0x80]) + len(streaminfo).to_bytes(3, "big") + streaminfo
 
     for fno, start in enumerate(range(0, n_frames_total, block_size)):
@@ -407,7 +361,7 @@ def encode_flac(
         chans = [chans[c * n : (c + 1) * n] for c in range(n_channels)]
         chan_bits, subs = _frame_channels(chans, stereo_mode)
 
-        bw = _BitWriter()
+        bw = MsbWriter()
         bw.write(0x3FFE, 14)  # sync
         bw.write(0, 1)  # reserved
         bw.write(0, 1)  # fixed blocking strategy
@@ -419,13 +373,13 @@ def encode_flac(
         for b in _utf8_encode(fno):
             bw.write(b, 8)
         bw.write(n - 1, 16)
-        bw.write(_crc8(bytes(bw.out)), 8)
+        bw.write(_crc8(bw.getvalue()), 8)
         po = partition_order if n % (1 << partition_order) == 0 else 0
         for s, extra in subs:
             _encode_subframe(bw, s, bps + extra, force, po, lpc, force_escape)
-        bw.align()
-        bw.write(_crc16(bytes(bw.out)), 16)
-        out += bw.out
+        bw.write(0, -bw.tell() & 7)  # byte-align before the CRC-16
+        bw.write(_crc16(bw.getvalue()), 16)
+        out += bw.getvalue()
     return bytes(out)
 
 
@@ -433,14 +387,14 @@ def encode_flac(
 
 
 def _read_residual(
-    br: _BitReader, blocksize: int, order: int
+    br: MsbReader, blocksize: int, order: int
 ) -> list[int]:
-    method = br.bits(2)
+    method = br.read(2)
     if method > 1:
         raise ValueError("reserved FLAC residual coding method")
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
-    po = br.bits(4)
+    po = br.read(4)
     if blocksize % (1 << po):
         raise ValueError("block size not divisible by partition count")
     res: list[int] = []
@@ -448,44 +402,44 @@ def _read_residual(
         n = (blocksize >> po) - (order if p == 0 else 0)
         if n < 0:
             raise ValueError("partition smaller than predictor order")
-        k = br.bits(pbits)
+        k = br.read(pbits)
         if k == escape:
-            width = br.bits(5)
-            res += [br.signed(width) if width else 0 for _ in range(n)]
+            width = br.read(5)
+            res += [signed(br, width) if width else 0 for _ in range(n)]
         else:
             for _ in range(n):
-                q = br.unary()
-                u = (q << k) | (br.bits(k) if k else 0)
-                res.append(_unzigzag(u))
+                q = unary(br)
+                u = (q << k) | (br.read(k) if k else 0)
+                res.append(zigzag_decode(u))
     return res
 
 
-def _decode_subframe(br: _BitReader, blocksize: int, bps: int) -> list[int]:
-    if br.bits(1):
+def _decode_subframe(br: MsbReader, blocksize: int, bps: int) -> list[int]:
+    if br.read(1):
         raise ValueError("subframe header pad bit set")
-    ftype = br.bits(6)
+    ftype = br.read(6)
     wasted = 0
-    if br.bits(1):
-        wasted = br.unary() + 1
+    if br.read(1):
+        wasted = unary(br) + 1
     eff = bps - wasted
     if ftype == 0x00:  # CONSTANT
-        s = [br.signed(eff)] * blocksize
+        s = [signed(br, eff)] * blocksize
     elif ftype == 0x01:  # VERBATIM
-        s = [br.signed(eff) for _ in range(blocksize)]
+        s = [signed(br, eff) for _ in range(blocksize)]
     elif 0x08 <= ftype <= 0x0C:  # FIXED 0-4
         order = ftype & 0x07
-        warm = [br.signed(eff) for _ in range(order)]
+        warm = [signed(br, eff) for _ in range(order)]
         s = _fixed_restore(warm, _read_residual(br, blocksize, order), order)
     elif ftype >= 0x20:  # LPC
         order = (ftype & 0x1F) + 1
-        warm = [br.signed(eff) for _ in range(order)]
-        prec = br.bits(4) + 1
+        warm = [signed(br, eff) for _ in range(order)]
+        prec = br.read(4) + 1
         if prec == 16:
             raise ValueError("invalid LPC precision escape")
-        shift = br.bits(5)
+        shift = br.read(5)
         if shift >= 16:  # signed 5-bit; negative shifts are spec-dead
             raise ValueError("negative LPC shift unsupported")
-        coefs = [br.signed(prec) for _ in range(order)]
+        coefs = [signed(br, prec) for _ in range(order)]
         s = list(warm)
         res = _read_residual(br, blocksize, order)
         for r in res:
@@ -539,35 +493,35 @@ def decode_flac(data: bytes) -> tuple[int, int, int, list[int]]:
     got = 0
     while got < total:
         frame_start = pos
-        br = _BitReader(data, pos * 8)
-        if br.bits(14) != 0x3FFE:
+        br = MsbReader(data, pos * 8)
+        if br.read(14) != 0x3FFE:
             raise ValueError(f"bad FLAC frame sync at byte {pos}")
-        if br.bits(1):
+        if br.read(1):
             raise ValueError("reserved bit set in frame header")
-        br.bits(1)  # blocking strategy
-        bs_bits = br.bits(4)
-        sr_bits = br.bits(4)
-        chan = br.bits(4)
-        ss_bits = br.bits(3)
-        if br.bits(1):
+        br.read(1)  # blocking strategy
+        bs_bits = br.read(4)
+        sr_bits = br.read(4)
+        chan = br.read(4)
+        ss_bits = br.read(3)
+        if br.read(1):
             raise ValueError("reserved bit set in frame header")
         _num = _utf8_decode(br)
         if bs_bits == 0:
             raise ValueError("reserved block size code")
         elif bs_bits == 6:
-            blocksize = br.bits(8) + 1
+            blocksize = br.read(8) + 1
         elif bs_bits == 7:
-            blocksize = br.bits(16) + 1
+            blocksize = br.read(16) + 1
         else:
             blocksize = _BLOCKSIZE_TAB[bs_bits]
         if sr_bits == 12:
-            br.bits(8)
+            br.read(8)
         elif sr_bits in (13, 14):
-            br.bits(16)
+            br.read(16)
         elif sr_bits == 15:
             raise ValueError("invalid sample-rate code")
         hdr_end = br.pos // 8
-        if _crc8(data[frame_start:hdr_end]) != br.bits(8):
+        if _crc8(data[frame_start:hdr_end]) != br.read(8):
             raise ValueError(f"FLAC frame header CRC-8 mismatch at byte {frame_start}")
         fbps = bps if ss_bits == 0 else _SAMPLESIZE_TAB.get(ss_bits)
         if fbps is None:
@@ -598,7 +552,7 @@ def decode_flac(data: bytes) -> tuple[int, int, int, list[int]]:
             raise ValueError("frame channel count differs from STREAMINFO")
         br.align()
         crc_pos = br.pos // 8
-        if _crc16(data[frame_start:crc_pos]) != br.bits(16):
+        if _crc16(data[frame_start:crc_pos]) != br.read(16):
             raise ValueError(f"FLAC frame CRC-16 mismatch at byte {frame_start}")
         pos = br.pos // 8
         for i in range(blocksize):

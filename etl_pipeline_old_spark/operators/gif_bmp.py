@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import LsbReader, LsbWriter
+
 # GIF's interlace passes: (start row, row step) in pass order
 _GIF_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
@@ -25,40 +27,23 @@ _GIF_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 # ------------------------------------------------------------------ LZW
 
 
-class _LSBWriter:
-    """LSB-first bit packer (GIF's bit order), emitting 255-byte-max
-    sub-blocks."""
-
-    def __init__(self) -> None:
-        self.acc = 0
-        self.nbits = 0
-        self.bytes = bytearray()
-
-    def write(self, code: int, width: int) -> None:
-        self.acc |= code << self.nbits
-        self.nbits += width
-        while self.nbits >= 8:
-            self.bytes.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def finish(self) -> bytes:
-        if self.nbits:
-            self.bytes.append(self.acc & 0xFF)
-        out = bytearray()
-        for i in range(0, len(self.bytes), 255):
-            chunk = self.bytes[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)  # block terminator
-        return bytes(out)
+def _sub_blocks(payload: bytes) -> bytes:
+    """GIF data sub-blocks: 255-byte-max length-prefixed chunks, then the
+    zero-length block terminator."""
+    out = bytearray()
+    for i in range(0, len(payload), 255):
+        chunk = payload[i : i + 255]
+        out.append(len(chunk))
+        out += chunk
+    out.append(0)
+    return bytes(out)
 
 
 def _lzw_encode(indexes: list[int], mcs: int) -> bytes:
     """GIF-variant LZW: emit CLEAR first, grow code width from mcs+1 as
     the dictionary fills, reset at 4096 codes, finish with EOI."""
     clear, eoi = 1 << mcs, (1 << mcs) + 1
-    w = _LSBWriter()
+    w = LsbWriter()
 
     def reset() -> tuple[dict, int, int]:
         return (
@@ -88,31 +73,15 @@ def _lzw_encode(indexes: list[int], mcs: int) -> bytes:
     if cur:
         w.write(table[cur], width)
     w.write(eoi, width)
-    return w.finish()
+    return _sub_blocks(w.getvalue())
 
 
 def _lzw_decode(data: bytes, mcs: int, n_expected: int) -> list[int]:
     """Decode GIF LZW sub-block payload (already de-blocked) to pixel
     indexes; stops at EOI or when n_expected indexes are out."""
     clear, eoi = 1 << mcs, (1 << mcs) + 1
-    acc = 0
-    nbits = 0
-    pos = 0
+    br = LsbReader(data)
     out: list[int] = []
-
-    def read(width: int) -> int:
-        nonlocal acc, nbits, pos
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("GIF LZW stream truncated")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        v = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        return v
-
     table: list[tuple[int, ...]] = []
     width = mcs + 1
     prev: tuple[int, ...] | None = None
@@ -125,7 +94,7 @@ def _lzw_decode(data: bytes, mcs: int, n_expected: int) -> list[int]:
 
     reset_table()
     while len(out) < n_expected:
-        code = read(width)
+        code = br.read(width)
         if code == clear:
             reset_table()
             continue

@@ -76,6 +76,7 @@ import struct
 import zlib
 
 from . import protobuf_wire as pw
+from .bitio import MsbReader, read_uvarint, zigzag_decode
 
 MAGIC = b"ORC"
 
@@ -279,52 +280,6 @@ def read_file_tail(blob: bytes) -> dict:
     }
 
 
-# ------------------------------------------------------------- bit I/O
-
-
-class _BitReader:
-    """MSB-first bit reader over a byte string (RLEv2 packing order)."""
-
-    __slots__ = ("buf", "pos", "bit")
-
-    def __init__(self, buf: bytes, pos: int = 0) -> None:
-        self.buf = buf
-        self.pos = pos
-        self.bit = 0
-
-    def take(self, width: int) -> int:
-        out = 0
-        need = width
-        while need:
-            if self.pos >= len(self.buf):
-                raise ValueError("orc: bit-packed run truncated")
-            avail = 8 - self.bit
-            grab = min(avail, need)
-            byte = self.buf[self.pos]
-            out = (out << grab) | ((byte >> (avail - grab)) & ((1 << grab) - 1))
-            self.bit += grab
-            need -= grab
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return out
-
-    def align(self) -> int:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-        return self.pos
-
-
-def _read_vulong(buf: bytes, pos: int) -> tuple[int, int]:
-    return pw.read_varint(buf, pos)
-
-
-def _read_vslong(buf: bytes, pos: int) -> tuple[int, int]:
-    v, pos = pw.read_varint(buf, pos)
-    return pw.zigzag(v), pos
-
-
 # ---------------------------------------------------------------- RLEs
 
 
@@ -375,18 +330,18 @@ def decode_rlev2(buf: bytes, signed: bool, n: int | None = None) -> list[int]:
             val = int.from_bytes(buf[pos : pos + width], "big")
             pos += width
             if signed:
-                val = pw.zigzag(val)
+                val = zigzag_decode(val)
             out.extend([val] * count)
         elif enc == 1:  # DIRECT
             width = _decode_width((first >> 1) & 0x1F)
             if pos + 1 >= len(buf):
                 raise ValueError("orc: direct run header truncated")
             length = ((first & 0x01) << 8 | buf[pos + 1]) + 1
-            br = _BitReader(buf, pos + 2)
-            vals = [br.take(width) for _ in range(length)]
+            br = MsbReader(buf, (pos + 2) << 3)
+            vals = [br.read(width) for _ in range(length)]
             pos = br.align()
             if signed:
-                vals = [pw.zigzag(v) for v in vals]
+                vals = [zigzag_decode(v) for v in vals]
             out.extend(vals)
         elif enc == 2:  # PATCHED_BASE
             width = _decode_width((first >> 1) & 0x1F)
@@ -406,12 +361,11 @@ def decode_rlev2(buf: bytes, signed: bool, n: int | None = None) -> list[int]:
             if base & sign_mask:
                 base = -(base & ~sign_mask)
             pos += base_bytes
-            br = _BitReader(buf, pos)
-            vals = [br.take(width) for _ in range(length)]
-            pos = br.align()
+            br = MsbReader(buf, pos << 3)
+            vals = [br.read(width) for _ in range(length)]
+            br.align()
             combined = _closest_fixed_bits(gap_width + patch_width)
-            br = _BitReader(buf, pos)
-            patches = [br.take(combined) for _ in range(patch_count)]
+            patches = [br.read(combined) for _ in range(patch_count)]
             pos = br.align()
             idx = 0
             mask = (1 << patch_width) - 1
@@ -432,11 +386,11 @@ def decode_rlev2(buf: bytes, signed: bool, n: int | None = None) -> list[int]:
                 raise ValueError("orc: delta run header truncated")
             length = ((first & 0x01) << 8 | buf[pos + 1]) + 1
             pos += 2
+            base, pos = read_uvarint(buf, pos)
             if signed:
-                base, pos = _read_vslong(buf, pos)
-            else:
-                base, pos = _read_vulong(buf, pos)
-            delta_base, pos = _read_vslong(buf, pos)
+                base = zigzag_decode(base)
+            delta_base, pos = read_uvarint(buf, pos)
+            delta_base = zigzag_decode(delta_base)
             vals = [base]
             if length > 1:
                 vals.append(base + delta_base)
@@ -445,10 +399,10 @@ def decode_rlev2(buf: bytes, signed: bool, n: int | None = None) -> list[int]:
                     vals.append(vals[-1] + delta_base)
             else:
                 width = _decode_width(width_code)
-                br = _BitReader(buf, pos)
+                br = MsbReader(buf, pos << 3)
                 sign = 1 if delta_base >= 0 else -1
                 for _ in range(length - 2):
-                    vals.append(vals[-1] + sign * br.take(width))
+                    vals.append(vals[-1] + sign * br.read(width))
                 pos = br.align()
             out.extend(vals)
     if n is not None and len(out) < n:
@@ -472,26 +426,6 @@ def _iso_ts(epoch_s: int, nanos: int) -> str:
     if nanos:
         frac = f"{nanos:09d}".rstrip("0")
         out += "." + frac
-    return out
-
-
-def _decode_varints(buf: bytes, n: int) -> list[int]:
-    """n unbounded zigzag varints (the DECIMAL unscaled values)."""
-    out = []
-    pos = 0
-    for _ in range(n):
-        v = 0
-        shift = 0
-        while True:
-            if pos >= len(buf):
-                raise ValueError("orc: truncated decimal varint")
-            b = buf[pos]
-            pos += 1
-            v |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-        out.append((v >> 1) ^ -(v & 1))
     return out
 
 
@@ -627,8 +561,12 @@ def read_stripe_columns(
                 vals.append(_iso_ts(epoch, nanos))
         elif kind == "DECIMAL":
             # spec: DATA = unbounded zigzag varints of the unscaled
-            # value, SECONDARY = per-value scale (signed RLEv2)
-            mags = _decode_varints(data(col, SK_DATA), n_vals)
+            # value, SECONDARY = per-value scale (signed RLEv2); precision
+            # 38 needs at most 128 zigzag bits, so 19 varint bytes
+            buf, at, mags = data(col, SK_DATA), 0, []
+            for _ in range(n_vals):
+                m, at = read_uvarint(buf, at, max_bytes=19)
+                mags.append(zigzag_decode(m))
             scales = decode_rlev2(data(col, SK_SECONDARY), True, n_vals)
             vals = [_render_decimal(m, sc) for m, sc in zip(mags, scales)]
         elif kind in ("STRING", "VARCHAR", "CHAR", "BINARY"):

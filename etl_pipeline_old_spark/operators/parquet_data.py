@@ -61,6 +61,7 @@ from __future__ import annotations
 import struct
 import zlib
 
+from .bitio import read_uvarint, zigzag_decode
 from .parquet_meta import _Reader, _read_struct, _civil_from_days, _iso_from_epoch
 
 # Page types (parquet.thrift PageType).
@@ -124,17 +125,7 @@ def _read_hybrid(buf: bytes, pos: int, width: int, n: int) -> tuple[list[int], i
     while len(out) < n:
         if pos >= len(buf):
             raise ValueError("parquet page: hybrid run truncated")
-        header = 0
-        shift = 0
-        while True:
-            if pos >= len(buf):
-                raise ValueError("parquet page: hybrid header truncated")
-            b = buf[pos]
-            pos += 1
-            header |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
+        header, pos = read_uvarint(buf, pos)
         if header & 1:  # bit-packed groups, LSB-first
             count = (header >> 1) * 8
             need = (count * width + 7) // 8
@@ -156,24 +147,6 @@ def _read_hybrid(buf: bytes, pos: int, width: int, n: int) -> tuple[list[int], i
     return out[:n], pos
 
 
-def _varint(buf: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("parquet page: truncated varint")
-        b = buf[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-
-
-def _zigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
 _M64 = (1 << 64) - 1
 
 
@@ -183,10 +156,10 @@ def _delta_binary_packed(buf: bytes, pos: int, bits32: bool) -> tuple[list[int],
     block a zigzag min-delta, one bit-width byte per miniblock, and
     LSB-first bit-packed unsigned delta offsets.  Arithmetic is modular
     in the column's width, per the spec."""
-    block_size, pos = _varint(buf, pos)
-    n_mini, pos = _varint(buf, pos)
-    total, pos = _varint(buf, pos)
-    first_z, pos = _varint(buf, pos)
+    block_size, pos = read_uvarint(buf, pos)
+    n_mini, pos = read_uvarint(buf, pos)
+    total, pos = read_uvarint(buf, pos)
+    first_z, pos = read_uvarint(buf, pos)
     if n_mini == 0 or block_size % 128 or block_size % n_mini:
         raise ValueError("parquet page: invalid DELTA_BINARY_PACKED header")
     per_mini = block_size // n_mini
@@ -199,11 +172,11 @@ def _delta_binary_packed(buf: bytes, pos: int, bits32: bool) -> tuple[list[int],
 
     if total == 0:
         return [], pos
-    out = [signed(_zigzag(first_z))]
+    out = [signed(zigzag_decode(first_z))]
     cur = out[0]
     while len(out) < total:
-        min_z, pos = _varint(buf, pos)
-        min_delta = _zigzag(min_z)
+        min_z, pos = read_uvarint(buf, pos)
+        min_delta = zigzag_decode(min_z)
         if pos + n_mini > len(buf):
             raise ValueError("parquet page: DELTA block widths truncated")
         widths = buf[pos : pos + n_mini]

@@ -61,6 +61,8 @@ import io
 import os
 import struct
 
+from .bitio import read_uvarint, zigzag_decode
+
 MAGIC = b"PAR1"
 
 # Thrift compact wire types (Thrift compact protocol spec).
@@ -133,20 +135,11 @@ class _Reader:
         return b
 
     def varint(self) -> int:
-        shift = 0
-        out = 0
-        while True:
-            b = self.u8()
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
-            if shift > 70:
-                raise ValueError("parquet footer: varint longer than 10 bytes")
+        v, self.pos = read_uvarint(self.buf, self.pos)
+        return v
 
     def zigzag(self) -> int:
-        n = self.varint()
-        return (n >> 1) ^ -(n & 1)
+        return zigzag_decode(self.varint())
 
     def raw(self, n: int) -> bytes:
         if n < 0 or self.pos + n > len(self.buf):

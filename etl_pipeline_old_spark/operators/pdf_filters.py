@@ -22,6 +22,8 @@ code beyond the table.
 
 from __future__ import annotations
 
+from .bitio import MsbReader, MsbWriter
+
 _A85_EXP = (85 ** 4, 85 ** 3, 85 ** 2, 85, 1)
 
 
@@ -160,40 +162,20 @@ def rle_decode(data: bytes) -> bytes:
 _LZW_CLEAR, _LZW_EOD = 256, 257
 
 
-class _MsbBitWriter:
-    def __init__(self) -> None:
-        self.acc = 0
-        self.nbits = 0
-        self.out = bytearray()
-
-    def put(self, code: int, width: int) -> None:
-        self.acc = (self.acc << width) | code
-        self.nbits += width
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-
-    def getvalue(self) -> bytes:
-        if self.nbits:
-            self.out.append((self.acc << (8 - self.nbits)) & 0xFF)
-            self.acc = self.nbits = 0
-        return bytes(self.out)
-
-
 def lzw_encode(data: bytes, early: int = 1) -> bytes:
-    bw = _MsbBitWriter()
+    bw = MsbWriter()
     table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
     nxt, width = 258, 9
-    bw.put(_LZW_CLEAR, width)
+    bw.write(_LZW_CLEAR, width)
     cur = b""
     for byte in data:
         ext = cur + bytes([byte])
         if ext in table:
             cur = ext
             continue
-        bw.put(table[cur], width)
+        bw.write(table[cur], width)
         if nxt == 4096:
-            bw.put(_LZW_CLEAR, width)
+            bw.write(_LZW_CLEAR, width)
             table = {bytes([i]): i for i in range(256)}
             nxt, width = 258, 9
         else:
@@ -203,36 +185,24 @@ def lzw_encode(data: bytes, early: int = 1) -> bytes:
                 width += 1
         cur = bytes([byte])
     if cur:
-        bw.put(table[cur], width)
+        bw.write(table[cur], width)
         # the decoder appends one entry after the final data code and
         # then reads EOD — mirror its width there (no add on this side,
         # so the condition shifts by one vs the mid-loop check)
         if nxt + early >= (1 << width) and width < 12:
             width += 1
-    bw.put(_LZW_EOD, width)
+    bw.write(_LZW_EOD, width)
     return bw.getvalue()
 
 
 def lzw_decode(data: bytes, early: int = 1) -> bytes:
     out = bytearray()
-    pos = 0  # bit position
-    total = len(data) * 8
+    br = MsbReader(data)
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
     prev: bytes | None = None
-
-    def take(w: int) -> int:
-        nonlocal pos
-        if pos + w > total:
-            raise ValueError("lzw: coded data exhausted")
-        v = 0
-        for _ in range(w):
-            v = (v << 1) | ((data[pos >> 3] >> (7 - (pos & 7))) & 1)
-            pos += 1
-        return v
-
     while True:
-        code = take(width)
+        code = br.read(width)
         if code == _LZW_EOD:
             return bytes(out)
         if code == _LZW_CLEAR:

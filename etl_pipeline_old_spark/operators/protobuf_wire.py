@@ -25,33 +25,14 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import read_uvarint, zigzag_decode
+
 WT_VARINT = 0
 WT_I64 = 1
 WT_LEN = 2
 WT_I32 = 5
 
 Message = dict[int, list[tuple[int, "int | bytes"]]]
-
-
-def read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    """ULEB128 at ``pos`` → (value, next_pos)."""
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("protobuf: truncated varint")
-        b = buf[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("protobuf: varint longer than 10 bytes")
-
-
-def zigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
 
 
 def parse_message(buf: bytes) -> Message:
@@ -64,19 +45,19 @@ def parse_message(buf: bytes) -> Message:
     pos = 0
     n = len(buf)
     while pos < n:
-        tag, pos = read_varint(buf, pos)
+        tag, pos = read_uvarint(buf, pos)
         field, wtype = tag >> 3, tag & 0x07
         if field == 0:
             raise ValueError("protobuf: field number 0 is reserved")
         if wtype == WT_VARINT:
-            val, pos = read_varint(buf, pos)
+            val, pos = read_uvarint(buf, pos)
         elif wtype == WT_I64:
             if pos + 8 > n:
                 raise ValueError("protobuf: truncated fixed64")
             val = buf[pos : pos + 8]
             pos += 8
         elif wtype == WT_LEN:
-            ln, pos = read_varint(buf, pos)
+            ln, pos = read_uvarint(buf, pos)
             if pos + ln > n:
                 raise ValueError("protobuf: LEN field runs past message end")
             val = buf[pos : pos + ln]
@@ -109,7 +90,7 @@ def get_uint(msg: Message, field: int, default: int | None = None) -> int | None
 def get_sint(msg: Message, field: int, default: int | None = None) -> int | None:
     """sint32/sint64 (zigzag varint) accessor."""
     v = get_uint(msg, field, None)
-    return default if v is None else zigzag(v)
+    return default if v is None else zigzag_decode(v)
 
 
 def get_bytes(msg: Message, field: int, default: bytes | None = None) -> bytes | None:
@@ -159,7 +140,7 @@ def get_packed_uints(msg: Message, field: int) -> list[int]:
         elif wtype == WT_LEN:
             pos = 0
             while pos < len(val):
-                v, pos = read_varint(val, pos)
+                v, pos = read_uvarint(val, pos)
                 out.append(v)
         else:
             raise ValueError(f"protobuf: field {field} is not a repeated uint")

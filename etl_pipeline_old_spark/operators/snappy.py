@@ -37,9 +37,14 @@ ValueError — one chunk costs one record, never the job.
 
 from __future__ import annotations
 
+from .bitio import read_uvarint, write_uvarint
+
 
 def decompress(buf: bytes) -> bytes:
-    expect, pos = _varint(buf, 0)
+    try:
+        expect, pos = read_uvarint(buf, 0, max_bytes=5)
+    except ValueError as exc:
+        raise ValueError(f"snappy: length preamble: {exc}") from None
     out = bytearray()
     n = len(buf)
     while pos < n:
@@ -96,7 +101,7 @@ def decompress(buf: bytes) -> bytes:
 
 def compress(data: bytes) -> bytes:
     """Spec-valid all-literals encoding (no matching attempted)."""
-    out = bytearray(_varint_encode(len(data)))
+    out = bytearray(write_uvarint(len(data)))
     pos = 0
     while pos < len(data):
         chunk = data[pos : pos + 65536]
@@ -115,31 +120,3 @@ def compress(data: bytes) -> bytes:
         out += chunk
         pos += len(chunk)
     return bytes(out)
-
-
-def _varint(buf: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("snappy: truncated length preamble")
-        b = buf[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 35:
-            raise ValueError("snappy: preamble varint longer than 5 bytes")
-
-
-def _varint_encode(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)

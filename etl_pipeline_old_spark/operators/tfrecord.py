@@ -38,7 +38,8 @@ from __future__ import annotations
 
 import struct
 
-from .protobuf_wire import WT_LEN, WT_VARINT, parse_message, read_varint
+from .bitio import read_uvarint, write_uvarint
+from .protobuf_wire import WT_LEN, WT_VARINT, parse_message
 
 # ------------------------------------------------------------- crc32c
 _CRC32C_POLY = 0x82F63B78  # 0x1EDC6F41 reflected
@@ -110,23 +111,11 @@ def iter_tfrecords(blob: bytes):
 
 # ------------------------------------------------------- tf.Example
 def _field_key(field: int, wt: int) -> bytes:
-    return _varint((field << 3) | wt)
-
-
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return write_uvarint((field << 3) | wt)
 
 
 def _len_field(field: int, payload: bytes) -> bytes:
-    return _field_key(field, WT_LEN) + _varint(len(payload)) + payload
+    return _field_key(field, WT_LEN) + write_uvarint(len(payload)) + payload
 
 
 def encode_example(features: dict) -> bytes:
@@ -149,7 +138,7 @@ def encode_example(features: dict) -> bytes:
             # negative int64s go as two's-complement 64-bit varints
             # (10 bytes), per the protobuf wire spec
             packed = b"".join(
-                _varint(int(v) & 0xFFFFFFFFFFFFFFFF) for v in val
+                write_uvarint(int(v) & 0xFFFFFFFFFFFFFFFF) for v in val
             )
             flist = _len_field(3, _len_field(1, packed))  # Int64List packed
         else:
@@ -197,7 +186,7 @@ def decode_example(buf: bytes) -> dict:
                 if wt_ == WT_LEN:
                     pos = 0
                     while pos < len(v):
-                        n, pos = read_varint(v, pos)
+                        n, pos = read_uvarint(v, pos)
                         vals.append(_to_i64(n))
                 elif wt_ == WT_VARINT:
                     vals.append(_to_i64(v))

@@ -49,51 +49,7 @@ from __future__ import annotations
 
 import heapq
 
-# ------------------------------------------------------------- bit I/O
-
-
-class BitReader:
-    """LSB-first bit reader (VP8L convention for everything except the
-    prefix-code bits themselves, which arrive MSB-of-code first)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        # batched LSB-first extraction (r15): one int.from_bytes per call
-        # instead of one mask/shift per BIT — same values, same
-        # truncation rule (any needed bit's byte out of range raises)
-        if n <= 0:
-            return 0
-        pos = self.pos
-        last_byte = (pos + n - 1) >> 3
-        if last_byte >= len(self.data):
-            raise ValueError("vp8l: truncated stream")
-        chunk = int.from_bytes(self.data[pos >> 3 : last_byte + 1], "little")
-        self.pos = pos + n
-        return (chunk >> (pos & 7)) & ((1 << n) - 1)
-
-
-class BitWriter:
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n):
-            self.bits.append((value >> i) & 1)
-
-    def write_code(self, code: int, length: int) -> None:
-        # canonical prefix-code bits go MSB first
-        for i in range(length - 1, -1, -1):
-            self.bits.append((code >> i) & 1)
-
-    def getvalue(self) -> bytes:
-        out = bytearray((len(self.bits) + 7) // 8)
-        for i, b in enumerate(self.bits):
-            out[i >> 3] |= b << (i & 7)
-        return bytes(out)
-
+from .bitio import LsbReader, LsbWriter
 
 # ------------------------------------------------------ canonical codes
 
@@ -158,7 +114,7 @@ class _Decoder:
                     lut[base | (high << length)] = entry
         self.lut = lut
 
-    def read(self, br: BitReader) -> int:
+    def read(self, br: LsbReader) -> int:
         if self.single is not None:
             return self.single
         data = br.data
@@ -183,7 +139,7 @@ class _Decoder:
         raise ValueError("vp8l: invalid prefix code in stream")
 
 
-def _read_prefix_code(br: BitReader, alphabet_size: int) -> _Decoder:
+def _read_prefix_code(br: LsbReader, alphabet_size: int) -> _Decoder:
     if br.read(1):  # simple code: 1 or 2 symbols
         num_symbols = br.read(1) + 1
         if br.read(1):
@@ -244,7 +200,7 @@ def _read_prefix_code(br: BitReader, alphabet_size: int) -> _Decoder:
 # --------------------------------------------------------- value coding
 
 
-def _prefix_value(br: BitReader, sym: int) -> int:
+def _prefix_value(br: LsbReader, sym: int) -> int:
     """LZ77 length / distance-code value coding: symbols 0..3 are the
     values 1..4; beyond that each symbol carries extra bits."""
     if sym < 4:
@@ -301,7 +257,7 @@ def _div_round_up(a: int, b: int) -> int:
     return (a + b - 1) // b
 
 
-def _decode_image_stream(br: BitReader, w: int, h: int, level0: bool):
+def _decode_image_stream(br: LsbReader, w: int, h: int, level0: bool):
     """Decode one entropy-coded image; returns (pixels, transforms) —
     pixels row-major ARGB ints at the (possibly transform-reduced)
     width, transforms only at level 0."""
@@ -589,7 +545,7 @@ def decode_vp8l(data: bytes) -> tuple[int, int, list]:
     list, row-major)."""
     if not data or data[0] != 0x2F:
         raise ValueError("vp8l: bad signature")
-    br = BitReader(data[1:])
+    br = LsbReader(data[1:])
     w = br.read(14) + 1
     h = br.read(14) + 1
     br.read(1)  # alpha hint
@@ -649,16 +605,21 @@ def _huffman_lengths(freqs: dict[int, int]) -> dict[int, int]:
 
 
 def _encoder_codes(lengths_by_sym: dict[int, int]) -> dict:
+    """symbol -> (code, length) ready for ``LsbWriter.write``: prefix-code
+    bits go MSB-of-code first, so each canonical code is bit-reversed."""
     if all(length == 0 for length in lengths_by_sym.values()):
         (sym,) = lengths_by_sym
         return {sym: (0, 0)}  # single-symbol code: zero bits per use
     full = [0] * (max(lengths_by_sym) + 1)
     for s, length in lengths_by_sym.items():
         full[s] = length
-    return _canonical_codes(full)
+    return {
+        sym: (int(f"{code:0{length}b}"[::-1], 2), length)
+        for sym, (code, length) in _canonical_codes(full).items()
+    }
 
 
-def _write_prefix_code(bw: BitWriter, lengths_by_sym: dict[int, int],
+def _write_prefix_code(bw: LsbWriter, lengths_by_sym: dict[int, int],
                        alphabet_size: int) -> None:
     syms = sorted(lengths_by_sym)
     if len(syms) <= 2 and all(s < 256 for s in syms):
@@ -702,15 +663,13 @@ def _write_prefix_code(bw: BitWriter, lengths_by_sym: dict[int, int],
     bw.write(0, 1)                          # no explicit max_symbol
     cl_codes = _encoder_codes(cl_lengths)
     for cl in trimmed:
-        code, ln = cl_codes[cl]
-        bw.write_code(code, ln)
+        bw.write(*cl_codes[cl])
     # remaining symbols implicitly zero: alphabet tail needs nothing —
     # the reader stops at alphabet_size; but our loop above wrote only
     # the trimmed prefix, so emit zero-lengths for the tail via one
     # symbol at a time only if the tail is nonempty
     for _ in range(alphabet_size - len(trimmed)):
-        code, ln = cl_codes[0]
-        bw.write_code(code, ln)
+        bw.write(*cl_codes[0])
 
 
 def _forward_predict(pixels: list, w: int, h: int, modes: list,
@@ -759,7 +718,7 @@ def encode_vp8l(width: int, height: int, pixels: list,
         raise ValueError("vp8l: pixel count does not match dimensions")
     if palette and (subtract_green or use_lz77 or predictor_modes):
         raise ValueError("vp8l: fixture encoder palettes stand alone")
-    bw = BitWriter()
+    bw = LsbWriter()
     bw.write(width - 1, 14)
     bw.write(height - 1, 14)
     bw.write(1, 1)   # alpha may be present
@@ -840,7 +799,7 @@ def encode_vp8l(width: int, height: int, pixels: list,
     return payload
 
 
-def _encode_image_stream(bw: BitWriter, pixels: list,
+def _encode_image_stream(bw: LsbWriter, pixels: list,
                          use_lz77: bool = False, cache_bits: int = 0,
                          level0: bool = False) -> None:
     """Entropy-code ``pixels`` (no transforms at this level): color
@@ -924,8 +883,7 @@ def _encode_image_stream(bw: BitWriter, pixels: list,
     gc, rc, bc, ac, dc = (_encoder_codes(x) for x in (gl, rl, bl, al, dl))
 
     def emit(codes, sym):
-        code, ln = codes[sym]
-        bw.write_code(code, ln)
+        bw.write(*codes[sym])
 
     for tok in tokens:
         if tok[0] == "lit":

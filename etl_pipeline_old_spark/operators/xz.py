@@ -36,6 +36,8 @@ import lzma
 import struct
 import zlib
 
+from .bitio import read_uvarint, write_uvarint
+
 _MAGIC = b"\xfd7zXZ\x00"
 _FOOTER_MAGIC = b"YZ"
 _CHECK_NONE = 0x00
@@ -88,31 +90,6 @@ def _check_bytes(check: int, payload: bytes) -> bytes:
     raise ValueError(f"xz: unsupported check type {check:#x}")
 
 
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _read_varint(buf: bytes, at: int) -> tuple[int, int]:
-    n = shift = 0
-    while True:
-        if at >= len(buf) or shift > 63:
-            raise ValueError("xz: truncated varint")
-        b = buf[at]
-        at += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, at
-        shift += 7
-
-
 def _dict_size_prop(dict_size: int) -> int:
     """LZMA2 filter property byte for a dict size (spec: 2^(p/2+11)
     rounded up through the 2+bit pattern); we emit only exact powers
@@ -149,8 +126,9 @@ def _block(
     bflags = 0xC0 if size_fields else 0x00
     body = bytes([bflags])
     if size_fields:
-        body += _varint(len(comp)) + _varint(len(payload))
-    body += _varint(0x21) + _varint(1) + bytes([_dict_size_prop(1 << 23)])
+        body += write_uvarint(len(comp)) + write_uvarint(len(payload))
+    body += write_uvarint(0x21) + write_uvarint(1)
+    body += bytes([_dict_size_prop(1 << 23)])
     total = 1 + len(body) + 4  # size byte + body + crc
     padded = (total + 3) // 4 * 4
     body += b"\x00" * (padded - total)
@@ -194,9 +172,9 @@ def write_xz_blocks(
             block = block[:keep] + b"\x00" * (-keep % 4)
         out += block
         records.append((unpadded, usize))
-    index = bytearray(b"\x00" + _varint(len(records)))
+    index = bytearray(b"\x00" + write_uvarint(len(records)))
     for unpadded, usize in records:
-        index += _varint(unpadded) + _varint(usize)
+        index += write_uvarint(unpadded) + write_uvarint(usize)
     index += b"\x00" * (-len(index) % 4)
     index += struct.pack("<I", zlib.crc32(index))
     out += index
@@ -239,12 +217,12 @@ def read_xz_index(footer_and_index: bytes, file_len: int) -> list[dict]:
         raise ValueError("xz: index CRC mismatch")
     if index[0] != 0x00:
         raise ValueError("xz: bad index indicator")
-    n, at = _read_varint(index, 1)
+    n, at = read_uvarint(index, 1)
     out = []
     pos = 12  # first block starts after the 12-byte stream header
     for _ in range(n):
-        unpadded, at = _read_varint(index, at)
-        usize, at = _read_varint(index, at)
+        unpadded, at = read_uvarint(index, at)
+        usize, at = read_uvarint(index, at)
         padded = (unpadded + 3) // 4 * 4
         out.append(
             {"offset": pos, "compressed_len": padded,
@@ -286,13 +264,13 @@ def decode_xz_block(block: bytes, check: int = _CHECK_NONE) -> bytes:
     at = 2
     comp_size = uncomp_size = None
     if flags & 0x40:
-        comp_size, at = _read_varint(hdr, at)
+        comp_size, at = read_uvarint(hdr, at)
     if flags & 0x80:
-        uncomp_size, at = _read_varint(hdr, at)
-    fid, at = _read_varint(hdr, at)
+        uncomp_size, at = read_uvarint(hdr, at)
+    fid, at = read_uvarint(hdr, at)
     if fid != 0x21:
         raise ValueError(f"xz: filter 0x{fid:02x} is not LZMA2")
-    psz, at = _read_varint(hdr, at)
+    psz, at = read_uvarint(hdr, at)
     if psz != 1:
         raise ValueError("xz: bad LZMA2 properties size")
     if at >= hdr_size - 4:

@@ -60,6 +60,8 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import LsbReader
+
 _MAGIC = 0xFD2FB528
 _SKIP_MAGIC_LO = 0x184D2A50  # ..5F all skippable
 _SEEK_SKIP_MAGIC = 0x184D2A5E
@@ -127,7 +129,7 @@ def xxh64(data: bytes, seed: int = 0) -> int:
     return h
 
 
-# ------------------------------------------------- bit readers
+# ------------------------------------------------- backward bit reader
 class _BackBits:
     """Backward bitstream (RFC 8878 §4.1): written forward
     little-endian, read from the top after dropping the 1-padding
@@ -184,33 +186,11 @@ class _BackBits:
         return self.consumed == self.total
 
 
-class _FwdBits:
-    """Forward little-endian bitstream — FSE table descriptions only."""
-
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes) -> None:
-        self.buf = buf
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        end = self.pos + n
-        if (end + 7) // 8 > len(self.buf):
-            raise ValueError("zstd: FSE header overruns section")
-        chunk = self.buf[self.pos // 8 : (end + 7) // 8]
-        v = int.from_bytes(chunk, "little") >> (self.pos % 8)
-        self.pos = end
-        return v & ((1 << n) - 1)
-
-    def bytes_consumed(self) -> int:
-        return (self.pos + 7) // 8
-
-
 # ------------------------------------------------- FSE
 def read_fse_counts(buf: bytes, max_symbol: int, max_acc: int):
     """Parse an FSE table description (RFC 8878 §4.1.1): returns
     ``(normalized_counts, accuracy_log, bytes_consumed)``."""
-    bits = _FwdBits(buf)
+    bits = LsbReader(buf)
     acc = bits.read(4) + 5
     if acc > max_acc:
         raise ValueError(f"zstd: FSE accuracy log {acc} > max {max_acc}")
@@ -250,7 +230,7 @@ def read_fse_counts(buf: bytes, max_symbol: int, max_acc: int):
         while remaining < threshold and remaining > 1:
             nb -= 1
             threshold >>= 1
-    return counts, acc, bits.bytes_consumed()
+    return counts, acc, bits.align()
 
 
 def build_fse_table(counts: list[int], acc: int):

@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..workdir import cache_root
+from ..workdir import run_dir
 from ..catalog import load_table
 from ..operators.dedup import MD5_LONG_SQL, md5_long
 from ..operators.graph import connected_components
@@ -469,8 +469,6 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_scd2_apply for history maintenance.",
 )
 def stream_er_incremental_link(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
 
     from ..session import ensure_session_confs
 
@@ -479,12 +477,9 @@ def stream_er_incremental_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = records.filter(~is_delta(F.col("rec_id")))
     delta = records.filter(is_delta(F.col("rec_id")))
 
-    tag = f"er_feed_{os.path.basename(os.path.normpath(sf_dir))}"
-    feed = os.path.join(cache_root(), tag)
-    target = feed + "_target"
-    chk = feed + "_chk"
-    for d in (feed, target, chk):
-        shutil.rmtree(d, ignore_errors=True)
+    feed, target, chk = (
+        run_dir(f"er_{part}", sf_dir) for part in ("feed", "target", "chk")
+    )
     delta.repartition(2).write.parquet(feed)
 
     schema = spark.read.parquet(feed).schema

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
+from ..workdir import run_dir
 from ..catalog import load_table
 from ..operators import dedup as DD
 from ..operators.graph import connected_components
@@ -775,19 +775,14 @@ def grouped_arrow_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipeline_streaming_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from ..session import ensure_session_confs
     from ..sources import python_datasource
 
     ensure_session_confs(spark)
-    base = os.path.join(
-        cache_root(),
-        f"stream_corpus_{os.path.basename(os.path.normpath(sf_dir))}",
+    feed, target, chk = (
+        run_dir(f"stream_corpus_{part}", sf_dir) for part in ("feed", "target", "chk")
     )
-    feed, target, chk = base + "_feed", base + "_target", base + "_chk"
-    for p in (feed, target, chk):
-        shutil.rmtree(p, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.write.mode("overwrite").option("maxRecordsPerFile", 100).json(feed)
@@ -829,7 +824,7 @@ def pipeline_streaming_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # part-00000-<newuuid> names that sort INTO the consumed prefix and
         # be skipped, making this check vacuous): stage, then rename into
         # the feed under a 'part-zzz-replay' prefix.
-        staging = base + "_replay"
+        staging = run_dir("stream_corpus_replay", sf_dir)
         (
             docs.filter(F.col("doc_id") % 7 == 0)
             .write.mode("overwrite")

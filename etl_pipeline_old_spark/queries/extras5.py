@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
+from ..workdir import run_dir
 from ..catalog import load_table
 from ..operators.dedup import MD5_LONG_SQL, md5_long
 from ..registry import register
@@ -654,13 +654,9 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_session_confs
 
     ensure_session_confs(spark)
-    base = os.path.join(
-        cache_root(),
-        f"scd2_stream_{os.path.basename(os.path.normpath(sf_dir))}",
+    feed, target, chk = (
+        run_dir(f"scd2_stream_{part}", sf_dir) for part in ("feed", "target", "chk")
     )
-    feed, target, chk = base + "_feed", base + "_target", base + "_chk"
-    for p in (feed, target, chk):  # stable path: clean, don't accumulate
-        shutil.rmtree(p, ignore_errors=True)
     os.makedirs(feed, exist_ok=True)
 
     o = load_table(spark, sf_dir, "orders")
@@ -680,7 +676,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage the two changelog shards as ONE parquet file each, renamed so
     # the corrections shard sorts (and is admitted) after the initial load
     for tag, shard in (("aaa-initial", v1), ("zzz-corrections", v2)):
-        tmp = f"{base}_stage_{tag}"
+        tmp = run_dir(f"scd2_stream_stage_{tag}", sf_dir)
         shard.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = next(p for p in os.listdir(tmp) if p.startswith("part-"))
         os.rename(os.path.join(tmp, part), os.path.join(feed, f"{tag}.parquet"))

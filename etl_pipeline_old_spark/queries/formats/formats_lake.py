@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from ...catalog import load_table
 from ...registry import register
 from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
-from ...workdir import scratch_path
+from ...workdir import run_dir
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -670,7 +670,6 @@ def _decode_mbox_frame(frame: DataFrame) -> DataFrame:
     "family's operational story beside the batch capstone.",
 )
 def stream_mail_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ...session import ensure_session_confs
 
@@ -678,10 +677,8 @@ def stream_mail_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = stage_doc_files(
         spark, sf_dir, "mbox_files", "mbox", _render_mbox
     )
-    base = scratch_path("mbox_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("mbox_stream_target", sf_dir)
+    chk = run_dir("mbox_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")

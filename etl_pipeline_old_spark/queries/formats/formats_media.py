@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from ...catalog import load_table
 from ...registry import register
 from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
-from ...workdir import scratch_path
+from ...workdir import run_dir, scratch_path
 
 
 @register(
@@ -559,16 +559,13 @@ def multimodal_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "malformed file fails its record, not the stream.",
 )
 def stream_png_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ...session import ensure_session_confs
 
     ensure_session_confs(spark)
     feed = _stage_png_files(spark, sf_dir)
-    base = scratch_path("png_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("png_stream_target", sf_dir)
+    chk = run_dir("png_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")

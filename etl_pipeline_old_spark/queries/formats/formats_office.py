@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ...catalog import load_table
 from ...registry import register
 from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
-from ...workdir import scratch_path
+from ...workdir import run_dir
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -1102,7 +1102,6 @@ def _decode_docx_frame(frame: DataFrame) -> DataFrame:
     "document bucket at 100 TB.",
 )
 def stream_docx_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ...session import ensure_session_confs
 
@@ -1110,10 +1109,8 @@ def stream_docx_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = stage_doc_files(
         spark, sf_dir, "docx_files", "docx", _render_docx
     )
-    base = scratch_path("docx_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("docx_stream_target", sf_dir)
+    chk = run_dir("docx_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ...catalog import load_table
 from ...registry import register
 from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
-from ...workdir import scratch_path
+from ...workdir import run_dir
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -500,7 +500,6 @@ def pipeline_pdf_corpus_mixed(
 def stream_pdf_xrefstream_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
 
     from ...session import ensure_session_confs
 
@@ -509,10 +508,8 @@ def stream_pdf_xrefstream_ingest(
         spark, sf_dir, "pdf_xrefstream_files", "pdf",
         _render_pdf_xrefstream,
     )
-    base = scratch_path("pdf_xrefstream_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("pdf_xrefstream_stream_target", sf_dir)
+    chk = run_dir("pdf_xrefstream_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ...registry import register
 from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files, stage_shard_files
-from ...workdir import run_dir, scratch_path, write_atomic
+from ...workdir import run_dir, write_atomic
 
 from .formats_containers import (  # noqa: F401 — shared helpers
     _PDF_LINE,
@@ -394,16 +394,13 @@ def _decode_pdf_frame(frame: DataFrame) -> DataFrame:
     "per-trigger parse, exactly-once appends through the checkpoint.",
 )
 def stream_pdf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ...session import ensure_session_confs
 
     ensure_session_confs(spark)
     feed = stage_doc_files(spark, sf_dir, "pdf_files", "pdf", _render_pdf)
-    base = scratch_path("pdf_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("pdf_stream_target", sf_dir)
+    chk = run_dir("pdf_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")
@@ -1171,7 +1168,6 @@ def video_text_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "appends.",
 )
 def stream_video_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ...session import ensure_session_confs
 
@@ -1180,10 +1176,8 @@ def stream_video_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "videotext_shards", _build_videotext_shard,
         suffix="tar",
     )
-    base = scratch_path("videotext_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("videotext_stream_target", sf_dir)
+    chk = run_dir("videotext_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")

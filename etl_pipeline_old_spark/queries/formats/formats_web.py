@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ...catalog import load_table
 from ...registry import register
 from ...sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
-from ...workdir import scratch_path
+from ...workdir import run_dir
 
 from .formats_media import _CORRUPT_MOD
 
@@ -1195,7 +1195,6 @@ def multimodal_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every micro-batch recovered its bodies byte-exactly).",
 )
 def stream_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ...session import ensure_session_confs
 
@@ -1203,10 +1202,8 @@ def stream_bson_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = stage_doc_files(
         spark, sf_dir, "bson_files", "bson", _render_bson
     )
-    base = scratch_path("bson_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("bson_stream_target", sf_dir)
+    chk = run_dir("bson_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")

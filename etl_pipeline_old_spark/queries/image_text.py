@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.files import BINARYFILE_SCHEMA, read_blobs, stage_shard_files
-from ..workdir import reap_warehouse, run_dir, scratch_path, table_name, write_atomic
+from ..workdir import reap_warehouse, run_dir, table_name, write_atomic
 from .web_corpus import _warc_uri
 
 # The shared image pool: pages reference 1 + doc_id % 2 images, image k
@@ -357,16 +357,14 @@ def _pair_stats(pages: DataFrame, imgs: DataFrame) -> DataFrame:
     "image pool.",
 )
 def stream_image_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ..session import ensure_session_confs
 
     ensure_session_confs(spark)
     feed = _stage_pair_warc_shards(spark, sf_dir)
-    base = scratch_path("pair_stream", sf_dir)
-    pages_t, imgs_t, chk = base + "_pages", base + "_imgs", base + "_chk"
-    for p in (pages_t, imgs_t, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    pages_t, imgs_t, chk = (
+        run_dir(f"pair_stream_{part}", sf_dir) for part in ("pages", "imgs", "chk")
+    )
 
     stream = (
         spark.readStream.format("binaryFile")
@@ -790,7 +788,6 @@ def pipeline_image_text_pairs_incremental(
 )
 def stream_image_text_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import shutil
     import uuid
 
     from ..session import ensure_session_confs
@@ -798,10 +795,9 @@ def stream_image_text_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     crawl = _stage_pair_warc_shards(spark, sf_dir)
     bf = read_blobs(spark, crawl, "warc.gz").select("content")
-    base = scratch_path("pair_ssj", sf_dir)
-    pages_feed, imgs_feed = base + "_pages", base + "_imgs"
-    for p in (pages_feed, imgs_feed):
-        shutil.rmtree(p, ignore_errors=True)
+    pages_feed, imgs_feed = (
+        run_dir(f"pair_ssj_{part}", sf_dir) for part in ("pages", "imgs")
+    )
 
     epoch = datetime.datetime(2026, 1, 1)
     far = epoch + datetime.timedelta(days=10)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.files import BINARYFILE_SCHEMA, read_blobs, stage_doc_files
-from ..workdir import scratch_path
+from ..workdir import run_dir
 
 _DOC_PIECE_CHARS = 17
 _DOC_TORN_MOD = 50
@@ -509,16 +509,13 @@ def _decode_doc_frame(frame: DataFrame) -> DataFrame:
     "documents at 100 TB.",
 )
 def stream_doc_legacy_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ..session import ensure_session_confs
 
     ensure_session_confs(spark)
     feed = stage_doc_files(spark, sf_dir, "doc_files", "doc", _render_doc)
-    base = scratch_path("doc_legacy_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("doc_legacy_stream_target", sf_dir)
+    chk = run_dir("doc_legacy_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")

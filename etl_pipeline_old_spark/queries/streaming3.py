@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
+from ..workdir import run_dir
 from ..catalog import load_table
 from ..operators import similarity as SIM
 from ..registry import register
@@ -45,13 +45,9 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stable pid-keyed paths, cleared up-front (the stream_er pattern):
     # repeated invocations in a long-lived session reuse one directory set
     # instead of leaking a fresh uuid-suffixed trio per run
-    base = os.path.join(
-        cache_root(),
-        f"ann_probe_{os.path.basename(os.path.normpath(sf_dir))}",
+    feed, target, chk = (
+        run_dir(f"ann_probe_{part}", sf_dir) for part in ("feed", "target", "chk")
     )
-    feed, target, chk = base + "_feed", base + "_target", base + "_chk"
-    for p in (feed, target, chk):
-        shutil.rmtree(p, ignore_errors=True)
     os.makedirs(feed, exist_ok=True)
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -69,7 +65,7 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stage the query feed as TWO single-file micro-batches
         batches = (QUERY_IDS[: len(QUERY_IDS) // 2], QUERY_IDS[len(QUERY_IDS) // 2 :])
         for tag, ids in zip(("aaa-first", "zzz-second"), batches):
-            tmp = f"{base}_stage_{tag}"
+            tmp = run_dir(f"ann_probe_stage_{tag}", sf_dir)
             emb.filter(F.col("vec_id").isin(list(ids))).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(tmp)

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ..sources.files import BINARYFILE_SCHEMA, SHARD_DOCS, read_blobs, stage_shard_files
-from ..workdir import scratch_path
+from ..workdir import run_dir
 
 # ---------------------------------------------------------------------------
 # HTML -> text extraction
@@ -749,16 +749,13 @@ def web_content_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "path), and the stream keeps going.",
 )
 def stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
 
     from ..session import ensure_session_confs
 
     ensure_session_confs(spark)
     feed = _stage_warc_shards(spark, sf_dir)
-    base = scratch_path("warc_stream", sf_dir)
-    target, chk = base + "_target", base + "_chk"
-    for p in (target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    target = run_dir("warc_stream_target", sf_dir)
+    chk = run_dir("warc_stream_chk", sf_dir)
 
     stream = (
         spark.readStream.format("binaryFile")

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..workdir import cache_root
+from ..workdir import run_dir
 from ..catalog import events_stream, parquet_schema, restore_ts, table_path
 from ..session import ensure_session_confs
 
@@ -30,11 +30,7 @@ def _duplicated_event_feed(spark: SparkSession, sf_dir: str) -> tuple[str, objec
     """Stage the events table TWICE (two files) so the stream sees every
     record replayed — the dedup operator must emit each exactly once."""
     src = table_path(sf_dir, "events")
-    feed = os.path.join(
-        cache_root(),
-        f"dup_feed_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(feed, ignore_errors=True)
+    feed = run_dir("dup_feed", sf_dir)
     os.makedirs(feed)
     shutil.copy(src, os.path.join(feed, "batch1.parquet"))
     shutil.copy(src, os.path.join(feed, "batch2.parquet"))
@@ -246,10 +242,8 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_confs(spark)
     feed, schema = _duplicated_event_feed(spark, sf_dir)
-    target = feed + "_target"
-    chk = feed + "_chk"
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(chk, ignore_errors=True)
+    target = run_dir("dup_feed_target", sf_dir)
+    chk = run_dir("dup_feed_chk", sf_dir)
 
     stream = (
         spark.readStream.schema(schema)

@@ -52,6 +52,12 @@ def test_zigzag_varints():
         assert read_long(io.BytesIO(bytes(out))) == v
 
 
+def test_long_outside_int64_is_refused_not_wrapped():
+    for v in (2 ** 63, -(2 ** 63) - 1, 2 ** 64):
+        with pytest.raises(ValueError, match="does not fit a long"):
+            write_long(bytearray(), v)
+
+
 @pytest.mark.parametrize("codec", ["null", "deflate", "zstandard", "bzip2", "xz"])
 def test_container_roundtrip(codec):
     blob = write_avro(_RECS, _SCHEMA, codec=codec)

@@ -16,6 +16,7 @@ import pytest
 
 from etl_pipeline_old_spark.operators import orc as myorc
 from etl_pipeline_old_spark.operators import protobuf_wire as pw
+from etl_pipeline_old_spark.operators.bitio import zigzag_decode
 
 _RNG = random.Random(7)
 _N = 5000
@@ -294,7 +295,7 @@ def test_protobuf_wire_primitives():
     # 08 96 01 → field 1 varint 150 (the spec's own worked example)
     msg = pw.parse_message(bytes.fromhex("089601"))
     assert pw.get_uint(msg, 1) == 150
-    assert pw.zigzag(0) == 0 and pw.zigzag(1) == -1 and pw.zigzag(2) == 1
+    assert zigzag_decode(0) == 0 and zigzag_decode(1) == -1 and zigzag_decode(2) == 1
     with pytest.raises(ValueError, match="truncated varint"):
         pw.parse_message(b"\x08\x96")
     with pytest.raises(ValueError, match="wire type"):

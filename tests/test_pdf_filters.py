@@ -46,10 +46,10 @@ def test_lzw_loud_damage():
     with pytest.raises(ValueError, match="exhausted|beyond"):
         lzw_decode(wire[: len(wire) // 3])
     # a first code that is not a literal
-    from etl_pipeline_old_spark.operators.pdf_filters import _MsbBitWriter
+    from etl_pipeline_old_spark.operators.bitio import MsbWriter as _MsbBitWriter
     bw = _MsbBitWriter()
-    bw.put(256, 9)
-    bw.put(300, 9)
+    bw.write(256, 9)
+    bw.write(300, 9)
     with pytest.raises(ValueError, match="not a literal"):
         lzw_decode(bw.getvalue())
 

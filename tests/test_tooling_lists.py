@@ -5,7 +5,8 @@ silently vanish from the bench suite, the plans doc, or the idempotency
 sweep. Pin every list to the live registry. Source scans also pin the
 batch binaryFile read to its one implementation, the SparkSession
 builder to the one session factory, testdata table reads to the
-catalog, and fixture staging to workdir."""
+catalog, fixture staging to workdir, and bit I/O and varints to
+operators/bitio.py."""
 
 from __future__ import annotations
 
@@ -180,3 +181,54 @@ def test_fixture_staging_lives_in_workdir():
     assert "workdir.py" in found, "the scan no longer finds workdir's marker"
     del found["workdir.py"]
     assert not found, f"staging spelled outside workdir.py: {found}"
+
+
+def _bit_io_spellings(tree: ast.AST):
+    """Names of classes called ``*Bit*``, ``*LSB*`` or ``*MSB*`` (any case),
+    and ``line <n>`` of each ``(… & 0x7F) << shift`` varint accumulation
+    (a shift by a variable, not a constant)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ClassDef):
+            name = node.name
+            if "Bit" in name or "LSB" in name.upper() or "MSB" in name.upper():
+                yield name
+        elif (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.LShift)
+            and isinstance(node.left, ast.BinOp)
+            and isinstance(node.left.op, ast.BitAnd)
+            and any(
+                isinstance(x, ast.Constant) and x.value == 0x7F
+                for x in (node.left.left, node.left.right)
+            )
+            and not isinstance(node.right, ast.Constant)
+        ):
+            yield f"line {node.lineno}"
+
+
+# JPEG's reader and writer handle byte stuffing and markers; zstd's
+# backward reader peeks past the start with zero fill
+_OWN_BIT_IO = {
+    os.path.join("operators", "jpeg.py"): {"_BitReader", "_BitWriter"},
+    os.path.join("operators", "zstd.py"): {"_BackBits"},
+}
+
+
+def test_bit_io_and_varints_live_in_bitio():
+    probe = (
+        "class _BitReader: pass\n"
+        "class _LSBWriter: pass\n"
+        "v |= (b & 0x7F) << shift\n"
+        "n = (b & 0x7F) << 7\n"
+    )
+    assert sorted(_bit_io_spellings(ast.parse(probe))) == [
+        "_BitReader", "_LSBWriter", "line 3"]
+    found = _package_scan(_bit_io_spellings)
+    bitio = os.path.join("operators", "bitio.py")
+    assert bitio in found, "the scan no longer finds bitio's own definitions"
+    del found[bitio]
+    for path, exempt in _OWN_BIT_IO.items():
+        rest = [x for x in found.pop(path, []) if x not in exempt]
+        if rest:
+            found[path] = rest
+    assert not found, f"bit I/O or varints outside operators/bitio.py: {found}"

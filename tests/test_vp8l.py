@@ -13,9 +13,9 @@ import random
 
 import pytest
 
+from etl_pipeline_old_spark.operators.bitio import LsbWriter as BitWriter
 from etl_pipeline_old_spark.operators.vp8l import (
     _DIST_MAP,
-    BitWriter,
     _canonical_codes,
     _encode_image_stream,
     _write_prefix_value,
@@ -75,7 +75,8 @@ def test_distance_map_pinned_prefix_and_size():
 
 
 def test_prefix_value_coding_roundtrips():
-    from etl_pipeline_old_spark.operators.vp8l import BitReader, _prefix_value
+    from etl_pipeline_old_spark.operators.bitio import LsbReader as BitReader
+    from etl_pipeline_old_spark.operators.vp8l import _prefix_value
     for v in list(range(1, 20)) + [63, 64, 65, 1000, 4096]:
         sym, ev, eb = _write_prefix_value(v)
         bw = BitWriter()
@@ -239,8 +240,8 @@ def test_short_distance_neighbor_code():
         _write_prefix_code(bw, lengths, size)
     gc = _encoder_codes(gl)
     for g in lit_g:              # row 1 literals (r=b=0, a=0xff: 0 bits)
-        bw.write_code(*gc[g])
-    bw.write_code(*gc[256 + len_sym])
+        bw.write(*gc[g])
+    bw.write(*gc[256 + len_sym])
     bw.write(lev, leb)           # length extra bits
     # distance symbol 0 is single-symbol (0 bits); code value 1 -> map
     w2, h2, got = decode_vp8l(bytes([0x2F]) + bw.getvalue())
@@ -288,8 +289,8 @@ def test_backward_reference_before_start_is_loud():
                           (d40, 40)):
         _write_prefix_code(bw, lengths, size)
     gc = _encoder_codes(gl)
-    bw.write_code(*gc[5])                  # one literal
-    bw.write_code(*gc[256 + len_sym])
+    bw.write(*gc[5])                  # one literal
+    bw.write(*gc[256 + len_sym])
     bw.write(lev, leb)
     bw.write((1 << 17) - 1, 17)            # distance extra bits, huge
     with pytest.raises(ValueError, match="before start|truncated"):
@@ -317,7 +318,7 @@ def test_cache_index_without_cache_is_loud():
                           (one, 40)):
         _write_prefix_code(bw, lengths, size)
     gc = _encoder_codes(gl)
-    bw.write_code(*gc[279])      # length symbol with max extra bits
+    bw.write(*gc[279])      # length symbol with max extra bits
     with pytest.raises(ValueError, match="truncated|overruns|before start"):
         decode_vp8l(bytes([0x2F]) + bw.getvalue())
 
@@ -425,7 +426,7 @@ def test_meta_prefix_groups_with_live_codes():
         for x in range(w):
             p = px[y * w + x]
             group = 0 if x < 4 else 1
-            bw.write_code(*codes[group][(p >> 8) & 0xFF])
+            bw.write(*codes[group][(p >> 8) & 0xFF])
     w2, h2, got = decode_vp8l(bytes([0x2F]) + bw.getvalue())
     assert (w2, h2) == (w, h)
     assert got == px
@@ -528,12 +529,12 @@ def test_short_distance_codes_3_and_4_decode():
         _write_prefix_code(bw, lengths, size)
     gc, dc = _encoder_codes(gl), _encoder_codes(dl)
     for g in lit_g[:4]:          # row 1 literals
-        bw.write_code(*gc[g])
-    bw.write_code(*gc[99])       # (0,1) literal E
+        bw.write(*gc[g])
+    bw.write(*gc[99])       # (0,1) literal E
     for dist_sym in (2, 3, 0):   # codes 3, 4, 1
-        bw.write_code(*gc[256 + len1_sym])
+        bw.write(*gc[256 + len1_sym])
         bw.write(lev, leb)
-        bw.write_code(*dc[dist_sym])
+        bw.write(*dc[dist_sym])
     w2, h2, got = decode_vp8l(bytes([0x2F]) + bw.getvalue())
     # (1,1) <- code 3 <- index 5-5=0 = A;  (2,1) <- code 4 <- 6-3=3 = D
     # (3,1) <- code 1 <- 7-4=3 = D

@@ -161,7 +161,8 @@ def test_t0_shape_damage_classes_loud():
 
 
 def test_varints_roundtrip():
-    from etl_pipeline_old_spark.operators.xz import _read_varint, _varint
+    from etl_pipeline_old_spark.operators.bitio import read_uvarint as _read_varint
+    from etl_pipeline_old_spark.operators.bitio import write_uvarint as _varint
 
     for n in (0, 1, 127, 128, 300, 2 ** 20, 2 ** 35):
         enc = _varint(n)
