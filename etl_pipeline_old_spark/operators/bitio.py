@@ -20,7 +20,7 @@ integer accumulator and move whole bytes out every 64 bits.
 
 from __future__ import annotations
 
-_EXHAUSTED = "truncated bit stream: data exhausted"
+EXHAUSTED = "truncated bit stream: data exhausted"
 
 
 class _Reader:
@@ -49,14 +49,9 @@ class MsbReader(_Reader):
         end = pos + n
         data = self.data
         if end > len(data) << 3:
-            raise ValueError(_EXHAUSTED)
+            raise ValueError(EXHAUSTED)
         self.pos = end
-        if pos ^ (end - 1) < 8:
-            # within one byte: the 1- to 7-bit reads of unary codes, fax
-            # modes and header flags skip the slice and int.from_bytes
-            chunk = data[pos >> 3]
-        else:
-            chunk = int.from_bytes(data[pos >> 3 : (end + 7) >> 3], "big")
+        chunk = int.from_bytes(data[pos >> 3 : (end + 7) >> 3], "big")
         return (chunk >> (-end & 7)) & ((1 << n) - 1)
 
 
@@ -73,7 +68,7 @@ class LsbReader(_Reader):
         pos = self.pos
         last_byte = (pos + n - 1) >> 3
         if last_byte >= len(self.data):
-            raise ValueError(_EXHAUSTED)
+            raise ValueError(EXHAUSTED)
         chunk = int.from_bytes(self.data[pos >> 3 : last_byte + 1], "little")
         self.pos = pos + n
         return (chunk >> (pos & 7)) & ((1 << n) - 1)

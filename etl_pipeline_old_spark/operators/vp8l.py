@@ -49,7 +49,7 @@ from __future__ import annotations
 
 import heapq
 
-from .bitio import LsbReader, LsbWriter
+from .bitio import EXHAUSTED, LsbReader, LsbWriter
 
 # ------------------------------------------------------ canonical codes
 
@@ -83,6 +83,12 @@ def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
     return out
 
 
+def _reversed(code: int, length: int) -> int:
+    """The low ``length`` bits of ``code`` in reverse order: prefix-code
+    bits go MSB-of-code first into the LSB-first stream."""
+    return int(f"{code:0{length}b}"[::-1], 2)
+
+
 class _Decoder:
     """Canonical decoder with a one-level 8-bit lookup table (r15; the
     bit-by-bit walk made symbol decode the hottest frame in the corpus
@@ -90,8 +96,8 @@ class _Decoder:
     images — resolve in one table probe; longer codes fall back to the
     original walk. Identical symbol stream, identical error surface:
     the LUT index is a zero-padded peek, codes are prefix-free, and a
-    hit whose code extends past the data raises the same 'truncated
-    stream' the per-bit reader raised."""
+    hit whose code extends past the data raises the same truncation
+    error ``LsbReader.read`` raises on the walk."""
 
     __slots__ = ("by_len", "single", "lut")
 
@@ -104,11 +110,7 @@ class _Decoder:
                 self.single = sym
             self.by_len[(length, code)] = sym
             if 0 < length <= 8:
-                # prefix-code bits arrive MSB-of-code first, so stream
-                # bit i of the index is code bit (length-1-i)
-                base = 0
-                for i in range(length):
-                    base |= ((code >> (length - 1 - i)) & 1) << i
+                base = _reversed(code, length)
                 entry = (sym, length)
                 for high in range(1 << (8 - length)):
                     lut[base | (high << length)] = entry
@@ -127,7 +129,7 @@ class _Decoder:
         if hit is not None:
             sym, length = hit
             if (pos + length - 1) >> 3 >= len(data):
-                raise ValueError("vp8l: truncated stream")
+                raise ValueError(EXHAUSTED)
             br.pos = pos + length
             return sym
         code = 0
@@ -614,7 +616,7 @@ def _encoder_codes(lengths_by_sym: dict[int, int]) -> dict:
     for s, length in lengths_by_sym.items():
         full[s] = length
     return {
-        sym: (int(f"{code:0{length}b}"[::-1], 2), length)
+        sym: (_reversed(code, length), length)
         for sym, (code, length) in _canonical_codes(full).items()
     }
 

@@ -46,8 +46,8 @@ def test_lzw_loud_damage():
     with pytest.raises(ValueError, match="exhausted|beyond"):
         lzw_decode(wire[: len(wire) // 3])
     # a first code that is not a literal
-    from etl_pipeline_old_spark.operators.bitio import MsbWriter as _MsbBitWriter
-    bw = _MsbBitWriter()
+    from etl_pipeline_old_spark.operators.bitio import MsbWriter
+    bw = MsbWriter()
     bw.write(256, 9)
     bw.write(300, 9)
     with pytest.raises(ValueError, match="not a literal"):

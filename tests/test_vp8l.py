@@ -13,7 +13,7 @@ import random
 
 import pytest
 
-from etl_pipeline_old_spark.operators.bitio import LsbWriter as BitWriter
+from etl_pipeline_old_spark.operators.bitio import LsbWriter
 from etl_pipeline_old_spark.operators.vp8l import (
     _DIST_MAP,
     _canonical_codes,
@@ -75,23 +75,23 @@ def test_distance_map_pinned_prefix_and_size():
 
 
 def test_prefix_value_coding_roundtrips():
-    from etl_pipeline_old_spark.operators.bitio import LsbReader as BitReader
+    from etl_pipeline_old_spark.operators.bitio import LsbReader
     from etl_pipeline_old_spark.operators.vp8l import _prefix_value
     for v in list(range(1, 20)) + [63, 64, 65, 1000, 4096]:
         sym, ev, eb = _write_prefix_value(v)
-        bw = BitWriter()
+        bw = LsbWriter()
         bw.write(ev, eb)
-        assert _prefix_value(BitReader(bw.getvalue() + b"\0"), sym) == v
+        assert _prefix_value(LsbReader(bw.getvalue() + b"\0"), sym) == v
 
 
-def _header(bw: BitWriter, w: int, h: int) -> None:
+def _header(bw: LsbWriter, w: int, h: int) -> None:
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
     bw.write(1, 1)
     bw.write(0, 3)
 
 
-def _sub_image(bw: BitWriter, pixels: list) -> None:
+def _sub_image(bw: LsbWriter, pixels: list) -> None:
     _encode_image_stream(bw, pixels, level0=False)
 
 
@@ -134,7 +134,7 @@ def test_predictor_transform_all_modes(size_bits):
     th = (h + (1 << size_bits) - 1) >> size_bits
     modes = [(i * 7 + 3) % 14 for i in range(tw * th)]
     px = _img(w, h)
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, w, h)
     bw.write(1, 1)              # transform present
     bw.write(0, 2)              # predictor
@@ -169,7 +169,7 @@ def test_color_transform_roundtrip():
             rs = (r - _delta(g2r, g)) & 0xFF
             bs = (b - _delta(g2b, g) - _delta(r2b, r)) & 0xFF
             stored.append((p & 0xFF00FF00) | (rs << 16) | bs)
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, w, h)
     bw.write(1, 1)
     bw.write(1, 2)              # color transform
@@ -194,7 +194,7 @@ def test_meta_prefix_groups_select_per_tile():
     left = 0xFF102030
     right = 0xFF405060
     px = [left if x < 4 else right for _y in range(h) for x in range(w)]
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, w, h)
     bw.write(0, 1)               # no transforms
     bw.write(0, 1)               # no cache
@@ -223,7 +223,7 @@ def test_short_distance_neighbor_code():
     w, h = 4, 2
     row = [0xFF000000 | (10 * i << 8) for i in range(w)]
     px = row + row
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, w, h)
     bw.write(0, 1)
     bw.write(0, 1)               # no cache
@@ -256,7 +256,7 @@ def test_loud_damage_classes():
     with pytest.raises(ValueError, match="truncated"):
         decode_vp8l(blob[: len(blob) // 2])
     # reserved version bits
-    bw = BitWriter()
+    bw = LsbWriter()
     bw.write(3, 14)
     bw.write(2, 14)
     bw.write(0, 1)
@@ -276,7 +276,7 @@ def test_backward_reference_before_start_is_loud():
     from etl_pipeline_old_spark.operators.vp8l import (
         _encoder_codes, _huffman_lengths, _write_prefix_code)
 
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, 4, 1)
     bw.write(0, 1)
     bw.write(0, 1)
@@ -301,7 +301,7 @@ def test_cache_index_without_cache_is_loud():
     from etl_pipeline_old_spark.operators.vp8l import (
         _encoder_codes, _huffman_lengths, _write_prefix_code)
 
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, 2, 1)
     bw.write(0, 1)
     bw.write(0, 1)               # NO cache
@@ -328,7 +328,7 @@ def test_palette_index_out_of_range_is_loud():
     from etl_pipeline_old_spark.operators.vp8l import (
         _encoder_codes, _huffman_lengths, _write_prefix_code)
 
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, 2, 1)
     bw.write(1, 1)
     bw.write(3, 2)               # color indexing
@@ -405,7 +405,7 @@ def test_meta_prefix_groups_with_live_codes():
     px = [0xFF000000 | (g << 8) for g in (g0 + g1)] \
         + [0xFF000000 | (g << 8) for g in (list(reversed(g0))
                                            + list(reversed(g1)))]
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, w, h)
     bw.write(0, 1)
     bw.write(0, 1)                # no cache
@@ -511,7 +511,7 @@ def test_short_distance_codes_3_and_4_decode():
     w, h = 4, 2
     row = [0xFF000000 | (10 * (i + 1) << 8) for i in range(w)]  # A B C D
     e = 0xFF000000 | (99 << 8)
-    bw = BitWriter()
+    bw = LsbWriter()
     _header(bw, w, h)
     bw.write(0, 1)               # no cache
     bw.write(0, 1)

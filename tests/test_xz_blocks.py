@@ -161,12 +161,11 @@ def test_t0_shape_damage_classes_loud():
 
 
 def test_varints_roundtrip():
-    from etl_pipeline_old_spark.operators.bitio import read_uvarint as _read_varint
-    from etl_pipeline_old_spark.operators.bitio import write_uvarint as _varint
+    from etl_pipeline_old_spark.operators.bitio import read_uvarint, write_uvarint
 
     for n in (0, 1, 127, 128, 300, 2 ** 20, 2 ** 35):
-        enc = _varint(n)
-        got, at = _read_varint(enc, 0)
+        enc = write_uvarint(n)
+        got, at = read_uvarint(enc, 0)
         assert (got, at) == (n, len(enc))
     with pytest.raises(ValueError, match="varint"):
-        _read_varint(b"\xff\xff", 0)
+        read_uvarint(b"\xff\xff", 0)
