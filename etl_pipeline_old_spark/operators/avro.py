@@ -42,8 +42,11 @@ import struct
 import zlib
 
 from .bitio import read_uvarint, write_uvarint, zigzag_decode, zigzag_encode
+from .compression import decompress
 
 MAGIC = b"Obj\x01"
+# avro.codec names (besides null and snappy's CRC framing) -> compression codecs
+_CODECS = {"deflate": "deflate", "zstandard": "zstd", "bzip2": "bz2", "xz": "xz"}
 
 
 # --------------------------------------------------------------- varints
@@ -446,7 +449,7 @@ def write_avro(records: list, schema_json: str, codec: str = "null",
                block_records: int = 1000) -> bytes:
     """Serialize ``records`` (dicts matching the schema) into an Object
     Container File.  ``codec`` is ``null`` or ``deflate``."""
-    if codec not in ("null", "deflate", "snappy", "zstandard", "bzip2", "xz"):
+    if codec not in ("null", "snappy", *_CODECS):
         raise ValueError(f"avro: unsupported codec {codec!r}")
     schema = json.loads(schema_json)
     sync = hashlib.md5(schema_json.encode("utf-8")).digest()
@@ -515,7 +518,7 @@ def read_avro(blob: bytes, reader_schema_json: str | None = None):
     if not schema_json:
         raise ValueError("avro: container carries no schema")
     codec = meta.get("avro.codec", b"null").decode()
-    if codec not in ("null", "deflate", "snappy", "zstandard", "bzip2", "xz"):
+    if codec not in ("null", "snappy", *_CODECS):
         raise NotImplementedError(
             f"avro: codec {codec!r} needs an external library — null, "
             "deflate, snappy, zstandard, bzip2 and xz decode natively"
@@ -537,33 +540,17 @@ def read_avro(blob: bytes, reader_schema_json: str | None = None):
         payload = buf.read(size)
         if len(payload) != size:
             raise ValueError("avro: truncated block payload")
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        elif codec == "snappy":
+        if codec == "snappy":
             if len(payload) < 4:
                 raise ValueError("avro: snappy block shorter than its CRC")
-            raw = snappy_decompress(payload[:-4])
+            raw = decompress("snappy", payload[:-4])
             if zlib.crc32(raw) & 0xFFFFFFFF != int.from_bytes(
                 payload[-4:], "big"
             ):
                 raise ValueError("avro: snappy block CRC mismatch")
             payload = raw
-        elif codec == "zstandard":
-            payload = zstd_decompress(payload)
-        elif codec == "bzip2":
-            import bz2 as _bz2
-
-            try:
-                payload = _bz2.decompress(payload)
-            except OSError as exc:
-                raise ValueError(f"avro: corrupt bzip2 block ({exc})") from exc
-        elif codec == "xz":
-            import lzma as _lzma
-
-            try:
-                payload = _lzma.decompress(payload)
-            except _lzma.LZMAError as exc:
-                raise ValueError(f"avro: corrupt xz block ({exc})") from exc
+        elif codec != "null":
+            payload = decompress(_CODECS[codec], payload)
         pbuf = io.BytesIO(payload)
         for _ in range(count):
             records.append(
@@ -583,5 +570,4 @@ def read_avro(blob: bytes, reader_schema_json: str | None = None):
 # tests/test_avro.py now pins that shared module.
 from .snappy import compress as snappy_compress  # noqa: E402
 from .zstd import compress_raw_frame as zstd_compress_raw  # noqa: E402
-from .zstd import decompress as zstd_decompress  # noqa: E402
 from .snappy import decompress as snappy_decompress  # noqa: E402

@@ -38,7 +38,6 @@ seam being replaced: the reference engine has no media ingest at all
 from __future__ import annotations
 
 import hashlib
-import struct
 
 from .bitio import MsbReader, MsbWriter, zigzag_decode, zigzag_encode
 

@@ -40,8 +40,9 @@ from __future__ import annotations
 
 import struct
 
+from .compression import MAX_OUTPUT
+
 _MAGIC = 0x184D2204
-_MAX_OUTPUT = 1 << 30  # decompression-bomb ceiling: 1 GiB per call
 
 # ------------------------------------------------------------- xxh32
 _P1 = 2654435761
@@ -140,7 +141,7 @@ def _decode_block_into(out: bytearray, src: bytes, history_floor: int) -> None:
                 match_len += b
                 if b != 255:
                     break
-        if len(out) + match_len > _MAX_OUTPUT:
+        if len(out) + match_len > MAX_OUTPUT:
             raise ValueError("lz4: output beyond the 1 GiB bomb ceiling")
         if offset >= match_len:
             start = len(out) - offset
@@ -232,7 +233,7 @@ def decompress_frame(blob: bytes) -> bytes:
             raise ValueError("lz4: frame header checksum mismatch")
         out = bytearray()
         while True:
-            if len(out) > _MAX_OUTPUT:
+            if len(out) > MAX_OUTPUT:
                 raise ValueError("lz4: output beyond the 1 GiB bomb ceiling")
             if pos + 4 > len(blob):
                 raise ValueError("lz4: truncated block header")

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compression import decompress
+
 MEDIA_SCHEMA = "doc_id long, payload binary, kind string, n_bytes long"
 
 
@@ -316,12 +318,18 @@ def _png_decode(payload: bytes) -> tuple[int, int, list[int]]:
     ch = _PNG_CHANNELS[color]
     bps = depth // 8
     bpp = ch * bps
-    raw = zlib.decompress(bytes(idat))
     if interlace == 0:
-        if len(raw) != height * (width * bpp + 1):
-            raise ValueError(
-                f"PNG raster size {len(raw)} != {height * (width * bpp + 1)}"
-            )
+        raster = height * (width * bpp + 1)
+    else:  # each non-empty Adam7 pass: its rows, each with a filter byte
+        raster = sum(
+            len(range(y0, height, dy)) * (len(range(x0, width, dx)) * bpp + 1)
+            for x0, y0, dx, dy in _ADAM7
+            if x0 < width and y0 < height
+        )
+    raw = decompress("zlib", idat, limit=raster)
+    if interlace == 0:
+        if len(raw) != raster:
+            raise ValueError(f"PNG raster size {len(raw)} != {raster}")
         lines, _ = _unfilter_lines(raw, 0, height, width * bpp, bpp)
         gray: list[int] = []
         for line in lines:

@@ -73,14 +73,16 @@ ValueError — one file costs one record, never the job.
 from __future__ import annotations
 
 import struct
-import zlib
 
 from . import protobuf_wire as pw
 from .bitio import MsbReader, read_uvarint, zigzag_decode
+from .compression import decompress
 
 MAGIC = b"ORC"
 
 COMPRESSION = {0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO", 4: "LZ4", 5: "ZSTD"}
+# ORC's ZLIB chunks are raw deflate and its LZ4 chunks single blocks
+_CODECS = {"ZLIB": "deflate", "SNAPPY": "snappy", "ZSTD": "zstd", "LZ4": "lz4_block"}
 
 TYPE_KINDS = {
     0: "BOOLEAN",
@@ -162,19 +164,8 @@ def _decompress(buf: bytes, compression: str) -> bytes:
     """Undo ORC's chunked compression framing over a stream/footer region."""
     if compression == "NONE":
         return buf
-    if compression == "ZLIB":
-        def undo(chunk: bytes) -> bytes:
-            try:
-                return zlib.decompress(chunk, wbits=-15)
-            except zlib.error as exc:
-                raise ValueError(f"orc: corrupt deflate chunk ({exc})") from exc
-    elif compression == "SNAPPY":
-        from .snappy import decompress as undo
-    elif compression == "ZSTD":
-        from .zstd import decompress as undo
-    elif compression == "LZ4":
-        from .lz4 import decompress_block as undo
-    else:
+    codec = _CODECS.get(compression)
+    if codec is None:
         raise NotImplementedError(
             f"orc: {compression} compression unsupported (no independent "
             "decoder or honest transcription path in-container; "
@@ -193,7 +184,7 @@ def _decompress(buf: bytes, compression: str) -> bytes:
             raise ValueError("orc: compression chunk runs past region end")
         chunk = buf[pos : pos + length]
         pos += length
-        out += chunk if is_original else undo(chunk)
+        out += chunk if is_original else decompress(codec, chunk)
     return bytes(out)
 
 

@@ -59,9 +59,9 @@ chunk) raises ValueError — one chunk costs one record, never the job.
 from __future__ import annotations
 
 import struct
-import zlib
 
 from .bitio import read_uvarint, zigzag_decode
+from .compression import decompress
 from .parquet_meta import _Reader, _read_struct, _civil_from_days, _iso_from_epoch
 
 # Page types (parquet.thrift PageType).
@@ -80,27 +80,15 @@ E_DELTA_BYTE_ARRAY = 7
 E_RLE_DICTIONARY = 8
 E_BYTE_STREAM_SPLIT = 9
 
+# parquet.thrift CompressionCodec names -> operators.compression codecs
+_CODECS = {"SNAPPY": "snappy", "GZIP": "gzip", "ZSTD": "zstd", "LZ4_RAW": "lz4_block"}
+
 
 def _decompress(payload: bytes, codec: str, uncompressed_size: int) -> bytes:
     if codec == "UNCOMPRESSED":
         out = payload
-    elif codec == "SNAPPY":
-        from .snappy import decompress
-
-        out = decompress(payload)
-    elif codec == "GZIP":
-        try:
-            out = zlib.decompress(payload, wbits=31)
-        except zlib.error as exc:
-            raise ValueError(f"parquet page: corrupt gzip member ({exc})") from exc
-    elif codec == "ZSTD":
-        from .zstd import decompress
-
-        out = decompress(payload)
-    elif codec == "LZ4_RAW":
-        from .lz4 import decompress_block
-
-        out = decompress_block(payload)
+    elif codec in _CODECS:
+        out = decompress(_CODECS[codec], payload, limit=uncompressed_size)
     else:
         raise NotImplementedError(
             f"parquet page: codec {codec} unsupported (UNCOMPRESSED/SNAPPY/"

@@ -55,6 +55,8 @@ import re
 import struct
 import zlib
 
+from .compression import decompress
+
 # --------------------------------------------------------------- writer
 
 
@@ -1058,12 +1060,7 @@ def _read_xref_stream(buf: bytes, at: int, entries: dict) -> dict:
     filt = d.get("Filter")
     for f in filt if isinstance(filt, list) else ([filt] if filt else []):
         if f == "/FlateDecode":
-            try:
-                raw = zlib.decompress(raw)
-            except zlib.error as exc:
-                raise ValueError(
-                    f"pdf: xref stream inflate failed ({exc})"
-                ) from exc
+            raw = decompress("zlib", raw)
         else:
             raise NotImplementedError(f"pdf: xref stream filter {f}")
     parms = d.get("DecodeParms")
@@ -1373,12 +1370,7 @@ class _Doc:
 
         for fi, f in enumerate(filts):
             if f == "/FlateDecode":
-                try:
-                    raw = zlib.decompress(raw)
-                except zlib.error as exc:
-                    raise ValueError(
-                        f"pdf: stream inflate failed ({exc})"
-                    ) from exc
+                raw = decompress("zlib", raw)
             elif f == "/CCITTFaxDecode":
                 # the full /K surface: G4 (K < 0, what scanned PDFs
                 # overwhelmingly carry), 1D MH G3 (K = 0) and mixed

@@ -32,6 +32,8 @@ from __future__ import annotations
 import struct
 import zlib
 
+from .compression import decompress
+
 _LOCAL_SIG = b"PK\x03\x04"
 _CENTRAL_SIG = b"PK\x01\x02"
 _EOCD_SIG = b"PK\x05\x06"
@@ -324,7 +326,7 @@ def read_zip(blob: bytes, password: bytes | None = None) -> list:
         if flags & 0x1:
             payload = zipcrypto_open(payload, password, crc)
         if method == 8:
-            data = zlib.decompress(payload, -15)
+            data = decompress("deflate", payload, limit=usize)
             mname = "deflated"
         elif method == 0:
             data, mname = payload, "stored"

@@ -45,7 +45,8 @@ NotImplementedError — one shard costs one record, never the job.
 from __future__ import annotations
 
 import struct
-import zlib
+
+from .compression import decompress
 
 _MAGIC = b"SEQ"
 _SYNC_ESCAPE = 0xFFFFFFFF
@@ -54,6 +55,7 @@ _DEFAULT_CODEC = "org.apache.hadoop.io.compress.DefaultCodec"
 _SNAPPY_CODEC = "org.apache.hadoop.io.compress.SnappyCodec"
 _GZIP_CODEC = "org.apache.hadoop.io.compress.GzipCodec"
 _BZIP2_CODEC = "org.apache.hadoop.io.compress.BZip2Codec"
+_CODECS = {_DEFAULT_CODEC: "zlib", _GZIP_CODEC: "gzip", _BZIP2_CODEC: "bz2"}
 
 
 def read_vint(buf: bytes, pos: int) -> tuple[int, int]:
@@ -88,28 +90,11 @@ def _read_text(buf: bytes, pos: int) -> tuple[bytes, int]:
 def _decompress(codec: str | None, blob: bytes) -> bytes:
     if codec is None:
         return blob
-    if codec in (_DEFAULT_CODEC,):
-        try:
-            return zlib.decompress(blob)
-        except zlib.error as exc:
-            raise ValueError(f"sequencefile: corrupt zlib stream ({exc})") from exc
-    if codec == _GZIP_CODEC:
-        try:
-            return zlib.decompress(blob, wbits=31)
-        except zlib.error as exc:
-            raise ValueError(f"sequencefile: corrupt gzip stream ({exc})") from exc
-    if codec == _BZIP2_CODEC:
-        import bz2
-
-        try:
-            return bz2.decompress(blob)
-        except OSError as exc:
-            raise ValueError(f"sequencefile: corrupt bzip2 stream ({exc})") from exc
+    if codec in _CODECS:
+        return decompress(_CODECS[codec], blob)
     if codec == _SNAPPY_CODEC:
         # Hadoop snappy framing: u32 BE total uncompressed size, then
         # u32-BE-length-prefixed raw snappy chunks
-        from .snappy import decompress as snappy_decompress
-
         if len(blob) < 4:
             raise ValueError("sequencefile: truncated snappy framing")
         (total,) = struct.unpack_from(">I", blob)
@@ -122,7 +107,7 @@ def _decompress(codec: str | None, blob: bytes) -> bytes:
             pos += 4
             if pos + clen > len(blob):
                 raise ValueError("sequencefile: snappy chunk overruns block")
-            out += snappy_decompress(blob[pos : pos + clen])
+            out += decompress("snappy", blob[pos : pos + clen])
             pos += clen
         if len(out) != total:
             raise ValueError("sequencefile: snappy framing size lied")

@@ -22,7 +22,15 @@ from __future__ import annotations
 import zlib
 from collections.abc import Iterator
 
+from .compression import decompress, gunzip_member
+
 _CRLF = b"\r\n"
+# Content-Encoding tokens -> compression codecs, tried in turn: deflate
+# falls back to BARE deflate when the zlib wrapper is absent
+_CONTENT_CODECS = {
+    "gzip": ("gzip",), "x-gzip": ("gzip",), "deflate": ("zlib", "deflate"),
+    "zstd": ("zstd",),
+}
 
 
 def gzip_member(payload: bytes) -> bytes:
@@ -34,23 +42,17 @@ def gzip_member(payload: bytes) -> bytes:
 
 def split_gzip_members(blob: bytes) -> Iterator[bytes]:
     """Decompress a concatenation of gzip members one member at a time —
-    the CC shard layout. A plain ``zlib.decompress`` would stop after the
-    first member; ``gzip.decompress`` would fuse them all into one blob
-    and lose the record framing."""
+    the CC shard layout. A one-member gunzip would stop after the first
+    member; ``gzip.decompress`` would fuse them all into one blob and
+    lose the record framing."""
     i = 0
     while i < len(blob):
-        d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-        out = d.decompress(blob[i:]) + d.flush()
-        if not d.eof:
-            # zlib yields partial output without error (and skips the CRC
-            # check) when the deflate stream lacks its terminator; surface
-            # that as the framing error it is instead of silent truncation.
-            raise ValueError(f"gzip member at offset {i} not terminated")
+        try:
+            out, used = gunzip_member(blob[i:])
+        except ValueError as exc:
+            raise ValueError(f"gzip member at offset {i}: {exc}") from exc
         yield out
-        consumed = len(blob) - i - len(d.unused_data)
-        if consumed <= 0:
-            raise ValueError(f"gzip member at offset {i} consumed no bytes")
-        i += consumed
+        i += used
 
 
 def encode_warc_record(
@@ -182,33 +184,23 @@ def decode_content_encoding(body: bytes, encoding: str) -> bytes:
     browser-standard fallback to BARE deflate when the zlib wrapper is
     absent.  ``zstd`` (RFC 9878-registered, shipped by Chrome since
     2024) decodes through the own RFC 8878 codec in zstd.py.  Torn
-    streams raise ValueError (zlib.error is NOT a ValueError — wrapped
-    here so quarantine kernels see the documented class);
+    streams and bodies over ``compression.MAX_OUTPUT`` raise ValueError;
     ``br``/anything else raises NotImplementedError, the loud seam (no
     brotli codec exists in this environment)."""
     enc = encoding.strip().lower()
     if enc in ("", "identity"):
         return body
-    if enc in ("gzip", "x-gzip"):
+    codecs = _CONTENT_CODECS.get(enc)
+    if codecs is None:
+        raise NotImplementedError(
+            f"content-encoding {enc!r} needs an external codec"
+        )
+    for codec in codecs:
         try:
-            return zlib.decompress(body, 16 + zlib.MAX_WBITS)
-        except zlib.error as exc:
-            raise ValueError(f"content-encoding gzip: {exc}") from exc
-    if enc == "deflate":
-        try:
-            return zlib.decompress(body)
-        except zlib.error:
-            try:
-                return zlib.decompress(body, -zlib.MAX_WBITS)
-            except zlib.error as exc:
-                raise ValueError(f"content-encoding deflate: {exc}") from exc
-    if enc == "zstd":
-        from .zstd import decompress as zstd_decompress
-
-        return zstd_decompress(body)
-    raise NotImplementedError(
-        f"content-encoding {enc!r} needs an external codec"
-    )
+            return decompress(codec, body)
+        except ValueError as exc:
+            err = exc
+    raise ValueError(f"content-encoding {enc}: {err}") from err
 
 
 def encode_warc_shard(records: list[tuple], shard_id: int) -> bytes:
@@ -525,21 +517,12 @@ def iter_warc_responses_lenient(
     skipped silently like the strict walk."""
     i, n = 0, len(blob)
     while i < n:
-        d = zlib.decompressobj(16 + zlib.MAX_WBITS)
         try:
-            rec = d.decompress(blob[i:]) + d.flush()
-            if not d.eof:
-                # The deflate stream never reached its end-of-stream code
-                # (e.g. a flipped byte turned the final block's terminator
-                # into more literals): zlib returns partial output WITHOUT
-                # error and never verifies the CRC trailer, so without this
-                # check a torn tail would surface as a fabricated record.
-                raise zlib.error("member not terminated")
-            consumed = n - i - len(d.unused_data)
-            if consumed <= 0:
-                raise zlib.error("member consumed no bytes")
-        except zlib.error as exc:
-            yield "", 0, b"", f"gzip: {exc}"
+            # a member torn before its end-of-stream code raises here
+            # too, so a torn tail never surfaces as a fabricated record
+            rec, consumed = gunzip_member(blob[i:])
+        except ValueError as exc:
+            yield "", 0, b"", str(exc)
             nxt = blob.find(_GZIP_SIG, i + 1)
             if nxt == -1:
                 nxt = blob.find(_GZIP_MAGIC, i + 1)

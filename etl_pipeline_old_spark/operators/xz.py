@@ -26,7 +26,8 @@ block check, and the index hash).
 
 Damage raises ValueError: bad magics, a CRC32 mismatch on any header,
 an index disagreeing with the block walk, truncated blocks, a block
-check or size field disagreeing with the decoded bytes.
+check or size field disagreeing with the decoded bytes, a block decoding
+past its uncompressed-size field (or ``compression.MAX_OUTPUT``).
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ import struct
 import zlib
 
 from .bitio import read_uvarint, write_uvarint
+from .compression import MAX_OUTPUT
 
 _MAGIC = b"\xfd7zXZ\x00"
 _FOOTER_MAGIC = b"YZ"
@@ -283,10 +285,13 @@ def decode_xz_block(block: bytes, check: int = _CHECK_NONE) -> bytes:
         format=lzma.FORMAT_RAW,
         filters=[{"id": lzma.FILTER_LZMA2, "dict_size": dict_size}],
     )
+    limit = MAX_OUTPUT if uncomp_size is None else min(uncomp_size, MAX_OUTPUT)
     try:
-        out = dec.decompress(block[hdr_size:])
+        out = dec.decompress(block[hdr_size:], max_length=limit + 1)
     except lzma.LZMAError as exc:
         raise ValueError(f"xz: block payload damaged ({exc})") from exc
+    if len(out) > limit:
+        raise ValueError(f"xz: block output exceeds {limit} bytes")
     if not dec.eof:
         raise ValueError("xz: block payload truncated")
     trailing = dec.unused_data

@@ -61,13 +61,13 @@ from __future__ import annotations
 import struct
 
 from .bitio import LsbReader
+from .compression import MAX_OUTPUT
 
 _MAGIC = 0xFD2FB528
 _SKIP_MAGIC_LO = 0x184D2A50  # ..5F all skippable
 _SEEK_SKIP_MAGIC = 0x184D2A5E
 _SEEK_FOOT_MAGIC = 0x8F92EAB1
 _MAX_WINDOW = 1 << 27  # 128 MiB guard — larger windows are hostile here
-_MAX_OUTPUT = 1 << 30  # decompression-bomb ceiling: 1 GiB per decompress call
 
 # ------------------------------------------------------------------ XXH64
 _P1 = 11400714785074694791
@@ -743,7 +743,7 @@ def _decode_frame(blob: bytes, pos: int, dictionary: dict | None = None):
         last = bh & 1
         btype = (bh >> 1) & 3
         bsize = bh >> 3
-        if len(out) - base > _MAX_OUTPUT:
+        if len(out) - base > MAX_OUTPUT:
             raise ValueError("zstd: output beyond the 1 GiB bomb ceiling")
         if btype == 0:  # raw
             if pos + bsize > len(blob):
@@ -812,7 +812,7 @@ def decompress(blob: bytes, dict_data: bytes | None = None) -> bytes:
             raise ValueError(f"zstd: bad frame magic {magic:#x}")
         part, pos = _decode_frame(blob, pos, dictionary)
         total += len(part)
-        if total > _MAX_OUTPUT:
+        if total > MAX_OUTPUT:
             raise ValueError("zstd: output beyond the 1 GiB bomb ceiling")
         parts.append(part)
     return b"".join(parts)

@@ -11,7 +11,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.similarity import cosine
 from ..registry import register
 
 ORDER_STATUSES = ["O", "F", "P"]

@@ -84,24 +84,21 @@ def multimodal_webdataset_compressed(
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def op(batches):
-        import bz2
         import json as _json
-        import lzma
 
         import pandas as pd
 
+        from ..operators.compression import decompress
         from ..operators.tar import iter_tar
 
         for pdf in batches:
             out = {"doc_id": [], "codec": [], "n_members": [], "raw": [],
                    "lang": []}
             for p, blob in zip(pdf["path"], pdf["content"]):
-                if p.endswith(".tar.bz2"):
-                    codec, tar = "bz2", bz2.decompress(bytes(blob))
-                elif p.endswith(".tar.xz"):
-                    codec, tar = "xz", lzma.decompress(bytes(blob))
-                else:
+                codec = p.rsplit(".", 1)[1]
+                if codec not in ("bz2", "xz"):
                     raise ValueError(f"unexpected shard suffix: {p}")
+                tar = decompress(codec, bytes(blob))
                 samples: dict[str, dict[str, bytes]] = {}
                 for name, data in iter_tar(tar):
                     key, _, ext = name.partition(".")
@@ -210,15 +207,15 @@ def _wikidump_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def parse_index(batches):
-        import bz2
-
         import pandas as pd
+
+        from ..operators.compression import decompress
 
         for pdf in batches:
             out = {"dump_path": [], "offset": [], "page_id": [], "title": []}
             for p, blob in zip(pdf["path"], pdf["content"]):
                 dump_path = p.replace("-index.txt", ".xml")
-                for line in bz2.decompress(bytes(blob)).decode().splitlines():
+                for line in decompress("bz2", bytes(blob)).decode().splitlines():
                     off, pid, title = line.split(":", 2)
                     out["dump_path"].append(dump_path)
                     out["offset"].append(int(off))
@@ -287,10 +284,11 @@ def multimodal_wikidump_ingest(
     ranged = _wikidump_ranged(spark, sf_dir)
 
     def decode_stream(batches):
-        import bz2
         from xml.etree import ElementTree as ET
 
         import pandas as pd
+
+        from ..operators.compression import decompress
 
         for pdf in batches:
             out = {"doc_id": [], "ok": [], "n_chars": [], "title_exact": []}
@@ -302,7 +300,7 @@ def multimodal_wikidump_ingest(
                     fh.seek(int(offset))
                     raw = fh.read(int(end) - int(offset))
                 try:
-                    xml = bz2.decompress(raw)
+                    xml = decompress("bz2", raw)
                     root = ET.fromstring(b"<mw>" + xml + b"</mw>")
                     got = {
                         int(pg.findtext("id")): (
@@ -311,7 +309,7 @@ def multimodal_wikidump_ingest(
                         )
                         for pg in root.iter("page")
                     }
-                except (OSError, EOFError, ValueError, ET.ParseError):
+                except (ValueError, ET.ParseError):
                     got = None
                 for pg in pages:
                     pid, title = int(pg["page_id"]), pg["title"]
@@ -396,10 +394,11 @@ def pipeline_wikidump_corpus(
     ranged = _wikidump_ranged(spark, sf_dir)
 
     def decode_text(batches):
-        import bz2
         from xml.etree import ElementTree as ET
 
         import pandas as pd
+
+        from ..operators.compression import decompress
 
         for pdf in batches:
             out = {"doc_id": [], "text": []}
@@ -411,9 +410,9 @@ def pipeline_wikidump_corpus(
                     fh.seek(int(offset))
                     raw = fh.read(int(end) - int(offset))
                 try:
-                    xml = bz2.decompress(raw)
+                    xml = decompress("bz2", raw)
                     root = ET.fromstring(b"<mw>" + xml + b"</mw>")
-                except (OSError, EOFError, ValueError, ET.ParseError):
+                except (ValueError, ET.ParseError):
                     continue  # torn stream: its pages drop pre-gate
                 for pg in root.iter("page"):
                     out["doc_id"].append(int(pg.findtext("id")))

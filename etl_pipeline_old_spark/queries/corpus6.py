@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
-from ..operators.dedup import MD5_LONG_SQL, md5_long
 from ..registry import register
 
 NORM = DD.NORMALIZE_SQL.format(x="text")

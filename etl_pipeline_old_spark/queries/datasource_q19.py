@@ -3,12 +3,10 @@ path) and TPC-H Q19's disjunctive-predicate join shape."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
+from ..workdir import scratch_path
 from ..catalog import load_table
 from ..registry import register
 from ..sources import python_datasource
@@ -27,10 +25,7 @@ PAGE_SIZE = 100
 )
 def s7_python_datasource_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    feed = os.path.join(
-        cache_root(),
-        f"pages_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    feed = scratch_path("pages", sf_dir)
     # Stage the paginated "API" DISTRIBUTED: executors write ≤PAGE_SIZE-row
     # JSONL page files directly (no driver collect); the READ through the
     # custom DataSource is the operator under test.
@@ -93,10 +88,7 @@ def s7b_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    feed = os.path.join(
-        cache_root(),
-        f"stream_pages_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    feed = scratch_path("stream_pages", sf_dir)
     (
         docs.write.mode("overwrite")
         .option("maxRecordsPerFile", PAGE_SIZE)

@@ -9,7 +9,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
+from ..workdir import run_dir
 from ..catalog import load_table
 from ..operators import dedup as DD
 from ..operators.graph import connected_components_star
@@ -514,9 +514,6 @@ def join_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "misaligning rows.",
 )
 def p14_ragged_csv_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     c = load_table(spark, sf_dir, "customer")
     kept = (
         F.lit(2)
@@ -532,9 +529,7 @@ def p14_ragged_csv_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept == 3, F.concat_ws(",", *cols[:3])
     ).otherwise(F.concat_ws(",", *cols))
 
-    tag = f"ragged_{os.path.basename(os.path.normpath(sf_dir))}"
-    feed = os.path.join(cache_root(), tag)
-    shutil.rmtree(feed, ignore_errors=True)
+    feed = run_dir("ragged", sf_dir)
     c.select(line.alias("value")).write.text(feed)
 
     raw = spark.read.csv(

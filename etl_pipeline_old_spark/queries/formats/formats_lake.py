@@ -4,7 +4,6 @@ file-format sources (see the package docstring)."""
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

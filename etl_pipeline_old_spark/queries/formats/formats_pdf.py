@@ -3,8 +3,6 @@ family of the file-format sources (see the package docstring)."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

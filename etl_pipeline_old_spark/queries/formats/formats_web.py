@@ -3,8 +3,6 @@ format sources (see the package docstring)."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1021,9 +1019,9 @@ def web_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def gunzip(batches):
-        import gzip
-
         import pandas as pd
+
+        from ...operators.compression import decompress
 
         for b in batches:
             out = {"doc_id": [], "gz": [], "xml": []}
@@ -1033,7 +1031,7 @@ def web_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["doc_id"].append(int(doc_id))
                 out["gz"].append(1 if gz else 0)
                 out["xml"].append(
-                    (gzip.decompress(raw) if gz else raw).decode("utf-8")
+                    (decompress("gzip", raw) if gz else raw).decode("utf-8")
                 )
             yield pd.DataFrame(out)
 
@@ -1413,15 +1411,15 @@ def web_sitemap_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def gunzip(batches):
-        import gzip
-
         import pandas as pd
+
+        from ...operators.compression import decompress
 
         for b in batches:
             yield pd.DataFrame({
                 "basename": b["basename"],
                 "xml": [
-                    gzip.decompress(bytes(c)).decode("utf-8")
+                    decompress("gzip", bytes(c)).decode("utf-8")
                     for c in b["content"]
                 ],
             })
@@ -1496,16 +1494,16 @@ def pipeline_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def gunzip(batches):
-        import gzip
-
         import pandas as pd
+
+        from ...operators.compression import decompress
 
         for b in batches:
             out = {"doc_id": [], "xml": []}
             for doc_id, content in zip(b["doc_id"], b["content"]):
                 raw = bytes(content)
                 if raw[:2] == b"\x1f\x8b":
-                    raw = gzip.decompress(raw)
+                    raw = decompress("gzip", raw)
                 out["doc_id"].append(int(doc_id))
                 out["xml"].append(raw.decode("utf-8"))
             yield pd.DataFrame(out)

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root, reap_warehouse, table_name
+from ..workdir import reap_warehouse, scratch_path, table_name
 from ..catalog import load_table
 from ..registry import register
 
@@ -63,10 +63,7 @@ AUDIT_LO, AUDIT_HI = "2024-01-01", "2024-01-05"
 )
 def k8_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    path = os.path.join(
-        cache_root(),
-        f"events_dyn_overwrite_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    path = scratch_path("events_dyn_overwrite", sf_dir)
     # day-keyed exchange: one file per day directory instead of one per
     # (task, day) — see k7_partitioned_write_prune (guide §6 small-files)
     ev.repartition("day").write.mode("overwrite").partitionBy("day").parquet(path)
@@ -470,10 +467,7 @@ def multimodal_pair_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s3c_corrupt_parquet_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    feed = os.path.join(
-        cache_root(),
-        f"corrupt_pq_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    feed = scratch_path("corrupt_pq", sf_dir)
     docs.write.mode("overwrite").parquet(feed)
     # drop a non-parquet garbage object into the directory, as a failed
     # multipart upload or torn task output would
@@ -508,10 +502,7 @@ def s3c_corrupt_parquet_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def s19_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    path = os.path.join(
-        cache_root(),
-        f"meta_audit_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    path = scratch_path("meta_audit", sf_dir)
     d.repartition("source").write.mode("overwrite").partitionBy("source").parquet(path)
     back = spark.read.parquet(path).select(
         "doc_id", "source", F.col("_metadata.file_path").alias("fp")
@@ -674,10 +665,7 @@ COMPACT_TARGET_CHARS = 131_072  # ~128 KiB of text per output file
 )
 def layout_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    base = os.path.join(
-        cache_root(),
-        f"compact_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    base = scratch_path("compact", sf_dir)
     frag, compacted = base + "_frag", base + "_out"
     d.repartition(FRAG_FILES).write.mode("overwrite").parquet(frag)
 
@@ -986,10 +974,7 @@ def s4_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks.incremental import jdbc_incremental_append
     from ..sources.jdbc import jdbc_scan
 
-    db = os.path.join(
-        cache_root(),
-        f"derby_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    db = scratch_path("derby", sf_dir)
     url = _derby_fresh(db)
     props = {"driver": _DERBY_DRIVER}
 
@@ -1029,10 +1014,7 @@ def s4_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s6_jdbc_parallel_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.jdbc import jdbc_scan
 
-    db = os.path.join(
-        cache_root(),
-        f"derby6_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    db = scratch_path("derby6", sf_dir)
     url = _derby_fresh(db)
     props = {"driver": _DERBY_DRIVER}
 
@@ -1369,9 +1351,7 @@ def federated_three_source_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")  # parquet fact
 
     # CSV dim (S1 path: header, enforced schema)
-    csv_path = os.path.join(
-        cache_root(), f"fed_supplier_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
+    csv_path = scratch_path("fed_supplier", sf_dir)
     load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey"
     ).write.mode("overwrite").option("header", True).csv(csv_path)
@@ -1380,9 +1360,7 @@ def federated_three_source_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).csv(csv_path)
 
     # live JDBC dim
-    db = os.path.join(
-        cache_root(), f"fed_derby_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
+    db = scratch_path("fed_derby", sf_dir)
     url = _derby_fresh(db)
     load_table(spark, sf_dir, "nation").write.mode("overwrite").option(
         "driver", _DERBY_DRIVER

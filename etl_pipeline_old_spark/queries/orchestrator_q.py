@@ -5,12 +5,10 @@ every reference dataset built and loaded in one call, summarized as
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..workdir import cache_root
+from ..workdir import run_dir
 from ..plans.orchestrator import run_pipeline
 from ..plans.pipelines import LOGS_PIPELINE_ORACLE
 from ..plans.pipelines2 import GITLAB_ORACLE, PROJECTSYNC_ORACLE, SCRIPTS_ORACLE
@@ -46,11 +44,7 @@ SELECT 'logs', count(*) FROM ({LOGS_PIPELINE_ORACLE})
 def run_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-process session root (workdir.py): reruns in this process
     # overwrite; dead processes' roots are reaped, atexit removes ours
-    out_dir = os.path.join(
-        cache_root(),
-        f"datalake_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = run_dir("datalake", sf_dir)
     outputs = run_pipeline(spark, sf_dir, out_dir)
     names = (
         "scripts",

@@ -8,12 +8,10 @@ deliberately 10%-corrupted JSONL feed and reports the good/bad split.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
+from ..workdir import scratch_path
 from ..catalog import load_table
 from ..registry import register
 
@@ -32,10 +30,7 @@ from ..registry import register
 )
 def s3b_corrupt_json_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    feed = os.path.join(
-        cache_root(),
-        f"corrupt_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    feed = scratch_path("corrupt", sf_dir)
     # Stage the corrupt feed DISTRIBUTED: serialize each row to a JSON line
     # and truncate every doc_id%10==3 line mid-record, all executor-side —
     # no driver materialization, so staging scales with the table.

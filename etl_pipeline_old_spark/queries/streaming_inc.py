@@ -3,14 +3,11 @@ the incremental high-watermark sink cycle (SURVEY.md §2.11, K2/K5)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..workdir import cache_root
+from ..workdir import run_dir
 from ..catalog import load_table
 from ..registry import register
 from ..sinks.incremental import incremental_append, read_evolved
@@ -195,11 +192,7 @@ CUTOFF = "2024-01-15 00:00:00"
 )
 def k5_incremental_idempotency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    target = os.path.join(
-        cache_root(),
-        f"incr_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(target, ignore_errors=True)
+    target = run_dir("incr", sf_dir)
 
     first = ev.filter(F.col("ts") <= F.lit(CUTOFF).cast("timestamp"))
     incremental_append(first, target, "ts", spark)

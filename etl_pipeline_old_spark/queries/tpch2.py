@@ -6,7 +6,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators import joins as J
 from ..registry import register
 
 

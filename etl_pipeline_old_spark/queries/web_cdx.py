@@ -267,8 +267,6 @@ def web_cdx_range_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranges = _cdx_ranges(spark, path)
 
     def fetch(batches):
-        import zlib as _zlib
-
         import pandas as pd
 
         from ..operators.warc import iter_warc_responses
@@ -289,12 +287,7 @@ def web_cdx_range_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 try:
                     if len(member) < int(ln):
                         raise ValueError("cdx: member range past EOF")
-                    try:
-                        recs = list(iter_warc_responses(member))
-                    except (_zlib.error, OSError, EOFError) as exc:
-                        raise ValueError(
-                            f"cdx: member gunzip failed ({exc})"
-                        ) from exc
+                    recs = list(iter_warc_responses(member))
                     if len(recs) != 1:
                         raise ValueError(
                             f"cdx: expected 1 record, got {len(recs)}"

@@ -194,7 +194,7 @@ def multimodal_zstd_shards_ingest(
         import pandas as pd
 
         from ..operators.tar import iter_tar
-        from ..operators.zstd import decompress
+        from ..operators.compression import decompress
 
         for pdf in batches:
             out = {"doc_id": [], "writer": [], "n_members": [],
@@ -204,7 +204,7 @@ def multimodal_zstd_shards_ingest(
                 writer = "libzstd" if sid % 2 == 0 else "raw"
                 members = {
                     name: data
-                    for name, data in iter_tar(decompress(bytes(blob)))
+                    for name, data in iter_tar(decompress("zstd", bytes(blob)))
                 }
                 keys = sorted({n.split(".")[0] for n in members})
                 for key in keys:
@@ -454,7 +454,7 @@ def multimodal_zstd_seekable_ranged(
 
         import pandas as pd
 
-        from ..operators.zstd import decompress
+        from ..operators.compression import decompress
 
         for pdf in batches:
             out = {"doc_id": [], "ok": [], "n_chars": [], "got_lang": []}
@@ -466,7 +466,7 @@ def multimodal_zstd_seekable_ranged(
                     fh.seek(int(off))
                     raw = fh.read(int(clen))
                 try:
-                    lines = decompress(raw).decode("utf-8").splitlines()
+                    lines = decompress("zstd", raw).decode("utf-8").splitlines()
                     for line in lines:
                         rec = json_.loads(line)
                         out["doc_id"].append(int(rec["doc_id"]))

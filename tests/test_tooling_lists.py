@@ -5,8 +5,9 @@ silently vanish from the bench suite, the plans doc, or the idempotency
 sweep. Pin every list to the live registry. Source scans also pin the
 batch binaryFile read to its one implementation, the SparkSession
 builder to the one session factory, testdata table reads to the
-catalog, fixture staging to workdir, and bit I/O and varints to
-operators/bitio.py."""
+catalog, fixture staging to workdir, bit I/O and varints to
+operators/bitio.py, and stdlib decompression to operators/compression.py;
+a last scan keeps unused imports out of the package."""
 
 from __future__ import annotations
 
@@ -80,18 +81,24 @@ def _batch_binaryfile_reads(tree: ast.AST):
                 recv = recv.value
 
 
-def _package_scan(find) -> dict[str, list[int]]:
-    """``{module path: line numbers}`` of ``find`` over every package module."""
+def _package_sources():
+    """``(module path, source)`` of every package module."""
     pkg = os.path.join(_ROOT, "etl_pipeline_old_spark")
-    found = {}
     for dirpath, _dirs, files in os.walk(pkg):
         for name in files:
             if name.endswith(".py"):
                 path = os.path.join(dirpath, name)
                 with open(path, encoding="utf-8") as fh:
-                    lines = list(find(ast.parse(fh.read())))
-                if lines:
-                    found[os.path.relpath(path, pkg)] = lines
+                    yield os.path.relpath(path, pkg), fh.read()
+
+
+def _package_scan(find) -> dict[str, list[int]]:
+    """``{module path: line numbers}`` of ``find`` over every package module."""
+    found = {}
+    for path, source in _package_sources():
+        lines = list(find(ast.parse(source)))
+        if lines:
+            found[path] = lines
     return found
 
 
@@ -232,3 +239,93 @@ def test_bit_io_and_varints_live_in_bitio():
         if rest:
             found[path] = rest
     assert not found, f"bit I/O or varints outside operators/bitio.py: {found}"
+
+
+_STDLIB_CODECS = {"zlib", "gzip", "bz2", "lzma"}
+_DECODERS = {"decompress", "decompressobj", "BZ2Decompressor", "LZMADecompressor"}
+
+
+def _stdlib_decompression(tree: ast.AST):
+    """``(name, line)`` of each stdlib decoder used or imported by name,
+    e.g. ``zlib.decompress`` (also through ``import zlib as z``)."""
+    modules = {
+        alias.asname or alias.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Import)
+        for alias in node.names
+        if alias.name in _STDLIB_CODECS
+    }
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module in _STDLIB_CODECS:
+            for alias in node.names:
+                if alias.name in _DECODERS:
+                    yield alias.name, node.lineno
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr in _DECODERS
+            and isinstance(node.value, ast.Name)
+            and node.value.id in modules
+        ):
+            yield node.attr, node.lineno
+
+
+def test_decompression_lives_in_compression():
+    # one bounded decoder; xz and 7z keep raw LZMA because their
+    # containers own the filter chain
+    probe = (
+        "import bz2 as b\n"
+        "from lzma import LZMADecompressor\n"
+        "zlib.decompress(x)\n"
+        "import zlib\n"
+        "b.decompress(zlib.decompressobj(-15))\n"
+        "snappy.decompress(x)\n"
+    )
+    assert sorted(_stdlib_decompression(ast.parse(probe))) == [
+        ("LZMADecompressor", 2), ("decompress", 3), ("decompress", 5),
+        ("decompressobj", 5)]
+    found = _package_scan(_stdlib_decompression)
+    home = os.path.join("operators", "compression.py")
+    assert home in found, "the scan no longer finds compression's decoders"
+    del found[home]
+    for raw_lzma in ("xz.py", "sevenzip.py"):
+        path = os.path.join("operators", raw_lzma)
+        rest = [x for x in found.pop(path, []) if x[0] != "LZMADecompressor"]
+        if rest:
+            found[path] = rest
+    assert not found, f"decompression outside operators/compression.py: {found}"
+
+
+def _unused_imports(source: str) -> list[str]:
+    """Names a module imports and never reads; ``__future__`` imports
+    and ``noqa`` lines (deliberate availability probes) are skipped."""
+    tree = ast.parse(source)
+    lines = source.splitlines()
+    imported = [
+        (alias.asname or alias.name).split(".")[0]
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        and getattr(node, "module", None) != "__future__"
+        and "noqa" not in lines[node.end_lineno - 1]
+        for alias in node.names
+    ]
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return [name for name in dict.fromkeys(imported) if name not in used]
+
+
+def test_package_modules_have_no_unused_imports():
+    # no linter runs in CI; package __init__ modules re-export by import
+    probe = (
+        "import os\n"
+        "import re  # noqa: F401\n"
+        "import a.b\n"
+        "from c import d, e as f\n"
+        "print(f, a.b)\n"
+    )
+    assert _unused_imports(probe) == ["os", "d"]
+    found = {
+        path: names
+        for path, source in _package_sources()
+        if os.path.basename(path) != "__init__.py"
+        and (names := _unused_imports(source))
+    }
+    assert not found, f"unused imports: {found}"
